@@ -433,12 +433,18 @@ def jaccard_prefix_pairs(
 
     probe_t = threading.Thread(target=_probe_max_len, daemon=True)
     probe_t.start()
-    # narrow form: candidates group by token, verification by doc_id —
-    # neither consumes a doc_id pre-partitioning (see shingle_rows_narrow)
-    toks = shingle_rows_narrow(df, id_col, text_col, n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    cand = _jaccard_prefix_candidates(toks, threshold)
+    # joined on every exit, so a raise while building the plan never
+    # orphans the probe thread
+    try:
+        # narrow form: candidates group by token, verification by
+        # doc_id — neither consumes a doc_id pre-partitioning (see
+        # shingle_rows_narrow)
+        toks = shingle_rows_narrow(df, id_col, text_col, n).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
+        cand = _jaccard_prefix_candidates(toks, threshold)
+    finally:
+        probe_t.join()
     # verification via materialized shingle SETS + array_intersect, not a
     # row-level join: the row form expanded every candidate to |A| rows,
     # joined, and re-aggregated (two shuffles of candidate x shingle
@@ -476,7 +482,6 @@ def jaccard_prefix_pairs(
     # In the no-mega-doc case the verification plan is byte-identical to
     # the uncapped r4 form (docsets straight off ``toks``, no cap filter,
     # no union, no extra jobs).
-    probe_t.join()
     if "error" in probe_out:
         raise probe_out["error"]
     max_len = probe_out["max_len"]
@@ -979,10 +984,7 @@ def incremental_lsh_dedup(
     and incoming ids greater than existing ones for the greedy order to
     mean "earlier wins".
     """
-    # both sides re-shingle inside this one plan, so one SUMMED sizing
-    # call covers the plan's whole shuffle volume (the pre-r10 pair of
-    # calls relied on the floor-at-current ratchet to keep the max,
-    # which the base floor removed — VERDICT r9 #4)
+    # both sides re-shingle inside this one plan: one SUMMED sizing call
     from gmall_flink_yb_spark import tuning as _tuning
 
     _tuning.auto_shuffle_partitions_inputs(

@@ -700,12 +700,11 @@ def incremental_span_scrub(
 
     ``auto_partitions`` (VERDICT r8 #1): sizes the session's shuffle
     partitions from BOTH file-backed inputs in ONE summed derivation
-    (``tuning.auto_shuffle_partitions_inputs`` — the r10 base-floor
-    change removed the floor-at-current ratchet that used to make two
-    separate calls keep the max) — the batch at GRAM_EXPANSION (its
-    gram stream explodes like the batch operator's) and the seen index
-    at HASH_INDEX_EXPANSION (already gram-shaped md5 rows,
-    decompression-only). An explicit int is the whole plan's target.
+    (``tuning.auto_shuffle_partitions_inputs``) — the batch at
+    GRAM_EXPANSION (its gram stream explodes like the batch operator's)
+    and the seen index at HASH_INDEX_EXPANSION (already gram-shaped md5
+    rows, decompression-only). An explicit int is the whole plan's
+    target.
     Streaming micro-batches usually aren't file-backed (no-op); giant
     availableNow backfill batches ARE — the case the sizing exists for.
     """

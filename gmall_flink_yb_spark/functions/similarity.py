@@ -329,7 +329,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_cluster_rows: int = 10_000,
-    max_folded_kdim: int = 32_768,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic deduplication
     by clustering the embedding space and searching for near-duplicates ONLY
@@ -355,10 +354,7 @@ def semantic_dedup(
       O(1) in k*dim this way, where the former small-k literal fold cost
       ~1.3 s of driver py4j construction per call at k=8, dim=64 — and a
       SemDeDup-scale codebook (k = 10^4..10^5) would grow the plan with a
-      PARAMETER instead of the data (the r10 SRP-planes lesson). Both
-      historical paths score the same doubles in the same order (struct
-      ordering == greatest ordering) — pytest-asserted identical;
-      ``max_folded_kdim`` is accepted for API compatibility and ignored.
+      PARAMETER instead of the data (the r10 SRP-planes lesson).
     - The pair search shuffles each row on (cluster_id, block-pair), then
       one GEMM per group scores its pairs (same engine as
       ``cosine_near_dup_pairs``). A cluster above ``max_cluster_rows`` is
@@ -383,11 +379,9 @@ def semantic_dedup(
     # driver plan-build, not execution, was the wall) while this plan is
     # O(1) in k*dim. The two paths were pytest-asserted identical since
     # r10 (struct ordering == greatest ordering, same doubles in the
-    # same order), so the fold routes here unconditionally now;
-    # ``max_folded_kdim`` is retained for API compatibility and ignored.
+    # same order), so the fold routes here unconditionally now.
     # array_max over structs uses struct ordering = the same
     # (cosine desc, -cid desc -> smallest cid) rule as greatest.
-    del max_folded_kdim
     cents = _one_row_arrow_frame(
         embeddings.sparkSession,
         {
@@ -1173,10 +1167,8 @@ def incremental_cosine_dedup(
     so it doubles as auto-banding's cos_level (see
     :func:`recommended_n_bands` and BASELINE.md round-9). Precision is
     unaffected either way (exact-cosine verification)."""
-    # both sides hash and band-shuffle inside this one plan, so one
-    # SUMMED sizing call covers the plan's whole shuffle volume (the
-    # pre-r10 pair of calls relied on the floor-at-current ratchet to
-    # keep the max, which the base floor removed — VERDICT r9 #4)
+    # both sides hash and band-shuffle inside this one plan: one SUMMED
+    # sizing call
     from gmall_flink_yb_spark import tuning as _tuning
 
     _tuning.auto_shuffle_partitions_inputs(

@@ -5844,16 +5844,62 @@ LIMIT 20
 """
 
 
+# Registry order is load-bearing: correctness sampling over the
+# ``__spark_entry__`` contract takes the HEAD of the registry (first ~50
+# entries in insertion order), so the front holds the paths most
+# recently rewritten or least recently gated. ORACLES is declared in the same order as
+# QUERIES; tests/test_entry_contract.py pins both.
 QUERIES: dict[str, QueryFn] = {
+    "bpe_encode": q_bpe_encode,
+    "bpe_merges": q_bpe_merges,
+    "winnow_overlap": q_winnow_overlap,
+    "span_dup": q_span_dup,
+    "dup_spans": q_dup_spans,
+    "substring_dedup": q_substring_dedup,
+    "substring_scrub_incremental": q_substring_scrub_incremental,
+    "decontam_scrub": q_decontam_scrub,
+    "ann_auto_bands": q_ann_auto_bands,
+    "q1_pricing_summary": q_q1_pricing_summary,
+    "dedup_canonical": q_dedup_canonical,
+    "leakage_safe_split": q_leakage_safe_split,
+    "chunk_dedup": q_chunk_dedup,
+    "dedup_jaccard_prefix": q_dedup_jaccard_prefix,
+    "dedup_clusters": q_dedup_clusters,
+    "kmeans_clusters": q_kmeans_clusters,
+    "dedup_minhash_lsh": q_dedup_minhash_lsh,
+    "dedup_minhash_auto": q_dedup_minhash_auto,
+    "dedup_simhash": q_dedup_simhash,
+    "dedup_incremental": q_dedup_incremental,
+    "bpe_pair_counts": q_bpe_pair_counts,
+    "semantic_dedup": q_semantic_dedup,
+    "ann_incremental": q_ann_incremental,
+    "dsir_affinity": q_dsir_affinity,
+    "cm_heavy_hitters": q_cm_heavy_hitters,
     "uv_daily": q_uv_daily,
     "new_visitor_daily": q_new_visitor_daily,
-    "bounce_daily": q_bounce_daily,
-    "events_split_counts": q_events_split_counts,
-    "events_json_extract": q_events_json_extract,
-    "tumbling_hourly": q_tumbling_hourly,
-    "q1_pricing_summary": q_q1_pricing_summary,
-    "order_wide": q_order_wide,
-    "payment_wide": q_payment_wide,
+    "basket_pairs": q_basket_pairs,
+    "returning_users_daily": q_returning_users_daily,
+    "multimodal_feature_dedup": q_multimodal_feature_dedup,
+    "decontam_overlap": q_decontam_overlap,
+    "doc_chunks": q_doc_chunks,
+    "domain_mix": q_domain_mix,
+    "embed_quantize": q_embed_quantize,
+    "similarity_topk_int8": q_similarity_topk_int8,
+    "distinctive_terms": q_distinctive_terms,
+    "quality_classifier": q_quality_classifier,
+    "funnel_conversion": q_funnel_conversion,
+    "retention_cohorts": q_retention_cohorts,
+    "seq_pack": q_seq_pack,
+    "source_token_caps": q_source_token_caps,
+    "profile_documents": q_profile_documents,
+    "bloom_semi_join": q_bloom_semi_join,
+    "zorder_cells": q_zorder_cells,
+    "shard_manifest": q_shard_manifest,
+    "events_pivot": q_events_pivot,
+    "value_percentiles_approx": q_value_percentiles_approx,
+    "q3_shipping_priority": q_q3_shipping_priority,
+    "q5_local_supplier": q_q5_local_supplier,
+    "q18_large_orders": q_q18_large_orders,
     "session_stats": q_session_stats,
     "sliding_hourly": q_sliding_hourly,
     "value_percentiles": q_value_percentiles,
@@ -5871,7 +5917,6 @@ QUERIES: dict[str, QueryFn] = {
     "lang_id": q_lang_id,
     "dedup_exact": q_dedup_exact,
     "dedup_jaccard": q_dedup_jaccard,
-    "dedup_jaccard_prefix": q_dedup_jaccard_prefix,
     "similarity_topk": q_similarity_topk,
     "embedding_near_dup": q_embedding_near_dup,
     "multimodal_decode": q_multimodal_decode,
@@ -5880,67 +5925,16 @@ QUERIES: dict[str, QueryFn] = {
     "sample_hash_revenue": q_sample_hash_revenue,
     "sample_stratified_docs": q_sample_stratified_docs,
     "corpus_curation": q_corpus_curation,
-    "dedup_minhash_lsh": q_dedup_minhash_lsh,
-    "dedup_minhash_auto": q_dedup_minhash_auto,
-    "dedup_simhash": q_dedup_simhash,
-    "dedup_clusters": q_dedup_clusters,
     "similarity_lsh_topk": q_similarity_lsh_topk,
     "similarity_ivf_topk": q_similarity_ivf_topk,
-    "multimodal_feature_dedup": q_multimodal_feature_dedup,
-    "decontam_overlap": q_decontam_overlap,
-    "span_dup": q_span_dup,
-    "dup_spans": q_dup_spans,
-    "substring_dedup": q_substring_dedup,
+    "q22_global_sales_opportunity": q_q22_global_sales_opportunity,
+    "unigram_lm": q_unigram_lm,
+    "source_overlap": q_source_overlap,
+    "embedding_outliers": q_embedding_outliers,
+    "revenue_mom": q_revenue_mom,
+    "ts_motif_topk": q_ts_motif_topk,
+    "sax_motifs": q_sax_motifs,
     "substring_dedup_hotgram": q_substring_dedup_hotgram,
-    "substring_scrub_incremental": q_substring_scrub_incremental,
-    "decontam_scrub": q_decontam_scrub,
-    "weighted_sample_docs": q_weighted_sample_docs,
-    "doc_chunks": q_doc_chunks,
-    "domain_mix": q_domain_mix,
-    "embed_quantize": q_embed_quantize,
-    "similarity_topk_int8": q_similarity_topk_int8,
-    "distinctive_terms": q_distinctive_terms,
-    "dedup_incremental": q_dedup_incremental,
-    "semantic_dedup": q_semantic_dedup,
-    "chunk_dedup": q_chunk_dedup,
-    "quality_classifier": q_quality_classifier,
-    "funnel_conversion": q_funnel_conversion,
-    "retention_cohorts": q_retention_cohorts,
-    "seq_pack": q_seq_pack,
-    "source_token_caps": q_source_token_caps,
-    "dsir_affinity": q_dsir_affinity,
-    "cm_heavy_hitters": q_cm_heavy_hitters,
-    "profile_documents": q_profile_documents,
-    "bloom_semi_join": q_bloom_semi_join,
-    "zorder_cells": q_zorder_cells,
-    "kmeans_clusters": q_kmeans_clusters,
-    "shard_manifest": q_shard_manifest,
-    "events_pivot": q_events_pivot,
-    "value_percentiles_approx": q_value_percentiles_approx,
-    "q3_shipping_priority": q_q3_shipping_priority,
-    "q5_local_supplier": q_q5_local_supplier,
-    "q18_large_orders": q_q18_large_orders,
-    "dedup_canonical": q_dedup_canonical,
-    "value_histogram": q_value_histogram,
-    "revenue_cube": q_revenue_cube,
-    "running_revenue": q_running_revenue,
-    "top_orders_per_nation": q_top_orders_per_nation,
-    "customers_without_orders": q_customers_without_orders,
-    "uv_daily_approx": q_uv_daily_approx,
-    "q4_late_orders": q_q4_late_orders,
-    "winnow_overlap": q_winnow_overlap,
-    "bpe_pair_counts": q_bpe_pair_counts,
-    "bpe_merges": q_bpe_merges,
-    "bpe_encode": q_bpe_encode,
-    "q14_promo_revenue": q_q14_promo_revenue,
-    "keyword_hourly": q_keyword_hourly,
-    "q6_forecast_revenue": q_q6_forecast_revenue,
-    "q7_volume_shipping": q_q7_volume_shipping,
-    "q10_returned_items": q_q10_returned_items,
-    "q13_order_distribution": q_q13_order_distribution,
-    "q8_market_share": q_q8_market_share,
-    "q9_product_profit": q_q9_product_profit,
-    "q15_top_supplier": q_q15_top_supplier,
     "q17_small_quantity_revenue": q_q17_small_quantity_revenue,
     "q19_discount_revenue": q_q19_discount_revenue,
     "q20_excess_shipments_suppliers": q_q20_excess_shipments_suppliers,
@@ -5950,32 +5944,85 @@ QUERIES: dict[str, QueryFn] = {
     "q12_late_priority_lines": q_q12_late_priority_lines,
     "q16_supplier_part_distribution": q_q16_supplier_part_distribution,
     "multimodal_header_scan": q_multimodal_header_scan,
-    "audio_metadata": q_audio_metadata,
     "revenue_trailing_7d": q_revenue_trailing_7d,
-    "ann_incremental": q_ann_incremental,
-    "ann_auto_bands": q_ann_auto_bands,
-    "q22_global_sales_opportunity": q_q22_global_sales_opportunity,
-    "unigram_lm": q_unigram_lm,
-    "source_overlap": q_source_overlap,
-    "embedding_outliers": q_embedding_outliers,
-    "revenue_mom": q_revenue_mom,
-    "ts_motif_topk": q_ts_motif_topk,
-    "sax_motifs": q_sax_motifs,
-    "returning_users_daily": q_returning_users_daily,
-    "basket_pairs": q_basket_pairs,
-    "leakage_safe_split": q_leakage_safe_split,
+    "value_histogram": q_value_histogram,
+    "revenue_cube": q_revenue_cube,
+    "running_revenue": q_running_revenue,
+    "top_orders_per_nation": q_top_orders_per_nation,
+    "audio_metadata": q_audio_metadata,
+    "customers_without_orders": q_customers_without_orders,
+    "uv_daily_approx": q_uv_daily_approx,
+    "q4_late_orders": q_q4_late_orders,
+    "q14_promo_revenue": q_q14_promo_revenue,
+    "keyword_hourly": q_keyword_hourly,
+    "q6_forecast_revenue": q_q6_forecast_revenue,
+    "q7_volume_shipping": q_q7_volume_shipping,
+    "q10_returned_items": q_q10_returned_items,
+    "q13_order_distribution": q_q13_order_distribution,
+    "q8_market_share": q_q8_market_share,
+    "q9_product_profit": q_q9_product_profit,
+    "q15_top_supplier": q_q15_top_supplier,
+    "weighted_sample_docs": q_weighted_sample_docs,
+    "bounce_daily": q_bounce_daily,
+    "events_split_counts": q_events_split_counts,
+    "events_json_extract": q_events_json_extract,
+    "tumbling_hourly": q_tumbling_hourly,
+    "order_wide": q_order_wide,
+    "payment_wide": q_payment_wide,
 }
 
 ORACLES: dict[str, str] = {
+    "bpe_encode": SQL_BPE_ENCODE,
+    "bpe_merges": SQL_BPE_MERGES,
+    "winnow_overlap": SQL_WINNOW_OVERLAP,
+    "span_dup": SQL_SPAN_DUP,
+    "dup_spans": SQL_DUP_SPANS,
+    "substring_dedup": SQL_SUBSTRING_DEDUP,
+    "substring_scrub_incremental": SQL_SUBSTRING_SCRUB_INCREMENTAL,
+    "decontam_scrub": SQL_DECONTAM_SCRUB,
+    "ann_auto_bands": SQL_ANN_AUTO_BANDS,
+    "q1_pricing_summary": SQL_Q1_PRICING_SUMMARY,
+    "dedup_canonical": SQL_DEDUP_CANONICAL,
+    "leakage_safe_split": SQL_LEAKAGE_SAFE_SPLIT,
+    "chunk_dedup": SQL_CHUNK_DEDUP,
+    "dedup_jaccard_prefix": SQL_DEDUP_JACCARD_PREFIX,
+    "dedup_clusters": SQL_DEDUP_CLUSTERS,
+    "kmeans_clusters": SQL_KMEANS_CLUSTERS,
+    "dedup_minhash_lsh": SQL_DEDUP_MINHASH_LSH,
+    "dedup_minhash_auto": SQL_DEDUP_MINHASH_AUTO,
+    "dedup_simhash": SQL_DEDUP_SIMHASH,
+    "dedup_incremental": SQL_DEDUP_INCREMENTAL,
+    "bpe_pair_counts": SQL_BPE_PAIR_COUNTS,
+    "semantic_dedup": SQL_SEMANTIC_DEDUP,
+    "ann_incremental": SQL_ANN_INCREMENTAL,
+    "dsir_affinity": SQL_DSIR_AFFINITY,
+    "cm_heavy_hitters": SQL_CM_HEAVY_HITTERS,
     "uv_daily": SQL_UV_DAILY,
     "new_visitor_daily": SQL_NEW_VISITOR_DAILY,
-    "bounce_daily": SQL_BOUNCE_DAILY,
-    "events_split_counts": SQL_EVENTS_SPLIT_COUNTS,
-    "events_json_extract": SQL_EVENTS_JSON_EXTRACT,
-    "tumbling_hourly": SQL_TUMBLING_HOURLY,
-    "q1_pricing_summary": SQL_Q1_PRICING_SUMMARY,
-    "order_wide": SQL_ORDER_WIDE,
-    "payment_wide": SQL_PAYMENT_WIDE,
+    "basket_pairs": SQL_BASKET_PAIRS,
+    "returning_users_daily": SQL_RETURNING_USERS_DAILY,
+    # integer feature vectors → both engines score identical vectors
+    "multimodal_feature_dedup": SQL_MULTIMODAL_FEATURE_DEDUP,
+    "decontam_overlap": SQL_DECONTAM_OVERLAP,
+    "doc_chunks": SQL_DOC_CHUNKS,
+    "domain_mix": SQL_DOMAIN_MIX,
+    "embed_quantize": SQL_EMBED_QUANTIZE,
+    "similarity_topk_int8": SQL_SIMILARITY_TOPK_INT8,
+    "distinctive_terms": SQL_DISTINCTIVE_TERMS,
+    "quality_classifier": SQL_QUALITY_CLASSIFIER,
+    "funnel_conversion": SQL_FUNNEL_CONVERSION,
+    "retention_cohorts": SQL_RETENTION_COHORTS,
+    "seq_pack": SQL_SEQ_PACK,
+    "source_token_caps": SQL_SOURCE_TOKEN_CAPS,
+    "profile_documents": SQL_PROFILE_DOCUMENTS,
+    "bloom_semi_join": SQL_BLOOM_SEMI_JOIN,
+    "zorder_cells": SQL_ZORDER_CELLS,
+    "shard_manifest": SQL_SHARD_MANIFEST,
+    "events_pivot": SQL_EVENTS_PIVOT,
+    "value_percentiles_approx": SQL_VALUE_PERCENTILES_APPROX,
+    "q3_shipping_priority": SQL_Q3_SHIPPING_PRIORITY,
+    "q5_local_supplier": SQL_Q5_LOCAL_SUPPLIER,
+    "q18_large_orders": SQL_Q18_LARGE_ORDERS,
     "session_stats": SQL_SESSION_STATS,
     "sliding_hourly": SQL_SLIDING_HOURLY,
     "value_percentiles": SQL_VALUE_PERCENTILES,
@@ -5993,7 +6040,6 @@ ORACLES: dict[str, str] = {
     "lang_id": SQL_LANG_ID,
     "dedup_exact": SQL_DEDUP_EXACT,
     "dedup_jaccard": SQL_DEDUP_JACCARD,
-    "dedup_jaccard_prefix": SQL_DEDUP_JACCARD_PREFIX,
     "similarity_topk": SQL_SIMILARITY_TOPK,
     "embedding_near_dup": SQL_EMBEDDING_NEAR_DUP,
     "multimodal_decode": SQL_MULTIMODAL_DECODE,
@@ -6002,73 +6048,19 @@ ORACLES: dict[str, str] = {
     "sample_hash_revenue": SQL_SAMPLE_HASH_REVENUE,
     "sample_stratified_docs": SQL_SAMPLE_STRATIFIED_DOCS,
     "corpus_curation": SQL_CORPUS_CURATION,
-    "dedup_minhash_lsh": SQL_DEDUP_MINHASH_LSH,
-    "dedup_minhash_auto": SQL_DEDUP_MINHASH_AUTO,
-    "dedup_simhash": SQL_DEDUP_SIMHASH,
-    "dedup_clusters": SQL_DEDUP_CLUSTERS,
     # the SRP bucketing is md5-derived → the oracle reproduces the
     # approximation itself, bucket-for-bucket
     "similarity_lsh_topk": SQL_SIMILARITY_LSH_TOPK,
     # registered at n_probe == n_centroids, where IVF is provably exact
     "similarity_ivf_topk": SQL_SIMILARITY_TOPK,
-    # integer feature vectors → both engines score identical vectors
-    "multimodal_feature_dedup": SQL_MULTIMODAL_FEATURE_DEDUP,
-    "decontam_overlap": SQL_DECONTAM_OVERLAP,
-    "span_dup": SQL_SPAN_DUP,
-    "dup_spans": SQL_DUP_SPANS,
-    "substring_dedup": SQL_SUBSTRING_DEDUP,
+    "q22_global_sales_opportunity": SQL_Q22_GLOBAL_SALES_OPPORTUNITY,
+    "unigram_lm": SQL_UNIGRAM_LM,
+    "source_overlap": SQL_SOURCE_OVERLAP,
+    "embedding_outliers": SQL_EMBEDDING_OUTLIERS,
+    "revenue_mom": SQL_REVENUE_MOM,
+    "ts_motif_topk": SQL_TS_MOTIF_TOPK,
+    "sax_motifs": SQL_SAX_MOTIFS,
     "substring_dedup_hotgram": SQL_SUBSTRING_DEDUP_HOTGRAM,
-    "substring_scrub_incremental": SQL_SUBSTRING_SCRUB_INCREMENTAL,
-    "decontam_scrub": SQL_DECONTAM_SCRUB,
-    "weighted_sample_docs": SQL_WEIGHTED_SAMPLE_DOCS,
-    "doc_chunks": SQL_DOC_CHUNKS,
-    "domain_mix": SQL_DOMAIN_MIX,
-    "embed_quantize": SQL_EMBED_QUANTIZE,
-    "similarity_topk_int8": SQL_SIMILARITY_TOPK_INT8,
-    "distinctive_terms": SQL_DISTINCTIVE_TERMS,
-    "dedup_incremental": SQL_DEDUP_INCREMENTAL,
-    "semantic_dedup": SQL_SEMANTIC_DEDUP,
-    "chunk_dedup": SQL_CHUNK_DEDUP,
-    "quality_classifier": SQL_QUALITY_CLASSIFIER,
-    "funnel_conversion": SQL_FUNNEL_CONVERSION,
-    "retention_cohorts": SQL_RETENTION_COHORTS,
-    "seq_pack": SQL_SEQ_PACK,
-    "source_token_caps": SQL_SOURCE_TOKEN_CAPS,
-    "dsir_affinity": SQL_DSIR_AFFINITY,
-    "cm_heavy_hitters": SQL_CM_HEAVY_HITTERS,
-    "profile_documents": SQL_PROFILE_DOCUMENTS,
-    "bloom_semi_join": SQL_BLOOM_SEMI_JOIN,
-    "zorder_cells": SQL_ZORDER_CELLS,
-    "kmeans_clusters": SQL_KMEANS_CLUSTERS,
-    "shard_manifest": SQL_SHARD_MANIFEST,
-    "events_pivot": SQL_EVENTS_PIVOT,
-    "value_percentiles_approx": SQL_VALUE_PERCENTILES_APPROX,
-    "q3_shipping_priority": SQL_Q3_SHIPPING_PRIORITY,
-    "q5_local_supplier": SQL_Q5_LOCAL_SUPPLIER,
-    "q18_large_orders": SQL_Q18_LARGE_ORDERS,
-    "dedup_canonical": SQL_DEDUP_CANONICAL,
-    "value_histogram": SQL_VALUE_HISTOGRAM,
-    "revenue_cube": SQL_REVENUE_CUBE,
-    "running_revenue": SQL_RUNNING_REVENUE,
-    "top_orders_per_nation": SQL_TOP_ORDERS_PER_NATION,
-    "customers_without_orders": SQL_CUSTOMERS_WITHOUT_ORDERS,
-    # the estimate itself is engine-internal; the contract (within 3*rsd of
-    # exact) IS deterministic, so even the HLL sketch is oracle-gated
-    "uv_daily_approx": SQL_UV_DAILY_APPROX,
-    "q4_late_orders": SQL_Q4_LATE_ORDERS,
-    "winnow_overlap": SQL_WINNOW_OVERLAP,
-    "bpe_pair_counts": SQL_BPE_PAIR_COUNTS,
-    "bpe_merges": SQL_BPE_MERGES,
-    "bpe_encode": SQL_BPE_ENCODE,
-    "q14_promo_revenue": SQL_Q14_PROMO_REVENUE,
-    "keyword_hourly": SQL_KEYWORD_HOURLY,
-    "q6_forecast_revenue": SQL_Q6_FORECAST_REVENUE,
-    "q7_volume_shipping": SQL_Q7_VOLUME_SHIPPING,
-    "q10_returned_items": SQL_Q10_RETURNED_ITEMS,
-    "q13_order_distribution": SQL_Q13_ORDER_DISTRIBUTION,
-    "q8_market_share": SQL_Q8_MARKET_SHARE,
-    "q9_product_profit": SQL_Q9_PRODUCT_PROFIT,
-    "q15_top_supplier": SQL_Q15_TOP_SUPPLIER,
     "q17_small_quantity_revenue": SQL_Q17_SMALL_QUANTITY_REVENUE,
     "q19_discount_revenue": SQL_Q19_DISCOUNT_REVENUE,
     "q20_excess_shipments_suppliers": SQL_Q20_EXCESS_SHIPMENTS_SUPPLIERS,
@@ -6078,246 +6070,31 @@ ORACLES: dict[str, str] = {
     "q12_late_priority_lines": SQL_Q12_LATE_PRIORITY_LINES,
     "q16_supplier_part_distribution": SQL_Q16_SUPPLIER_PART_DISTRIBUTION,
     "multimodal_header_scan": SQL_MULTIMODAL_HEADER_SCAN,
-    "audio_metadata": SQL_AUDIO_METADATA,
     "revenue_trailing_7d": SQL_REVENUE_TRAILING_7D,
-    "ann_incremental": SQL_ANN_INCREMENTAL,
-    "ann_auto_bands": SQL_ANN_AUTO_BANDS,
-    "q22_global_sales_opportunity": SQL_Q22_GLOBAL_SALES_OPPORTUNITY,
-    "unigram_lm": SQL_UNIGRAM_LM,
-    "source_overlap": SQL_SOURCE_OVERLAP,
-    "embedding_outliers": SQL_EMBEDDING_OUTLIERS,
-    "revenue_mom": SQL_REVENUE_MOM,
-    "ts_motif_topk": SQL_TS_MOTIF_TOPK,
-    "sax_motifs": SQL_SAX_MOTIFS,
-    "returning_users_daily": SQL_RETURNING_USERS_DAILY,
-    "basket_pairs": SQL_BASKET_PAIRS,
-    "leakage_safe_split": SQL_LEAKAGE_SAFE_SPLIT,
-}
-
-
-# ---------------------------------------------------------------------------
-# Driver-gate rotation. The per-round CORRECTNESS harness samples the FIRST
-# ~50 registry entries in insertion order, so entries further back only get
-# re-gated when rotated forward. Every registry entry has had a green
-# driver row in some round; rotation serves FRESHNESS (VERDICT r8 #2):
-# round 9 fronts this round's NEW query (ann_auto_bands — the derived-B
-# recall wiring, never driver-gated before), then the 17 r6-gated queries
-# NOT re-gated in r8 (the complement of _R08_FRONT's 33-of-50 take from
-# that block — audio_metadata .. q15_top_supplier, the stalest surface in
-# the registry), then fills to ~50 with the 33 OLDEST r7-gated queries in
-# their r7 gate order (dup_spans .. multimodal_decode; the last slides to
-# position 51 — it stays covered by the full-registry oracle run). The r8-gated block (r03/r04 backlog + the hotgram
-# stress query + 33 r6 re-gates) is the freshest and sits behind, as do
-# the 17 youngest r7-gated queries. Full-surface coverage evidence for
-# whatever sits outside the ~50-query gate window is the committed
-# `tools/check_oracle.py --vanilla` run over all 117 registry entries on
-# this round's HEAD (ORACLE_FULL_r09.txt).
-# ---------------------------------------------------------------------------
-
-_R09_FRONT = [
-    # new this round (auto-banding derived-B geometry, hash-checked, one
-    # per LSH family):
-    "ann_auto_bands", "dedup_minhash_auto",
-    # last driver gate r6 (the 17 of that 50-query block _R08_FRONT did
-    # not re-gate; standing r6 gate order):
-    "audio_metadata", "customers_without_orders", "uv_daily_approx",
-    "q4_late_orders", "winnow_overlap", "bpe_pair_counts", "bpe_merges",
-    "bpe_encode", "q14_promo_revenue", "keyword_hourly",
-    "q6_forecast_revenue", "q7_volume_shipping", "q10_returned_items",
-    "q13_order_distribution", "q8_market_share", "q9_product_profit",
-    "q15_top_supplier",
-    # oldest 33 of the r7-gated block, r7 gate order:
-    "dup_spans", "substring_dedup", "substring_scrub_incremental",
-    "decontam_scrub", "weighted_sample_docs", "bounce_daily",
-    "events_split_counts", "events_json_extract", "tumbling_hourly",
-    "q1_pricing_summary", "order_wide", "payment_wide", "session_stats",
-    "sliding_hourly", "value_percentiles", "revenue_rollup",
-    "revenue_by_nation", "top_brands", "interval_join_shipments",
-    "cdc_route_kafka", "cdc_route_hbase", "keyword_top100",
-    "keyword_top100_zh", "text_quality", "text_repetition", "pii_scrub",
-    "lang_id", "dedup_exact", "dedup_jaccard", "dedup_jaccard_prefix",
-    "similarity_topk", "embedding_near_dup", "multimodal_decode",
-]
-
-QUERIES = {
-    **{k: QUERIES[k] for k in _R09_FRONT if k in QUERIES},
-    **{k: v for k, v in QUERIES.items() if k not in _R09_FRONT},
-}
-ORACLES = {
-    **{k: ORACLES[k] for k in _R09_FRONT if k in ORACLES},
-    **{k: v for k, v in ORACLES.items() if k not in _R09_FRONT},
-}
-
-# Round-10 rotation (VERDICT r9 #2): the stalest surface is the 19
-# queries whose last driver gate was ROUND 7 — the 17 of the r7-gated
-# block that r9's 33-of-50 take did not cover, plus the 2 that slid to
-# positions 51/52 of the r9 front (embedding_near_dup,
-# multimodal_decode — covered by the r9 full-registry oracle run but
-# not driver-gated). They go first, in their r7 gate order; the
-# remaining ~31 slots fill with the OLDEST r8-gated queries in their r8
-# gate order (substring_dedup_hotgram .. retention_cohorts). Behind the
-# gate window sit the freshest blocks: everything r9 gated (including
-# the two r9-new auto-banding queries) and the youngest r8-gated
-# queries; full-surface evidence for those is the committed
-# full-registry vanilla oracle run on this round's HEAD
-# (ORACLE_FULL_r10.txt).
-_R10_FRONT = [
-    # last gated r7 (stalest; r7 gate order):
-    "embedding_near_dup", "multimodal_decode", "multimodal_frames",
-    "asof_latest_order", "sample_hash_revenue", "sample_stratified_docs",
-    "corpus_curation", "dedup_minhash_lsh", "dedup_simhash",
-    "dedup_clusters", "similarity_lsh_topk", "similarity_ivf_topk",
-    "q22_global_sales_opportunity", "unigram_lm", "source_overlap",
-    "embedding_outliers", "revenue_mom", "ts_motif_topk", "sax_motifs",
-    # oldest 31 of the r8-gated block, r8 gate order:
-    "substring_dedup_hotgram", "q17_small_quantity_revenue",
-    "q19_discount_revenue", "q20_excess_shipments_suppliers",
-    "q21_waiting_suppliers", "q2_min_cost_supplier", "q11_important_parts",
-    "q12_late_priority_lines", "q16_supplier_part_distribution",
-    "multimodal_header_scan", "revenue_trailing_7d", "ann_incremental",
-    "uv_daily", "new_visitor_daily", "leakage_safe_split", "basket_pairs",
-    "returning_users_daily", "multimodal_feature_dedup", "decontam_overlap",
-    "span_dup", "doc_chunks", "domain_mix", "embed_quantize",
-    "similarity_topk_int8", "distinctive_terms", "dedup_incremental",
-    "semantic_dedup", "chunk_dedup", "quality_classifier",
-    "funnel_conversion", "retention_cohorts",
-]
-
-QUERIES = {
-    **{k: QUERIES[k] for k in _R10_FRONT if k in QUERIES},
-    **{k: v for k, v in QUERIES.items() if k not in _R10_FRONT},
-}
-ORACLES = {
-    **{k: ORACLES[k] for k in _R10_FRONT if k in ORACLES},
-    **{k: v for k, v in ORACLES.items() if k not in _R10_FRONT},
-}
-
-# Round-11 rotation (VERDICT r10 #2): the stalest surface is the
-# r8-gated block that neither r9 nor r10 re-gated — 19 queries by the
-# CORRECTNESS files (the verdict's "17" undercounted: the complement of
-# r10's 31-of-50 take includes the two r8 rows r9 also skipped). They go
-# first, in their r8 gate order; the remaining 31 slots fill with the
-# OLDEST r9-gated queries in their r9 gate order (ann_auto_bands ..
-# payment_wide). Behind the gate window sit the freshest blocks:
-# everything r10 gated and the youngest r9-gated queries; full-surface
-# evidence for those is the committed full-registry vanilla oracle run
-# on this round's final HEAD (ORACLE_FULL_r11.txt).
-_R11_FRONT = [
-    # last gated r8 (stalest; r8 gate order):
-    "seq_pack", "source_token_caps", "dsir_affinity", "cm_heavy_hitters",
-    "profile_documents", "bloom_semi_join", "zorder_cells",
-    "kmeans_clusters", "shard_manifest", "events_pivot",
-    "value_percentiles_approx", "q3_shipping_priority", "q5_local_supplier",
-    "q18_large_orders", "dedup_canonical", "value_histogram",
-    "revenue_cube", "running_revenue", "top_orders_per_nation",
-    # oldest 31 of the r9-gated block, r9 gate order:
-    "ann_auto_bands", "dedup_minhash_auto", "audio_metadata",
-    "customers_without_orders", "uv_daily_approx", "q4_late_orders",
-    "winnow_overlap", "bpe_pair_counts", "bpe_merges", "bpe_encode",
-    "q14_promo_revenue", "keyword_hourly", "q6_forecast_revenue",
-    "q7_volume_shipping", "q10_returned_items", "q13_order_distribution",
-    "q8_market_share", "q9_product_profit", "q15_top_supplier",
-    "dup_spans", "substring_dedup", "substring_scrub_incremental",
-    "decontam_scrub", "weighted_sample_docs", "bounce_daily",
-    "events_split_counts", "events_json_extract", "tumbling_hourly",
-    "q1_pricing_summary", "order_wide", "payment_wide",
-]
-
-QUERIES = {
-    **{k: QUERIES[k] for k in _R11_FRONT if k in QUERIES},
-    **{k: v for k, v in QUERIES.items() if k not in _R11_FRONT},
-}
-ORACLES = {
-    **{k: ORACLES[k] for k in _R11_FRONT if k in ORACLES},
-    **{k: v for k, v in ORACLES.items() if k not in _R11_FRONT},
-}
-
-# Round-12 rotation (VERDICT r11 #2): the stalest surface is the
-# r9-gated block that neither r10 nor r11 re-gated — exactly the 19
-# queries in the complement of r11's 31-of-50 take from that block
-# (verified programmatically against the three CORRECTNESS files). They
-# go first, in their r9 gate order; the remaining 31 slots fill with
-# the OLDEST r10-gated queries in their r10 gate order
-# (embedding_near_dup .. ann_incremental). Behind the gate window sit
-# the freshest blocks: everything r11 gated and the youngest r10-gated
-# queries; full-surface evidence for those is the committed
-# full-registry vanilla oracle run on this round's final HEAD
-# (ORACLE_FULL_r12.txt).
-_R12_FRONT = [
-    # last gated r9 (stalest; r9 gate order):
-    "session_stats", "sliding_hourly", "value_percentiles",
-    "revenue_rollup", "revenue_by_nation", "top_brands",
-    "interval_join_shipments", "cdc_route_kafka", "cdc_route_hbase",
-    "keyword_top100", "keyword_top100_zh", "text_quality",
-    "text_repetition", "pii_scrub", "lang_id", "dedup_exact",
-    "dedup_jaccard", "dedup_jaccard_prefix", "similarity_topk",
-    # oldest 31 of the r10-gated block, r10 gate order:
-    "embedding_near_dup", "multimodal_decode", "multimodal_frames",
-    "asof_latest_order", "sample_hash_revenue", "sample_stratified_docs",
-    "corpus_curation", "dedup_minhash_lsh", "dedup_simhash",
-    "dedup_clusters", "similarity_lsh_topk", "similarity_ivf_topk",
-    "q22_global_sales_opportunity", "unigram_lm", "source_overlap",
-    "embedding_outliers", "revenue_mom", "ts_motif_topk", "sax_motifs",
-    "substring_dedup_hotgram", "q17_small_quantity_revenue",
-    "q19_discount_revenue", "q20_excess_shipments_suppliers",
-    "q21_waiting_suppliers", "q2_min_cost_supplier", "q11_important_parts",
-    "q12_late_priority_lines", "q16_supplier_part_distribution",
-    "multimodal_header_scan", "revenue_trailing_7d", "ann_incremental",
-]
-
-QUERIES = {
-    **{k: QUERIES[k] for k in _R12_FRONT if k in QUERIES},
-    **{k: v for k, v in QUERIES.items() if k not in _R12_FRONT},
-}
-ORACLES = {
-    **{k: ORACLES[k] for k in _R12_FRONT if k in ORACLES},
-    **{k: v for k, v in ORACLES.items() if k not in _R12_FRONT},
-}
-
-# Round-13 rotation (VERDICT r12 #3 + this round's touches): the gate
-# window leads with every query whose implementation round 12 or round
-# 13 REWROTE but whose last driver-oracle certification predates the
-# rewrite — first the 13 r12-touched paths the r12 sample missed (in
-# the verdict's order), then the 12 further paths round 13 touched
-# (pair-expansion family, kmeans broadcast centroids, the parsed-SQL
-# MinHash/SimHash builders, the ANN dedup gate, semantic_dedup's
-# broadcast codebook, DSIR caching, cm spread). The remaining 25 slots
-# fill with the stalest surface by CORRECTNESS history: the r10-gated
-# block neither r11 nor r12 re-gated, then the oldest r11-gated queries
-# in their r11 gate order. Behind the window sit the freshest blocks
-# (everything r12 gated and the youngest r11-gated queries);
-# full-surface evidence for those is the committed full-registry
-# vanilla oracle run on this round's final HEAD (ORACLE_FULL_r13.txt).
-_R13_FRONT = [
-    # r12-rewritten, never driver-gated on the rewritten code (VERDICT
-    # r12 #3 list; many also touched again in r13):
-    "bpe_encode", "bpe_merges", "winnow_overlap", "span_dup",
-    "dup_spans", "substring_dedup", "substring_scrub_incremental",
-    "decontam_scrub", "ann_auto_bands", "q1_pricing_summary",
-    "dedup_canonical", "leakage_safe_split", "chunk_dedup",
-    # r13-touched paths not already above:
-    "dedup_jaccard_prefix", "dedup_clusters", "kmeans_clusters",
-    "dedup_minhash_lsh", "dedup_minhash_auto", "dedup_simhash",
-    "dedup_incremental", "bpe_pair_counts", "semantic_dedup",
-    "ann_incremental", "dsir_affinity", "cm_heavy_hitters",
-    # stalest surface: last gated r10 (r10 gate order):
-    "uv_daily", "new_visitor_daily", "basket_pairs",
-    "returning_users_daily", "multimodal_feature_dedup",
-    "decontam_overlap", "doc_chunks", "domain_mix", "embed_quantize",
-    "similarity_topk_int8", "distinctive_terms", "quality_classifier",
-    "funnel_conversion", "retention_cohorts",
-    # oldest r11-gated (r11 gate order):
-    "seq_pack", "source_token_caps", "profile_documents",
-    "bloom_semi_join", "zorder_cells", "shard_manifest", "events_pivot",
-    "value_percentiles_approx", "q3_shipping_priority",
-    "q5_local_supplier", "q18_large_orders",
-]
-
-QUERIES = {
-    **{k: QUERIES[k] for k in _R13_FRONT if k in QUERIES},
-    **{k: v for k, v in QUERIES.items() if k not in _R13_FRONT},
-}
-ORACLES = {
-    **{k: ORACLES[k] for k in _R13_FRONT if k in ORACLES},
-    **{k: v for k, v in ORACLES.items() if k not in _R13_FRONT},
+    "value_histogram": SQL_VALUE_HISTOGRAM,
+    "revenue_cube": SQL_REVENUE_CUBE,
+    "running_revenue": SQL_RUNNING_REVENUE,
+    "top_orders_per_nation": SQL_TOP_ORDERS_PER_NATION,
+    "audio_metadata": SQL_AUDIO_METADATA,
+    "customers_without_orders": SQL_CUSTOMERS_WITHOUT_ORDERS,
+    # the estimate itself is engine-internal; the contract (within 3*rsd of
+    # exact) IS deterministic, so even the HLL sketch is oracle-gated
+    "uv_daily_approx": SQL_UV_DAILY_APPROX,
+    "q4_late_orders": SQL_Q4_LATE_ORDERS,
+    "q14_promo_revenue": SQL_Q14_PROMO_REVENUE,
+    "keyword_hourly": SQL_KEYWORD_HOURLY,
+    "q6_forecast_revenue": SQL_Q6_FORECAST_REVENUE,
+    "q7_volume_shipping": SQL_Q7_VOLUME_SHIPPING,
+    "q10_returned_items": SQL_Q10_RETURNED_ITEMS,
+    "q13_order_distribution": SQL_Q13_ORDER_DISTRIBUTION,
+    "q8_market_share": SQL_Q8_MARKET_SHARE,
+    "q9_product_profit": SQL_Q9_PRODUCT_PROFIT,
+    "q15_top_supplier": SQL_Q15_TOP_SUPPLIER,
+    "weighted_sample_docs": SQL_WEIGHTED_SAMPLE_DOCS,
+    "bounce_daily": SQL_BOUNCE_DAILY,
+    "events_split_counts": SQL_EVENTS_SPLIT_COUNTS,
+    "events_json_extract": SQL_EVENTS_JSON_EXTRACT,
+    "tumbling_hourly": SQL_TUMBLING_HOURLY,
+    "order_wide": SQL_ORDER_WIDE,
+    "payment_wide": SQL_PAYMENT_WIDE,
 }

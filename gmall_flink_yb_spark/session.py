@@ -16,6 +16,9 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# session-conf key holding the shuffle parallelism get_spark built the
+# session with; read by tuning.session_base_partitions
+BASE_PARTITIONS_KEY = "spark.gmall.graft.baseShufflePartitions"
 
 # Streaming state backends (VERDICT r6 #3). The reference carries a
 # commented-out FsStateBackend/RocksDB block in every app
@@ -99,13 +102,11 @@ def get_spark(
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    # record the session's pre-ratchet shuffle parallelism so the
-    # auto-sizing hooks floor against the BASE, not the live value
-    # (VERDICT r9 #4; no-op if already stamped — getOrCreate may have
-    # returned an existing session)
-    from gmall_flink_yb_spark.tuning import session_base_partitions
-
-    session_base_partitions(spark)
+    # the floor tuning's sizing hooks clamp to (getOrCreate has just
+    # applied the requested parallelism, even to an existing session)
+    spark.conf.set(
+        BASE_PARTITIONS_KEY, spark.conf.get("spark.sql.shuffle.partitions")
+    )
     if state_store is not None:
         if state_store not in STATE_STORE_PROVIDERS:
             raise ValueError(

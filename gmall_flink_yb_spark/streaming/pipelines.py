@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
+from gmall_flink_yb_spark import tuning as _tuning
 from gmall_flink_yb_spark.operators.log_split import split_log_stream
 from gmall_flink_yb_spark.operators.order_wide import interval_join
 from gmall_flink_yb_spark.operators.routing import route_cdc, to_kafka_payload
@@ -787,16 +788,7 @@ def start_incremental_dedup_stream(
         if not batch_df.head(1):
             return
         incoming = batch_df.persist()
-        # the batch's derived sizing is BATCH-SCOPED (ADVICE r9: without
-        # a restore, one availableNow backfill batch ratcheted the
-        # setting for every later micro-batch and anything else sharing
-        # the SparkSession); the batch's own writes execute before the
-        # finally restores it. Restore target is the tuning BASE, not an
-        # entry snapshot (ADVICE r10: snapshots are not atomic across
-        # concurrent streams on one session — B can snapshot A's
-        # mid-batch sized value and re-impose it after A's finally).
-        from gmall_flink_yb_spark import tuning as _tuning
-
+        # sizes the query's own cloned session (tuning module docstring)
         try:
             _tuning.auto_shuffle_partitions_for_batch(
                 incoming,
@@ -877,7 +869,6 @@ def start_incremental_dedup_stream(
                 release_cache(verdicts)  # the batch's signature subtree
         finally:
             incoming.unpersist()
-            _tuning.restore_base_partitions(spark)
 
     return (
         docs_stream.writeStream.foreachBatch(write_batch)
@@ -982,11 +973,6 @@ def start_incremental_span_scrub_stream(
             return
         incoming = batch_df.persist()
         cleaned = None
-        # batch-scoped sizing: restore the session conf to the tuning
-        # BASE in finally (ADVICE r9 + r10 — see
-        # start_incremental_dedup_stream for why base, not snapshot)
-        from gmall_flink_yb_spark import tuning as _tuning
-
         try:
             _tuning.auto_shuffle_partitions_for_batch(
                 incoming,
@@ -1039,7 +1025,6 @@ def start_incremental_span_scrub_stream(
             if cleaned is not None:
                 release_cache(cleaned)
             incoming.unpersist()
-            _tuning.restore_base_partitions(spark)
 
     return (
         docs_stream.writeStream.foreachBatch(write_batch)
@@ -1182,11 +1167,6 @@ def start_incremental_ann_stream(
         if not batch_df.head(1):
             return
         incoming = batch_df.persist()
-        # batch-scoped sizing: restore the session conf to the tuning
-        # BASE in finally (ADVICE r9 + r10 — see
-        # start_incremental_dedup_stream for why base, not snapshot)
-        from gmall_flink_yb_spark import tuning as _tuning
-
         try:
             _tuning.auto_shuffle_partitions_for_batch(
                 incoming,
@@ -1266,7 +1246,6 @@ def start_incremental_ann_stream(
                 release_cache(verdicts)  # the batch's vector subtree
         finally:
             incoming.unpersist()
-            _tuning.restore_base_partitions(spark)
 
     return (
         vecs_stream.writeStream.foreachBatch(write_batch)
@@ -1674,28 +1653,24 @@ def exact_span_backfill(
     backfill's output must not depend on the node's heap-derived chunk
     count — e.g. reproducing a dataset across differently-sized boxes.
     """
-    from gmall_flink_yb_spark import tuning as _tuning
     from gmall_flink_yb_spark.functions.ngrams import _gram_positions
 
     reader = spark.read.format(fmt).schema(schema)
     if glob:
         reader = reader.option("pathGlobFilter", glob)
     docs = reader.load(src_dir)
-    try:
-        _tuning.auto_shuffle_partitions_inputs(
-            [(docs, _tuning.GRAM_EXPANSION)], auto_partitions
-        )
-        (
-            _gram_positions(docs.select(id_col, text_col), id_col, text_col, n)
-            .groupBy("gh")
-            .agg(F.count(F.lit(1)).alias("_c"))
-            .filter(F.col("_c") >= 2)
-            .select("gh")
-            .write.mode("overwrite")
-            .parquet(dup_gram_dir)
-        )
-    finally:
-        _tuning.restore_base_partitions(spark)
+    _tuning.auto_shuffle_partitions_inputs(
+        [(docs, _tuning.GRAM_EXPANSION)], auto_partitions
+    )
+    (
+        _gram_positions(docs.select(id_col, text_col), id_col, text_col, n)
+        .groupBy("gh")
+        .agg(F.count(F.lit(1)).alias("_c"))
+        .filter(F.col("_c") >= 2)
+        .select("gh")
+        .write.mode("overwrite")
+        .parquet(dup_gram_dir)
+    )
     return backfill_corpus(
         spark,
         src_dir,

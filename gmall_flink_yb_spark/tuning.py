@@ -33,14 +33,27 @@ actual shuffles merge back to fewer partitions at runtime), so the cost
 of overestimating is near zero; underestimating is the failure mode this
 module exists to prevent — AQE cannot SPLIT a sort partition that
 already outgrew memory mid-task.
+
+The conf contract:
+
+- Each sizing call SETS what its plan needs, floored at the base that
+  ``session.get_spark`` records (:func:`session_base_partitions`) — it
+  lowers the conf as well as raising it, so one giant derivation never
+  ratchets the ones after it.
+- Streaming sinks size their own query's session: a ``foreachBatch``
+  body's ``batch_df.sparkSession`` is a clone Structured Streaming keeps
+  per query, so a batch's sizing never reaches the parent session.
+- Nothing restores. A later plan that sizes itself overwrites the value;
+  one that does not runs at whatever the last call set, and AQE
+  coalesces any overshoot.
 """
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from gmall_flink_yb_spark.session import BASE_PARTITIONS_KEY
 
 # post-expansion bytes one shuffle partition should hold: sorts/hash maps
 # of this size fit comfortably in task memory at default executor sizing
@@ -92,93 +105,26 @@ HASH_INDEX_EXPANSION = 2.0
 # parent-directory content summaries (bounds driver metadata RPCs)
 _MAX_FILE_STATS = 1024
 
-# session-conf key recording the session's PRE-RATCHET shuffle
-# parallelism; see session_base_partitions
-_BASE_PARTITIONS_KEY = "spark.gmall.graft.baseShufflePartitions"
-# session-conf key recording the LAST value a sizing hook wrote. When the
-# live conf differs from this, someone ELSE wrote the conf since our last
-# write (a user's manual spark.conf.set) — that external value becomes
-# the new base instead of being silently reverted (ADVICE r10: the r10
-# lower-toward-base behavior stomped manual mid-session raises).
-_LAST_SIZED_KEY = "spark.gmall.graft.lastSizedShufflePartitions"
-
-# Guards every read-modify-write over the shared session conf below
-# (ADVICE r11): _apply_partitions writes the live conf and _LAST_SIZED_KEY
-# as two sets; a concurrent stream's session_base_partitions landing
-# between them would see live != last and permanently adopt the hook's
-# sized value as the session base — the exact ratchet VERDICT r9 #4
-# removed, reinstated in the concurrent-foreachBatch scenario (callbacks
-# run on separate driver threads). RLock: restore_base_partitions calls
-# session_base_partitions + _apply_partitions under one critical section.
-_CONF_LOCK = threading.RLock()
-
 
 def session_base_partitions(spark: SparkSession) -> int:
-    """The session's BASE ``spark.sql.shuffle.partitions`` — the value it
-    had before any auto-sizing call touched it (VERDICT r9 #4: with the
-    old floor = LIVE value, one 100 TB-sized derivation permanently
-    raised the floor every later derivation was clamped to, so sizing
-    could never CORRECT an earlier overestimate for the session's
-    lifetime). ``session.get_spark`` stamps the base at session build;
-    sessions built elsewhere (the driver's vanilla harness) get stamped
-    here on the first sizing call — before that call ever writes the
-    conf, so the recorded base is always pre-ratchet.
-
-    EXTERNAL writes are respected (ADVICE r10): if the live conf differs
-    from the last value a sizing hook wrote (``_LAST_SIZED_KEY``), a user
-    set it manually since our last write — that manual value is adopted
-    as the NEW base, so later derivations floor at it instead of
-    reverting it. Only hook-ratcheted values are ever released back."""
-    with _CONF_LOCK:
-        v = spark.conf.get(_BASE_PARTITIONS_KEY, None)
-        live = spark.conf.get("spark.sql.shuffle.partitions")
-        if v is None:
-            spark.conf.set(_BASE_PARTITIONS_KEY, live)
-            return int(live)
-        last = spark.conf.get(_LAST_SIZED_KEY, None)
-        # live differs from what the hooks last wrote (or from the
-        # stamped base when no hook has written yet): an external
-        # write — adopt it
-        if (last is not None and live != last) or (
-            last is None and live != v
-        ):
-            spark.conf.set(_BASE_PARTITIONS_KEY, live)
-            spark.conf.set(_LAST_SIZED_KEY, live)
-            return int(live)
-        return int(v)
+    """The session's BASE ``spark.sql.shuffle.partitions`` — the floor
+    every sizing call clamps to. A pure read: ``session.get_spark``
+    records the base on every call; a session built elsewhere (a vanilla
+    ``__spark_entry__`` harness) falls back to the static SparkConf value,
+    else Spark's default. Flooring at the base rather than at the live
+    value lets a small derivation LOWER the conf after a big one
+    (VERDICT r9 #4)."""
+    v = spark.conf.get(BASE_PARTITIONS_KEY, None)
+    if v is None:
+        v = spark.sparkContext.getConf().get(
+            "spark.sql.shuffle.partitions", "200"
+        )
+    return int(v)
 
 
 def _apply_partitions(spark: SparkSession, parts: int) -> int:
-    """Set ``spark.sql.shuffle.partitions`` to ``parts`` (already
-    base-floored by the caller) if it differs from the live value. Unlike
-    the pre-r10 hooks this also LOWERS — back toward the base, never
-    below it — so a giant derivation stops ratcheting every later one
-    (the lazy-plan caveat this buys into is documented on
-    :func:`auto_shuffle_partitions`). Records what it wrote in
-    ``_LAST_SIZED_KEY`` so :func:`session_base_partitions` can tell a
-    hook write from a user's manual write. Holds ``_CONF_LOCK`` so the
-    live write and the stamp are atomic against a concurrent thread's
-    adoption check (ADVICE r11)."""
-    with _CONF_LOCK:
-        current = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        if parts != current:
-            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-        spark.conf.set(_LAST_SIZED_KEY, str(parts))
-        return parts
-
-
-def restore_base_partitions(spark: SparkSession) -> int:
-    """Restore ``spark.sql.shuffle.partitions`` to the session BASE — the
-    batch-exit counterpart of the foreachBatch sizing hook (ADVICE r10:
-    restoring an ENTRY SNAPSHOT is not atomic across concurrent streams
-    sharing one session — stream B can snapshot stream A's mid-batch
-    sized value and re-impose it after A's finally ran; restoring to the
-    base is idempotent and order-independent). Goes through
-    :func:`session_base_partitions` first, so a manual raise during the
-    batch is adopted as the new base rather than stomped; the read and
-    the write share one ``_CONF_LOCK`` critical section."""
-    with _CONF_LOCK:
-        return _apply_partitions(spark, session_base_partitions(spark))
+    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    return parts
 
 
 def estimate_parquet_bytes(spark: SparkSession, *paths: str) -> int:
@@ -216,10 +162,9 @@ def size_shuffle_partitions(
 ) -> int:
     """Set ``spark.sql.shuffle.partitions`` from the data: scan bytes of
     ``paths`` x ``expansion`` / ``target_bytes``, floored at the session's
-    BASE setting (the box-parallelism default recorded by
-    :func:`session_base_partitions`; AQE coalesces overshoot at runtime).
-    Returns the value set. Runtime conf: applies to plans built
-    afterwards."""
+    BASE setting (:func:`session_base_partitions`; AQE coalesces
+    overshoot at runtime). Returns the value set. Runtime conf: applies
+    to plans executed afterwards."""
     parts = partitions_for_bytes(
         estimate_parquet_bytes(spark, *paths) * expansion,
         target_bytes=target_bytes,
@@ -397,7 +342,7 @@ def auto_shuffle_partitions_for_rows(
     from parquet footer metadata (:func:`file_backed_rows`, no job);
     non-file frames are left alone under ``True``. Same knob contract:
     int = explicit partition target, False = off; floored at the session
-    BASE (see :func:`auto_shuffle_partitions` for the r10 floor change)."""
+    base and never restored (see :func:`auto_shuffle_partitions`)."""
     if auto_partitions is False:
         return None
     spark = df.sparkSession
@@ -442,18 +387,16 @@ def auto_shuffle_partitions(
       the estimate); still floored at the session's base setting.
     - ``False`` — do nothing (returns None).
 
-    Floor = session BASE, not the live value (VERDICT r9 #4): each call
-    derives what ITS operator needs, clamped to [base, PARTITIONS_MAX],
-    and SETS that — lowering back toward (never below) the base when an
-    earlier giant call left the conf raised. Overshoot within one plan
-    is AQE-coalesced; the base floor keeps thousands of tiny
-    post-ratchet queries from paying a 20k-task scheduler bill forever.
-    Caveat the old ratchet silently papered over: the conf is read when
-    a plan EXECUTES, so a caller that builds a big operator's frame,
-    then calls a small operator, then finally executes the big frame
-    runs the big shuffle at the small derivation. Operators that shuffle
-    several inputs in ONE plan size all of them in one
-    :func:`auto_shuffle_partitions_inputs` call (summed, not
+    Each call derives what ITS operator needs, clamped to
+    [session base, PARTITIONS_MAX], and SETS that on ``df``'s session —
+    lowering back toward (never below) the base when an earlier giant
+    call left the conf raised; nothing restores it afterwards (module
+    docstring). Overshoot within one plan is AQE-coalesced. Caveat: the
+    conf is read when a plan EXECUTES, so a caller that builds a big
+    operator's frame, then calls a small operator, then finally executes
+    the big frame runs the big shuffle at the small derivation.
+    Operators that shuffle several inputs in ONE plan size all of them
+    in one :func:`auto_shuffle_partitions_inputs` call (summed, not
     last-writer-wins); callers interleaving plan builds across operators
     should execute eagerly or pass explicit ints."""
     return auto_shuffle_partitions_inputs(
@@ -471,9 +414,9 @@ def auto_shuffle_partitions_inputs(
     both sides shingle/band inside the same plan). ``inputs`` is
     ``[(df, expansion), ...]``; derived bytes SUM across the file-backed
     entries, so the single conf write reflects the plan's whole shuffle
-    volume — the pre-r10 form sized each side in its own call and relied
-    on the floor-at-current ratchet to keep the max, which the base floor
-    (VERDICT r9 #4) removes. Non-file entries contribute zero (exactly
+    volume; two separate calls would be last-writer-wins, since each
+    call floors at the session base, not the live value. Non-file
+    entries contribute zero (exactly
     what their standalone call would have derived: a no-op); if NO entry
     is file-backed the session is left alone. An ``int`` is the explicit
     target for the plan: still summed against nothing, just
@@ -533,11 +476,10 @@ def auto_shuffle_partitions_for_batch(
     ``RAW_TEXT_DISCOUNT`` since the expansion constants are calibrated
     against compressed scan bytes. Same knob contract as the other hooks:
     True = derive, int = explicit, False = off; base-floored, AQE
-    coalesces overshoot. The foreachBatch bodies that call this snapshot
-    the conf at batch entry and restore it after the batch's writes
-    (ADVICE r9: without the restore, one giant availableNow batch
-    ratcheted the setting for every later micro-batch and for anything
-    else sharing the SparkSession)."""
+    coalesces overshoot. The write lands on ``df``'s session — inside
+    foreachBatch the streaming query's own clone — and every batch sizes
+    itself on entry, so one giant availableNow batch neither outlives
+    its batch nor reaches the parent session; nothing restores."""
     if auto_partitions is False:
         return None
     spark = df.sparkSession

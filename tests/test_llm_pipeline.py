@@ -77,6 +77,42 @@ def test_jaccard_prefix_equals_exact(spark, sf_dir, threshold):
     assert len(exact) > 0  # corpus has planted near-dups; test is not vacuous
 
 
+def test_jaccard_prefix_probe_thread_joined_on_plan_error(
+    spark, sf_dir, monkeypatch
+):
+    """jaccard_prefix_pairs overlaps its mega-doc length probe (a driver
+    thread) with plan construction; a raise in that stretch must still
+    join the thread instead of orphaning it."""
+    import threading
+    import time
+
+    from gmall_flink_yb_spark.functions import dedup
+    from gmall_flink_yb_spark.sources.readers import read_table
+
+    started = []
+
+    class SlowThread(threading.Thread):
+        def start(self):
+            started.append((getattr(self._target, "__name__", ""), self))
+            super().start()
+
+        def run(self):
+            time.sleep(0.5)  # still probing when the plan build fails
+            super().run()
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("plan construction failed")
+
+    docs = read_table(spark, sf_dir, "documents")
+    monkeypatch.setattr(threading, "Thread", SlowThread)
+    monkeypatch.setattr(dedup, "_jaccard_prefix_candidates", boom)
+    with pytest.raises(RuntimeError, match="plan construction failed"):
+        dedup.jaccard_prefix_pairs(docs, "doc_id", "text", 0.5)
+    probes = [t for name, t in started if name == "_probe_max_len"]
+    assert len(probes) == 1
+    assert not probes[0].is_alive()
+
+
 def test_shingle_rows_narrow_equals_window_form(spark, sf_dir):
     """The r12 zero-exchange shingle formulation (regexp lookahead +
     array_distinct, no doc_id window) must emit exactly the rows the

@@ -400,54 +400,66 @@ def test_batch_payload_probe_coalesces_null_columns(spark):
         spark.conf.set("spark.sql.shuffle.partitions", str(before))
 
 
-def test_manual_conf_write_adopted_as_base(spark, tmp_path):
-    """ADVICE r10 (medium): the r10 lower-toward-base behavior silently
-    reverted a user's manual mid-session conf raise. A write the hooks
-    did not make is now adopted as the NEW base — later derivations
-    floor at it instead of stomping it — while hook-ratcheted values
-    still release back to it."""
-    from gmall_flink_yb_spark import tuning
+def test_stream_sizing_stays_on_the_query_session(
+    spark, tmp_path, monkeypatch
+):
+    """A foreachBatch sink sizes the streaming query's cloned session:
+    the batch sees its sized value, the parent session stays at its base
+    during the stream and after it — so no sink needs a restore."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    small = str(tmp_path / "small.parquet")
-    spark.range(50).selectExpr(
-        "id AS doc_id", "concat('w', id) AS text"
-    ).write.parquet(small)
-    sdf = spark.read.parquet(small)
-    before = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    from gmall_flink_yb_spark import tuning
+    from gmall_flink_yb_spark.functions import dedup
+    from gmall_flink_yb_spark.streaming.pipelines import (
+        read_file_stream,
+        start_incremental_dedup_stream,
+    )
+
     base = tuning.session_base_partitions(spark)
-    try:
-        # a hook writes an explicit value...
-        tuning.auto_shuffle_partitions(sdf, 2.0, base + 7)
-        # ...then the USER raises manually (not through a hook)
-        spark.conf.set("spark.sql.shuffle.partitions", str(base + 50))
-        # the next derived call floors at the manual value (tiny file
-        # derives ~1, so the floor is what comes out) — not at the old
-        # base, and it does NOT revert the manual raise
-        assert tuning.auto_shuffle_partitions(sdf, 2.0, True) == base + 50
-        assert tuning.session_base_partitions(spark) == base + 50
-        # hook ratchets above the adopted base still release back to it
-        tuning.auto_shuffle_partitions(sdf, 2.0, base + 500)
-        assert (
-            int(spark.conf.get("spark.sql.shuffle.partitions"))
-            == base + 500
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) == base
+    seen = []
+    real = dedup.incremental_lsh_dedup
+
+    def spy(corpus, incoming, *args, **kwargs):
+        seen.append(
+            (
+                int(incoming.sparkSession.conf.get(
+                    "spark.sql.shuffle.partitions"
+                )),
+                int(spark.conf.get("spark.sql.shuffle.partitions")),
+            )
         )
-        assert tuning.auto_shuffle_partitions(sdf, 2.0, True) == base + 50
-        # restore_base_partitions returns to the ADOPTED base (the
-        # foreachBatch finally path, ADVICE r10 low: base, not snapshot)
-        tuning.auto_shuffle_partitions(sdf, 2.0, base + 300)
-        assert tuning.restore_base_partitions(spark) == base + 50
-        assert (
-            int(spark.conf.get("spark.sql.shuffle.partitions"))
-            == base + 50
+        return real(corpus, incoming, *args, **kwargs)
+
+    monkeypatch.setattr(dedup, "incremental_lsh_dedup", spy)
+    src = tmp_path / "incoming"
+    src.mkdir()
+    for i in range(2):  # two files, one availableNow batch each
+        f = src / f"{i:02d}.parquet"
+        pq.write_table(
+            pa.table({"doc_id": [i], "text": [f"document {i} on topic {i}"]}),
+            f,
         )
-        # a manual write with NO hook write on record is adopted too
-        spark.conf.unset(tuning._LAST_SIZED_KEY)
-        spark.conf.set("spark.sql.shuffle.partitions", str(base + 2))
-        assert tuning.session_base_partitions(spark) == base + 2
-    finally:
-        spark.conf.set(tuning._BASE_PARTITIONS_KEY, str(base))
-        spark.conf.set(tuning._LAST_SIZED_KEY, str(before))
-        spark.conf.set("spark.sql.shuffle.partitions", str(before))
+        os.utime(f, (1_700_000_000 + i * 10,) * 2)
+    stream = read_file_stream(
+        spark,
+        str(src),
+        "doc_id long, text string",
+        max_files_per_trigger=1,
+        glob="*.parquet",
+    )
+    q = start_incremental_dedup_stream(
+        spark,
+        stream,
+        str(tmp_path / "corpus"),
+        str(tmp_path / "ckpt"),
+        auto_partitions=base + 5,
+    )
+    q.awaitTermination(180)
+    assert q.exception() is None
+    assert seen == [(base + 5, base), (base + 5, base)]
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) == base
 
 
 def test_spread_file_scan_gates_and_identity(spark, tmp_path):

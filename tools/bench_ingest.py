@@ -31,7 +31,7 @@ production entry (``start_incremental_span_scrub_stream``) keeps the
 (``--index-reps`` salted replicas of the documents table), then sweep
 probe-batch sizes (``--sweep-mb``) under both plans, calling the batch
 function exactly as the stream wires it (sizing hook + _read_ingest_ref
-+ incremental_span_scrub + cleaned/grams writes + base restore). Output:
++ incremental_span_scrub + cleaned/grams writes). Output:
   {"index_bytes": B, "index_ghs": G, "sweep": [
     {"mb": M, "batch_bytes": b, "shuffle": [...], "broadcast": [...]}]}
 The crossover (where the broadcast arm stops winning) sets
@@ -179,7 +179,6 @@ def span_crossover(spark, args) -> None:
                     if cleaned is not None:
                         release_cache(cleaned)
                     incoming.unpersist()
-                    _tuning.restore_base_partitions(spark)
                 times[arm_name].append(
                     None if failed else round(time.time() - t0, 2)
                 )

@@ -163,14 +163,10 @@ def main() -> None:
     src = os.path.join(args.out, "backfill")
     if not os.path.isdir(src):  # reuse across per-arm processes
         src = build_backfill(spark, args.sf_dir, args.out, args.replicas)
-    base_parts = spark.conf.get("spark.sql.shuffle.partitions")
     for r in range(args.rounds):
         for guard in (False, True):
             if ("on" if guard else "off") not in arm_sel:
                 continue
-            # the operator raises partitions only UP; reset per arm so
-            # both arms start identical
-            spark.conf.set("spark.sql.shuffle.partitions", base_parts)
             row = run_arm_safe(
                 spark, src, args.out, guard,
                 f"{'on' if guard else 'off'}_{r}",

@@ -12,6 +12,7 @@ the arms instead of concentrating it in one query's samples.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import statistics
@@ -27,13 +28,12 @@ from gmall_flink_yb_spark.session import get_spark
 
 
 def main() -> None:
-    names = sys.argv[1].split(",")
-    runs = 5
-    for i, a in enumerate(sys.argv[2:], start=2):
-        if a == "--runs":
-            runs = int(sys.argv[i + 1])
-        elif a.startswith("--runs="):
-            runs = int(a.split("=", 1)[1])
+    ap = argparse.ArgumentParser(description=__doc__.split("\n", 1)[0])
+    ap.add_argument("queries", help="comma-separated registry names")
+    ap.add_argument("--runs", type=int, default=5)
+    args = ap.parse_args()
+    names = args.queries.split(",")
+    runs = args.runs
     unknown = [n for n in names if n not in QUERIES]
     if unknown:
         raise SystemExit(f"unknown queries: {unknown}")
