@@ -934,20 +934,23 @@ def build_srp_index(
     }
 
 
-def _vec_rows_estimate(df: DataFrame, dim: int) -> int | None:
-    """Order-of-magnitude vector row count for the pair-dedup plan gate:
-    parquet footer rows when the plan is row-preserving, else backing
-    FILE BYTES / (dim * 4) — an on-disk estimate of one compressed
-    vector row. Driver-side metadata only, never a job; ``None`` when
-    the frame has no file sources (the caller then takes the
-    bounded-worst-case plan). The gate's regimes differ by orders of
+def _vec_rows_estimate(
+    df: DataFrame, dim: int, rows_per_vec: int = 1
+) -> int | None:
+    """Order-of-magnitude vector count for the pair-dedup plan gate:
+    parquet footer rows / ``rows_per_vec`` when the plan is
+    row-preserving (a stored band index holds one row per band), else
+    backing FILE BYTES / (dim * 4) — an on-disk estimate of one
+    compressed vector row. Driver-side metadata only, never a job;
+    ``None`` when the frame has no file sources (the caller then takes
+    the bounded-worst-case plan). The gate's regimes differ by orders of
     magnitude, so byte-estimate slop (compression, derived frames
     re-reading one shared file) cannot flip a non-borderline choice."""
     from gmall_flink_yb_spark.tuning import file_backed_rows, input_file_bytes
 
     rows = file_backed_rows(df)
     if rows is not None:
-        return rows
+        return rows // rows_per_vec
     size = input_file_bytes(df)
     if size is None:
         return None
@@ -1057,7 +1060,9 @@ def incremental_cosine_dedup_indexed(
     # occurrence measured slower than the shuffle it saved. Both forms
     # score once per distinct pair — results are identical.
     n_inc_est = _vec_rows_estimate(incoming, dim)
-    n_idx_est = _vec_rows_estimate(index_buckets, dim)
+    # footer rows of a stored index are band rows; the in-plan wrapper's
+    # index is a derived frame, estimated from its raw vector files
+    n_idx_est = _vec_rows_estimate(index_buckets, dim, rows_per_vec=n_bands)
     use_attach = True
     if n_inc_est is not None and n_idx_est is not None:
         n_all = n_idx_est + n_inc_est

@@ -696,9 +696,13 @@ def write_kafka_dynamic_topic(
 
 
 # ---------------------------------------------------------------------------
-# Streaming corpus ingestion with incremental near-dup rejection — the
-# LLM-pipeline twin of the CDC router: every micro-batch of new documents is
-# audited against the already-curated corpus (plus itself) before admission.
+# Streaming corpus ingestion — the LLM-pipeline twin of the CDC router: every
+# micro-batch of new documents or vectors is audited against the
+# already-curated corpus (plus itself) before admission. The three streams
+# share one replay discipline, written once below: batch N overwrites only
+# its own ``ingest_batch=N`` partitions (``_write_ingest_partition``) and
+# reads only strictly smaller batch ids (``_read_ingest_ref``), so a
+# replayed batch never sees its own half-written attempt as reference.
 # ---------------------------------------------------------------------------
 
 
@@ -729,6 +733,114 @@ def _read_ingest_ref(
         return spark.createDataFrame([], empty_schema)
 
 
+def _write_ingest_partition(
+    df: DataFrame, base_dir: str, batch_id: int
+) -> None:
+    """Overwrite batch ``batch_id``'s partition of ``base_dir``: the only
+    place an ingest sink writes, so a replayed batch replaces exactly what
+    its earlier attempt wrote."""
+    df.write.mode("overwrite").parquet(
+        os.path.join(base_dir, f"ingest_batch={batch_id}")
+    )
+
+
+def _start_ingest_stream(
+    stream: DataFrame, checkpoint_dir: str, expansion: float,
+    payload_col: str, auto_partitions: bool | int,
+    body: Callable[[DataFrame, int], None],
+) -> StreamingQuery:
+    """Start ``stream`` availableNow with ``body(incoming, batch_id)`` as
+    its per-batch work. Each non-empty batch is persisted, its shuffle is
+    sized from its payload (``tuning.auto_shuffle_partitions_for_batch``,
+    on the query's own cloned session — a micro-batch frame is not
+    file-backed, so the operators' entry hooks no-op here), and it is
+    unpersisted whether the body succeeds or not."""
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.head(1):
+            return
+        incoming = batch_df.persist()
+        try:
+            _tuning.auto_shuffle_partitions_for_batch(
+                incoming, expansion, payload_col,
+                auto_partitions=auto_partitions,
+            )
+            body(incoming, batch_id)
+        finally:
+            incoming.unpersist()
+
+    return (
+        stream.writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+# stored band-index rows; the first column is the id both the index and
+# the audit's verdicts carry (cast to long, whatever the input id column)
+_LSH_INDEX_SCHEMA = "doc_id long, sig array<bigint>, band int, bucket string"
+_SRP_INDEX_SCHEMA = "id long, vec array<double>, band int, bucket long"
+
+
+def _admit_batch(
+    incoming: DataFrame, batch_id: int, corpus_dir: str, index_dir: str,
+    id_col: str, index_schema: str,
+    audit: Callable[[DataFrame], tuple[DataFrame, DataFrame]],
+) -> None:
+    """The admission body the MinHash and SRP ingests share: read the
+    band index below ``batch_id`` on the batch's session, ``audit(index)``
+    -> (verdicts, incoming band rows), then write the kept rows to the
+    corpus and the kept rows' band rows to the index."""
+    from gmall_flink_yb_spark.functions.cacheutil import release_cache
+
+    cols = [f.split()[0] for f in index_schema.split(", ")]
+    verdicts, inc_buckets = audit(
+        _read_ingest_ref(
+            incoming.sparkSession, index_dir, batch_id, cols, index_schema
+        )
+    )
+    # kept_ids feeds both writes: persisted so the band-join + window
+    # verdict subtree runs once per batch
+    kept_ids = (
+        verdicts.filter(F.col("keep") == 1)
+        .select(F.col(cols[0]).alias("_keep_id"))
+        .persist()
+    )
+    try:
+        kept = incoming.join(
+            kept_ids, F.col(id_col).cast("long") == F.col("_keep_id")
+        ).drop("_keep_id")
+        _write_ingest_partition(kept, corpus_dir, batch_id)
+        # rejected rows are not part of the future reference
+        kept_buckets = inc_buckets.join(
+            kept_ids, F.col(cols[0]) == F.col("_keep_id"), "left_semi"
+        )
+        _write_ingest_partition(kept_buckets, index_dir, batch_id)
+    finally:
+        kept_ids.unpersist()
+        release_cache(verdicts)  # the audit's persisted batch subtree
+
+
+def dedup_ingest_batch(
+    incoming: DataFrame, batch_id: int, corpus_dir: str, index_dir: str,
+    id_col: str = "doc_id", text_col: str = "text", threshold: float = 0.5,
+) -> None:
+    """One batch of :func:`start_incremental_dedup_stream` on an already
+    persisted and sized ``incoming`` frame."""
+    from gmall_flink_yb_spark.functions.dedup import (
+        incremental_lsh_dedup_indexed,
+    )
+
+    _admit_batch(
+        incoming, batch_id, corpus_dir, index_dir, id_col, _LSH_INDEX_SCHEMA,
+        lambda idx: incremental_lsh_dedup_indexed(
+            idx, incoming.select(id_col, text_col), id_col, text_col,
+            threshold=threshold, broadcast_incoming=True,
+        ),
+    )
+
+
 def start_incremental_dedup_stream(
     spark: SparkSession,
     docs_stream: DataFrame,
@@ -737,145 +849,84 @@ def start_incremental_dedup_stream(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.5,
-    index_dir: str | None = None,
+    *,
+    index_dir: str,
     auto_partitions: bool | int = True,
 ) -> StreamingQuery:
     """Admit new documents into a curated corpus, rejecting near-dups of
     anything already admitted (or of a smaller-id doc in the same batch).
 
-    ``auto_partitions`` sizes the shingle shuffle PER BATCH from the
-    batch's payload (``tuning.auto_shuffle_partitions_for_batch``,
-    SHINGLE_EXPANSION): micro-batch frames are not file-backed, so the
-    batch operator's entry hook no-ops inside foreachBatch and a giant
-    availableNow backfill batch would otherwise run at the session
-    default — the OOM regime the span-scrub stream measured at the
-    5M-doc tier (BASELINE.md round-9). Ordinary micro-batches derive
-    at-or-below the session floor and no-op. For a corpus-sized backlog
-    use :func:`backfill_corpus` (sizing bounds shuffle state, not the
-    batch's heap residency — the rate limit does that).
+    The corpus IS the output: ``corpus_dir/ingest_batch=N`` holds batch
+    N's admitted docs. The MinHash band-bucket index is persisted beside
+    it: ``index_dir/ingest_batch=N`` holds the (doc_id, sig, band,
+    bucket) rows of batch N's KEPT docs, and the audit joins the incoming
+    batch against that index, so admitted text is never re-shingled and
+    per-batch cost tracks batch size, not corpus size.
 
-    The corpus IS the output: ``corpus_dir/ingest_batch=N`` holds batch N's
-    admitted docs. Replay safety without a transaction log:
-    - each batch OVERWRITES only its own batchId-keyed partition, and
-    - the dedup reference reads strictly SMALLER batch ids, so a replayed
-      batch never sees its own half-written previous attempt as "corpus"
-      (which would reject every doc as a dup of itself).
-
-    With ``index_dir`` set, the MinHash band-bucket index IS persisted and
-    appended per batch — the 100 TB design: each batch writes its KEPT
-    docs' (doc_id, sig, band, bucket) rows to
-    ``index_dir/ingest_batch=N`` (same batchId-keyed replay discipline),
-    and the audit joins the incoming batch against the stored index, so
-    admitted documents' text is NEVER re-shingled and per-batch cost
-    tracks batch size, not corpus size. Without it, the reference index is
-    rebuilt from the corpus text each batch (same plan shape, fine for
-    small corpora; parity between the two modes is pytest-asserted).
+    Replay contract, without a transaction log:
+    - each batch OVERWRITES only its own ``ingest_batch=N`` partitions;
+    - the reference reads strictly SMALLER batch ids, and only a missing
+      directory (``PATH_NOT_FOUND``) falls back to an empty reference —
+      any other read error fails the batch for the checkpoint to retry;
+    - ``index_dir`` is required;
+    - shuffle sizing (``auto_partitions``, SHINGLE_EXPANSION) and every
+      reference read run on the batch's own session.
 
     Requires globally increasing doc ids across batches (ingest order =
-    greedy keep order). Mirrors the reference's idempotent-sink discipline
-    (BaseLogApp's batchId-keyed fanout above).
+    greedy keep order). For a corpus-sized backlog use
+    :func:`backfill_corpus`: sizing bounds shuffle state, not the batch's
+    heap residency — the rate limit does that. Mirrors the reference's
+    idempotent-sink discipline (BaseLogApp's batchId-keyed fanout above).
     """
+    return _start_ingest_stream(
+        docs_stream, checkpoint_dir, _tuning.SHINGLE_EXPANSION, text_col,
+        auto_partitions,
+        lambda incoming, batch_id: dedup_ingest_batch(
+            incoming, batch_id, corpus_dir, index_dir, id_col, text_col,
+            threshold,
+        ),
+    )
+
+
+def span_scrub_batch(
+    incoming: DataFrame, batch_id: int, corpus_dir: str, index_dir: str,
+    id_col: str = "doc_id", text_col: str = "text", n: int = 8,
+    hot_gram_guard: bool = False, broadcast_incoming: bool | str = "auto",
+    within_batch: bool = True, frozen_index: bool = False,
+) -> None:
+    """One batch of :func:`start_incremental_span_scrub_stream` on an
+    already persisted and sized ``incoming`` frame."""
     from gmall_flink_yb_spark.functions.cacheutil import release_cache
-    from gmall_flink_yb_spark.functions.dedup import (
-        incremental_lsh_dedup,
-        incremental_lsh_dedup_indexed,
+    from gmall_flink_yb_spark.functions.ngrams import incremental_span_scrub
+
+    session = incoming.sparkSession
+    if frozen_index:
+        # a precomputed read-only gram set: every batch probes the SAME
+        # reference, so a missing set is a usage error (no fallback); the
+        # pinned schema lets a zero-row set (no part files) read
+        seen = session.read.schema("gh string").parquet(index_dir)
+    else:
+        seen = _read_ingest_ref(
+            session, index_dir, batch_id, ["gh"], "gh string"
+        )
+    if broadcast_incoming == "auto":
+        size = _tuning.input_file_bytes(incoming)
+        broadcast_incoming = (
+            size is not None and size <= SPAN_BCAST_MAX_BATCH_BYTES
+        )
+    cleaned, batch_grams = incremental_span_scrub(
+        seen, incoming.select(id_col, text_col), id_col, text_col, n=n,
+        within_batch=within_batch, hot_gram_guard=hot_gram_guard,
+        broadcast_incoming=bool(broadcast_incoming),
     )
-
-    def _read_ref(base_dir: str, batch_id: int, cols: list[str], empty_schema):
-        return _read_ingest_ref(spark, base_dir, batch_id, cols, empty_schema)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
-        incoming = batch_df.persist()
-        # sizes the query's own cloned session (tuning module docstring)
-        try:
-            _tuning.auto_shuffle_partitions_for_batch(
-                incoming,
-                _tuning.SHINGLE_EXPANSION,
-                text_col,
-                auto_partitions=auto_partitions,
-            )
-            if index_dir is not None:
-                idx = _read_ref(
-                    index_dir,
-                    batch_id,
-                    ["doc_id", "sig", "band", "bucket"],
-                    "doc_id long, sig array<bigint>, band int, bucket string",
-                )
-                verdicts, inc_buckets = incremental_lsh_dedup_indexed(
-                    idx,
-                    incoming.select(id_col, text_col),
-                    id_col,
-                    text_col,
-                    threshold=threshold,
-                    broadcast_incoming=True,
-                )
-            else:
-                corpus = _read_ref(
-                    corpus_dir,
-                    batch_id,
-                    [id_col, text_col],
-                    incoming.select(id_col, text_col).schema,
-                )
-                verdicts = incremental_lsh_dedup(
-                    corpus,
-                    incoming.select(id_col, text_col),
-                    id_col,
-                    text_col,
-                    threshold=threshold,
-                    # micro-batch contract holds on this path: batches are
-                    # trigger-bounded, so shipping their band buckets to
-                    # the corpus index is the right plan
-                    broadcast_incoming=True,
-                )
-                inc_buckets = None
-            # verdicts schema is (doc_id, keep int, dup_of, est_jaccard)
-            # regardless of id_col (ids are cast to long inside the audit)
-            # persisted: kept_ids feeds TWO actions in indexed mode (the
-            # corpus write and the index write) — without this the whole
-            # band-join + window verdict subtree executes twice per batch
-            kept_ids = (
-                verdicts.filter(F.col("keep") == 1)
-                .select(F.col("doc_id").alias("_keep_id"))
-                .persist()
-            )
-            try:
-                kept = incoming.join(
-                    kept_ids,
-                    F.col(id_col).cast("long") == F.col("_keep_id"),
-                ).drop("_keep_id")
-                kept.write.mode("overwrite").parquet(
-                    os.path.join(corpus_dir, f"ingest_batch={batch_id}")
-                )
-                if inc_buckets is not None:
-                    # append ONLY kept docs' band rows: rejected docs are
-                    # not part of the future reference
-                    (
-                        inc_buckets.join(
-                            kept_ids,
-                            F.col("doc_id") == F.col("_keep_id"),
-                            "left_semi",
-                        )
-                        .write.mode("overwrite")
-                        .parquet(
-                            os.path.join(
-                                index_dir, f"ingest_batch={batch_id}"
-                            )
-                        )
-                    )
-            finally:
-                kept_ids.unpersist()
-                release_cache(verdicts)  # the batch's signature subtree
-        finally:
-            incoming.unpersist()
-
-    return (
-        docs_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    try:
+        _write_ingest_partition(cleaned, corpus_dir, batch_id)
+        if not frozen_index:
+            _write_ingest_partition(batch_grams, index_dir, batch_id)
+    finally:
+        # the hot-gram guard (when on) persists the batch's gram stream;
+        # a failed write must not leak one cached stream per retry
+        release_cache(cleaned)
 
 
 def start_incremental_span_scrub_stream(
@@ -898,139 +949,48 @@ def start_incremental_span_scrub_stream(
     maximal span whose n-grams repeat within the batch or were seen in any
     earlier batch, then written CLEANED to ``corpus_dir/ingest_batch=N``.
 
-    ``within_batch``/``frozen_index`` (r12, the :func:`exact_span_backfill`
-    machinery): ``within_batch=False`` drops the repeat-within-batch rule
-    (only index membership cuts — the surgical mode of
-    ``incremental_span_scrub``). ``frozen_index=True`` treats ``index_dir``
-    as a PRECOMPUTED read-only gram set: the whole directory is read as
-    the reference for every batch (plain parquet, schema pinned to
-    ``gh string`` so an empty set round-trips) and the per-batch gram
-    append is skipped — the index never grows, so batch outputs are
-    independent of batch order and count.
+    The seen-gram index is the persisted state: ``index_dir/
+    ingest_batch=N`` holds batch N's distinct md5 gram hashes of the
+    ORIGINAL text ("seen once" is what makes the next occurrence a
+    duplicate). The cleaned corpus cannot serve as the reference — a
+    within-batch duplicate is cut from ALL its positions, so only the
+    index remembers its grams. Fold old partitions with
+    :func:`compact_ingest_index` when the batch count grows unbounded.
 
-    ``hot_gram_guard`` defaults OFF here, unlike the batch operator: the
-    occurrence window partitions by the BATCH's grams, so its worst
-    partition is micro-batch-bounded by construction and the per-batch
-    profile job would be pure overhead (measured parity at 500k-doc
-    batches). Backfill guidance, measured at the 5M-doc tier
-    (BASELINE.md round-9): do NOT drain a corpus-sized backlog as ONE
-    availableNow batch — the batch persist + gram stream + window sort
-    stack in one JVM and OOM the default heap under EITHER guard setting
-    (partition sizing can't fix heap residency). The supported path is
-    :func:`backfill_corpus`, which derives a heap-bounded
-    ``maxFilesPerTrigger`` and drains in chunks (chunk-boundary
-    semantics are this stream's normal incremental semantics — a dup
-    pair split across chunks keeps the first copy). At large-chunk scale with
-    batch-universal boilerplate the guard is cheap insurance that trends
-    positive (775 vs 798 s at 8 x 625k-doc chunks); on a node with the
-    heap for the one-batch drain it is the difference that matters —
-    343.5 vs 589.1 s at 5M docs / 32g, a 1.71x win, the strongest in the
-    hatch family — so: enable for giant single-batch drains, leave off
-    for ordinary micro-batches.
+    Replay contract: each batch OVERWRITES only its own
+    ``ingest_batch=N`` partitions; the reference reads strictly SMALLER
+    batch ids, and only ``PATH_NOT_FOUND`` falls back to an empty
+    reference; ``index_dir`` is required; shuffle sizing
+    (``auto_partitions``, GRAM_EXPANSION) and the reference read run on
+    the batch's own session.
 
-    ``auto_partitions`` sizes the gram shuffle PER BATCH from the batch's
-    payload (``tuning.auto_shuffle_partitions_for_batch``): a micro-batch
-    frame is not file-backed, so the batch operator's entry hook no-ops
-    inside foreachBatch — and a giant availableNow backfill then runs the
-    occurrence window at the session default, which at the 5M-doc tier is
-    a JVM heap OOM, not a slowdown (BASELINE.md round-9: both guard arms
-    died at 32 partitions; sized, the guard-on arm completes). Ordinary
-    micro-batches derive at-or-below the session floor and no-op.
+    ``within_batch=False`` drops the repeat-within-batch rule (only index
+    membership cuts). ``frozen_index=True`` treats ``index_dir`` as a
+    PRECOMPUTED read-only gram set (:func:`exact_span_backfill`): the
+    whole directory is every batch's reference and nothing is appended,
+    so batch outputs do not depend on batch order or count.
 
-    The seen-gram index is the persisted state (``index_dir/
-    ingest_batch=N`` holds each batch's distinct md5 gram hashes of the
-    ORIGINAL text — "seen once" is what makes the next occurrence a
-    duplicate). Replay discipline is identical to
-    ``start_incremental_dedup_stream``: batchId-keyed partition
-    overwrites, reference reads strictly smaller batch ids, PATH_NOT_FOUND
-    (only) falls back to an empty reference. Unlike the LSH pipeline there
-    is no no-index mode: the cleaned corpus cannot serve as the gram
-    reference (a within-batch duplicate is cut from ALL its positions, so
-    its grams survive nowhere in the cleaned text — only the index
-    remembers them).
+    ``hot_gram_guard`` defaults OFF: the occurrence window partitions by
+    the BATCH's grams, so its worst partition is micro-batch-bounded and
+    the per-batch profile job is overhead. Enable it for giant
+    single-batch drains, where it measured 1.71x faster (BASELINE.md).
+    Do not drain a corpus-sized backlog as ONE availableNow batch — the
+    batch persist, gram stream and window sort stack in one JVM; use
+    :func:`backfill_corpus`, which drains in heap-bounded chunks.
 
-    Per-batch cost tracks batch size plus one index probe; admitted text
-    is never re-tokenized. 100 TB note: the index is append-only distinct
-    gram hashes — fold old partitions with ``compact_ingest_index`` (only
-    up to the last COMMITTED batch id) when batch count grows unbounded;
-    correctness only needs set membership.
-
-    ``broadcast_incoming`` (r11) controls the index-probe plan: True
-    narrows the seen index to the batch's grams via a broadcast
-    semi-join, so the index is SCANNED, never shuffled (see
-    ``incremental_span_scrub``); False keeps the shuffle plan. The
-    ``"auto"`` default enables it only when the batch is file-backed
-    AND small (scan bytes <= ``SPAN_BCAST_MAX_BATCH_BYTES``) — the
-    broadcast carries ~56 B per distinct batch gram (~28 MB per MB of
-    compressed batch text), so steady-state micro-batches qualify and
-    backfill-scale chunks keep the shuffle plan.
+    ``broadcast_incoming`` picks the index-probe plan: True narrows the
+    seen index to the batch's grams by a broadcast semi-join (the index
+    is scanned, never shuffled), False keeps the shuffle plan, and
+    ``"auto"`` broadcasts only a file-backed batch of at most
+    ``SPAN_BCAST_MAX_BATCH_BYTES`` scan bytes.
     """
-    from gmall_flink_yb_spark.functions.cacheutil import release_cache
-    from gmall_flink_yb_spark.functions.ngrams import incremental_span_scrub
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
-        incoming = batch_df.persist()
-        cleaned = None
-        try:
-            _tuning.auto_shuffle_partitions_for_batch(
-                incoming,
-                _tuning.GRAM_EXPANSION,
-                text_col,
-                auto_partitions=auto_partitions,
-            )
-            if frozen_index:
-                # precomputed read-only gram set: every batch probes the
-                # SAME reference; a missing/empty set is a usage error
-                # upstream, so no PATH_NOT_FOUND fallback here — but the
-                # pinned schema lets a zero-row set (no part files) read
-                seen = spark.read.schema("gh string").parquet(index_dir)
-            else:
-                seen = _read_ingest_ref(
-                    spark, index_dir, batch_id, ["gh"], "gh string"
-                )
-            if broadcast_incoming == "auto":
-                # file-backed AND small: the broadcast of the batch's
-                # distinct grams stays far under the adaptive-broadcast
-                # budget; unknown-size or backfill-scale batches keep
-                # the shuffle plan
-                b = _tuning.input_file_bytes(incoming)
-                bcast = b is not None and b <= SPAN_BCAST_MAX_BATCH_BYTES
-            else:
-                bcast = bool(broadcast_incoming)
-            cleaned, batch_grams = incremental_span_scrub(
-                seen,
-                incoming.select(id_col, text_col),
-                id_col,
-                text_col,
-                n=n,
-                within_batch=within_batch,
-                hot_gram_guard=hot_gram_guard,
-                broadcast_incoming=bcast,
-            )
-            cleaned.write.mode("overwrite").parquet(
-                os.path.join(corpus_dir, f"ingest_batch={batch_id}")
-            )
-            if not frozen_index:
-                batch_grams.write.mode("overwrite").parquet(
-                    os.path.join(index_dir, f"ingest_batch={batch_id}")
-                )
-        finally:
-            # the hatch (when enabled) persists the batch's gram stream;
-            # release in finally (ADVICE r8): a failed/interrupted batch
-            # write would otherwise leak one cached stream per retry on a
-            # long-lived stream. release_cache is safe to call twice, and
-            # the retried batch rebuilds its own plan from scratch.
-            if cleaned is not None:
-                release_cache(cleaned)
-            incoming.unpersist()
-
-    return (
-        docs_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _start_ingest_stream(
+        docs_stream, checkpoint_dir, _tuning.GRAM_EXPANSION, text_col,
+        auto_partitions,
+        lambda incoming, batch_id: span_scrub_batch(
+            incoming, batch_id, corpus_dir, index_dir, id_col, text_col, n,
+            hot_gram_guard, broadcast_incoming, within_batch, frozen_index,
+        ),
     )
 
 
@@ -1105,6 +1065,28 @@ def compact_ingest_index(
     return n
 
 
+def ann_ingest_batch(
+    incoming: DataFrame, batch_id: int, corpus_dir: str, index_dir: str,
+    id_col: str = "vec_id", vec_col: str = "embedding",
+    threshold: float = 0.95, n_bands: int = 4, n_planes: int = 8,
+    dim: int = 64,
+) -> None:
+    """One batch of :func:`start_incremental_ann_stream` on an already
+    persisted and sized ``incoming`` frame."""
+    from gmall_flink_yb_spark.functions.similarity import (
+        incremental_cosine_dedup_indexed,
+    )
+
+    _admit_batch(
+        incoming, batch_id, corpus_dir, index_dir, id_col, _SRP_INDEX_SCHEMA,
+        lambda idx: incremental_cosine_dedup_indexed(
+            idx, incoming.select(id_col, vec_col), id_col, vec_col,
+            threshold=threshold, n_bands=n_bands, n_planes=n_planes,
+            dim=dim, broadcast_incoming=True,
+        ),
+    )
+
+
 def start_incremental_ann_stream(
     spark: SparkSession,
     vecs_stream: DataFrame,
@@ -1113,7 +1095,8 @@ def start_incremental_ann_stream(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.95,
-    index_dir: str | None = None,
+    *,
+    index_dir: str,
     n_bands: int = 4,
     n_planes: int = 8,
     dim: int = 64,
@@ -1122,136 +1105,27 @@ def start_incremental_ann_stream(
     """Admit new embedding vectors into a curated corpus, rejecting
     near-dups (exact cosine >= ``threshold``) of anything already admitted
     or of a smaller-id vector in the same batch — the vector-space twin of
-    ``start_incremental_dedup_stream``, with the identical replay
-    discipline: batchId-keyed partition overwrites, reference reads
-    strictly smaller batch ids, PATH_NOT_FOUND (only) falls back to an
-    empty reference.
+    :func:`start_incremental_dedup_stream`.
 
-    With ``index_dir`` set, the SRP band-bucket index (id, vec, band,
-    bucket — ``similarity.srp_band_buckets`` rows) is persisted and
-    appended per batch, so admitted vectors are never re-hashed and
-    per-batch cost tracks batch size, not corpus size. Without it the
-    index is rebuilt from the stored corpus vectors each batch.
+    The SRP band-bucket index (id, vec, band, bucket —
+    ``similarity.srp_band_buckets`` rows of the KEPT vectors) is persisted
+    to ``index_dir/ingest_batch=N``, so admitted vectors are never
+    re-hashed and per-batch cost tracks batch size, not corpus size.
 
-    ``auto_partitions`` sizes the band shuffle PER BATCH from the batch's
-    payload (``tuning.auto_shuffle_partitions_for_batch``,
-    VECTOR_EXPANSION; vectors aren't strings, so the payload probe casts
-    to string — a ~2x over-count of the binary width, the AQE-coalesced
-    safe side) for the giant availableNow backfill case; ordinary
-    micro-batches derive at-or-below the session floor and no-op. For a
-    corpus-sized backlog use :func:`backfill_corpus` (sizing bounds
-    shuffle state, not the batch's heap residency — the rate limit
-    does that)."""
-    from gmall_flink_yb_spark.functions.cacheutil import release_cache
-    from gmall_flink_yb_spark.functions.similarity import (
-        incremental_cosine_dedup,
-        incremental_cosine_dedup_indexed,
-    )
-
-    def _read_ref(base_dir: str, batch_id: int, cols: list[str], empty_schema):
-        # same fail-open-only-on-PATH_NOT_FOUND contract as the dedup
-        # ingest: any other read error must fail the batch for replay
-        try:
-            return (
-                spark.read.option("basePath", base_dir)
-                .parquet(base_dir)
-                .filter(F.col("ingest_batch") < batch_id)
-                .select(*cols)
-            )
-        except AnalysisException as exc:
-            if "PATH_NOT_FOUND" not in str(exc):
-                raise
-            return spark.createDataFrame([], empty_schema)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
-        incoming = batch_df.persist()
-        try:
-            _tuning.auto_shuffle_partitions_for_batch(
-                incoming,
-                _tuning.VECTOR_EXPANSION,
-                vec_col,
-                auto_partitions=auto_partitions,
-            )
-            if index_dir is not None:
-                idx = _read_ref(
-                    index_dir,
-                    batch_id,
-                    ["id", "vec", "band", "bucket"],
-                    "id long, vec array<double>, band int, bucket long",
-                )
-                verdicts, inc_buckets = incremental_cosine_dedup_indexed(
-                    idx,
-                    incoming.select(id_col, vec_col),
-                    id_col,
-                    vec_col,
-                    threshold=threshold,
-                    n_bands=n_bands,
-                    n_planes=n_planes,
-                    dim=dim,
-                    broadcast_incoming=True,
-                )
-            else:
-                corpus = _read_ref(
-                    corpus_dir,
-                    batch_id,
-                    [id_col, vec_col],
-                    incoming.select(id_col, vec_col).schema,
-                )
-                verdicts = incremental_cosine_dedup(
-                    corpus,
-                    incoming.select(id_col, vec_col),
-                    id_col,
-                    vec_col,
-                    threshold=threshold,
-                    n_bands=n_bands,
-                    n_planes=n_planes,
-                    dim=dim,
-                    # micro-batch contract: trigger-bounded incoming side
-                    broadcast_incoming=True,
-                )
-                inc_buckets = None
-            # kept_ids feeds both writes in indexed mode — persist so the
-            # band-join + window verdict subtree runs once per batch
-            kept_ids = (
-                verdicts.filter(F.col("keep") == 1)
-                .select(F.col("id").alias("_keep_id"))
-                .persist()
-            )
-            try:
-                kept = incoming.join(
-                    kept_ids,
-                    F.col(id_col).cast("long") == F.col("_keep_id"),
-                ).drop("_keep_id")
-                kept.write.mode("overwrite").parquet(
-                    os.path.join(corpus_dir, f"ingest_batch={batch_id}")
-                )
-                if inc_buckets is not None:
-                    (
-                        inc_buckets.join(
-                            kept_ids,
-                            F.col("id") == F.col("_keep_id"),
-                            "left_semi",
-                        )
-                        .write.mode("overwrite")
-                        .parquet(
-                            os.path.join(
-                                index_dir, f"ingest_batch={batch_id}"
-                            )
-                        )
-                    )
-            finally:
-                kept_ids.unpersist()
-                release_cache(verdicts)  # the batch's vector subtree
-        finally:
-            incoming.unpersist()
-
-    return (
-        vecs_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    Replay contract: each batch OVERWRITES only its own
+    ``ingest_batch=N`` partitions; the reference reads strictly SMALLER
+    batch ids, and only ``PATH_NOT_FOUND`` falls back to an empty
+    reference; ``index_dir`` is required; shuffle sizing
+    (``auto_partitions``, VECTOR_EXPANSION) and the reference read run on
+    the batch's own session. For a corpus-sized backlog use
+    :func:`backfill_corpus`."""
+    return _start_ingest_stream(
+        vecs_stream, checkpoint_dir, _tuning.VECTOR_EXPANSION, vec_col,
+        auto_partitions,
+        lambda incoming, batch_id: ann_ingest_batch(
+            incoming, batch_id, corpus_dir, index_dir, id_col, vec_col,
+            threshold, n_bands, n_planes, dim,
+        ),
     )
 
 

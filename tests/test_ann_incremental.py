@@ -338,6 +338,48 @@ def test_file_backed_rows_guards_row_multiplying_plans(spark, tmp_path):
     assert _file_backed_rows(base.filter("id < 10")) == 100
 
 
+def test_stored_index_estimate_counts_vectors_not_band_rows(
+    spark, tmp_path, monkeypatch
+):
+    """The indexed form's plan gate sizes a STORED band index in vectors:
+    a 4-band index of N vectors holds 4N footer rows, and the gate's index
+    estimate must be N."""
+    from gmall_flink_yb_spark.functions import similarity
+
+    n = 24
+    vecs = spark.createDataFrame(
+        [(i, [float((i * 7 + j) % 5) + 0.1 for j in range(DIM)])
+         for i in range(n)],
+        SCHEMA,
+    )
+    srp_band_buckets(
+        vecs.select(
+            F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
+        ),
+        n_bands=4, n_planes=8, dim=DIM,
+    ).write.parquet(str(tmp_path / "index"))
+    vecs.filter(F.col("vec_id") < 3).withColumn(
+        "vec_id", F.col("vec_id") + 1000
+    ).write.parquet(str(tmp_path / "incoming"))
+    index = spark.read.parquet(str(tmp_path / "index"))
+    assert index.count() == 4 * n
+
+    real = similarity._vec_rows_estimate
+    estimates = []
+
+    def spy(df, *args, **kwargs):
+        estimates.append(real(df, *args, **kwargs))
+        return estimates[-1]
+
+    monkeypatch.setattr(similarity, "_vec_rows_estimate", spy)
+    verdicts, _ = incremental_cosine_dedup_indexed(
+        index, spark.read.parquet(str(tmp_path / "incoming")),
+        threshold=0.95, n_bands=4, n_planes=8, dim=DIM,
+    )
+    release_cache(verdicts)
+    assert estimates == [3, n]  # incoming, then the index
+
+
 def test_srp_band_buckets_auto_warns_and_stamps_resolved_p(spark):
     """ADVICE r8: a DIRECT srp_band_buckets(n_planes='auto') call — the
     rows that may feed a persisted index — warns about the on-disk P

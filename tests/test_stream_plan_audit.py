@@ -2,12 +2,11 @@
 
 ``test_plan_audit.py`` mechanically audits the 119 batch queries; the
 incremental dedup / ANN / span-scrub streams' PER-BATCH plans were only
-asserted by targeted tests. These tests invoke the underlying batch
-functions exactly as the streams wire them — file-backed incoming batch,
-reference read through ``_read_ingest_ref``'s basePath-partitioned scan,
-the same flag values the stream bodies pass (including BOTH
-``broadcast_incoming`` arms of the span scrub) — and assert the same
-non-negotiables over the resulting plans:
+asserted by targeted tests. These tests call the sinks' own per-batch
+bodies (``dedup_ingest_batch``, ``ann_ingest_batch``,
+``span_scrub_batch``) on a file-backed incoming batch, capture the frames
+they hand to ``_write_ingest_partition`` and assert the same
+non-negotiables over those frames' plans:
 
 - no ``CartesianProduct`` (quadratic pair join),
 - no ``BatchEvalPython`` (row-at-a-time Python; Arrow paths are fine),
@@ -23,18 +22,14 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from gmall_flink_yb_spark.functions.dedup import (
-    incremental_lsh_dedup,
-    incremental_lsh_dedup_indexed,
-)
-from gmall_flink_yb_spark.functions.ngrams import incremental_span_scrub
-from gmall_flink_yb_spark.functions.similarity import (
-    incremental_cosine_dedup,
-    incremental_cosine_dedup_indexed,
-)
 from gmall_flink_yb_spark.plans.inspect import _simple_plan
 from gmall_flink_yb_spark.sources.readers import read_table
-from gmall_flink_yb_spark.streaming.pipelines import _read_ingest_ref
+from gmall_flink_yb_spark.streaming import pipelines
+from gmall_flink_yb_spark.streaming.pipelines import (
+    ann_ingest_batch,
+    dedup_ingest_batch,
+    span_scrub_batch,
+)
 
 
 def _audit(name: str, *frames) -> str:
@@ -46,150 +41,76 @@ def _audit(name: str, *frames) -> str:
     return joined
 
 
+def _written(monkeypatch, body, *args, **kwargs) -> list:
+    """Run a sink body without writing; the frames it would write."""
+    frames = []
+    monkeypatch.setattr(
+        pipelines, "_write_ingest_partition",
+        lambda df, base_dir, batch_id: frames.append(df),
+    )
+    body(*args, **kwargs)
+    return frames
+
+
 @pytest.fixture(scope="module")
 def stream_dirs(spark, sf_dir, tmp_path_factory):
-    """Batch-0 outputs persisted the way the streams persist them: docs
-    and embeddings split into two file-backed batches, batch 0's index /
-    corpus / gram partitions written under ``ingest_batch=0``."""
+    """Docs and embeddings split into two file-backed batches; batch 0 is
+    admitted through the sinks' own bodies, so the batch-1 audits read a
+    reference the streams wrote."""
     root = str(tmp_path_factory.mktemp("stream_plan_audit"))
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     vecs = read_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    d = {}
+    d = {"root": root}
     for name, df, idc in (("docs", docs, "doc_id"), ("vecs", vecs, "vec_id")):
         b0 = os.path.join(root, f"{name}_b0")
         b1 = os.path.join(root, f"{name}_b1")
         df.filter(F.col(idc) % 2 == 0).write.parquet(b0)
         df.filter(F.col(idc) % 2 == 1).write.parquet(b1)
         d[f"{name}_b0"], d[f"{name}_b1"] = b0, b1
+    for key in ("lsh", "srp", "gh"):
+        d[f"{key}_corpus"] = os.path.join(root, f"{key}_corpus")
+        d[f"{key}_index"] = os.path.join(root, f"{key}_index")
     b0_docs = spark.read.parquet(d["docs_b0"])
-    b0_vecs = spark.read.parquet(d["vecs_b0"])
-
-    # dedup index: batch 0's band buckets against an empty reference
-    empty_lsh = spark.createDataFrame(
-        [], "doc_id long, sig array<bigint>, band int, bucket string"
+    dedup_ingest_batch(b0_docs, 0, d["lsh_corpus"], d["lsh_index"])
+    ann_ingest_batch(
+        spark.read.parquet(d["vecs_b0"]), 0, d["srp_corpus"], d["srp_index"]
     )
-    _, lsh_buckets = incremental_lsh_dedup_indexed(
-        empty_lsh, b0_docs, "doc_id", "text", threshold=0.5,
-        broadcast_incoming=True,
-    )
-    d["lsh_index"] = os.path.join(root, "lsh_index")
-    lsh_buckets.write.parquet(
-        os.path.join(d["lsh_index"], "ingest_batch=0")
-    )
-
-    # ANN index: batch 0's SRP band rows
-    empty_srp = spark.createDataFrame(
-        [], "id long, vec array<double>, band int, bucket long"
-    )
-    _, srp_buckets = incremental_cosine_dedup_indexed(
-        empty_srp, b0_vecs, "vec_id", "embedding", threshold=0.95,
-        broadcast_incoming=True,
-    )
-    d["srp_index"] = os.path.join(root, "srp_index")
-    srp_buckets.write.parquet(
-        os.path.join(d["srp_index"], "ingest_batch=0")
-    )
-
-    # span gram index: batch 0's distinct ghs
-    empty_gh = spark.createDataFrame([], "gh string")
-    _, ghs = incremental_span_scrub(
-        empty_gh, b0_docs, "doc_id", "text", hot_gram_guard=False
-    )
-    d["gh_index"] = os.path.join(root, "gh_index")
-    ghs.write.parquet(os.path.join(d["gh_index"], "ingest_batch=0"))
-
-    # corpus dir for the rebuild modes (admitted batch-0 docs/vecs)
-    d["docs_corpus"] = os.path.join(root, "docs_corpus")
-    b0_docs.write.parquet(os.path.join(d["docs_corpus"], "ingest_batch=0"))
-    d["vecs_corpus"] = os.path.join(root, "vecs_corpus")
-    b0_vecs.write.parquet(os.path.join(d["vecs_corpus"], "ingest_batch=0"))
+    span_scrub_batch(b0_docs, 0, d["gh_corpus"], d["gh_index"])
     return d
 
 
-def test_dedup_indexed_batch_plan(spark, stream_dirs):
-    incoming = spark.read.parquet(stream_dirs["docs_b1"])
-    idx = _read_ingest_ref(
-        spark, stream_dirs["lsh_index"], 1,
-        ["doc_id", "sig", "band", "bucket"],
-        "doc_id long, sig array<bigint>, band int, bucket string",
+def test_dedup_indexed_batch_plan(spark, stream_dirs, monkeypatch):
+    frames = _written(
+        monkeypatch, dedup_ingest_batch,
+        spark.read.parquet(stream_dirs["docs_b1"]), 1,
+        stream_dirs["lsh_corpus"], stream_dirs["lsh_index"],
     )
-    verdicts, inc_buckets = incremental_lsh_dedup_indexed(
-        idx, incoming.select("doc_id", "text"), "doc_id", "text",
-        threshold=0.5, broadcast_incoming=True,
-    )
-    kept_ids = verdicts.filter(F.col("keep") == 1).select(
-        F.col("doc_id").alias("_keep_id")
-    )
-    kept = incoming.join(
-        kept_ids, F.col("doc_id").cast("long") == F.col("_keep_id")
-    ).drop("_keep_id")
-    idx_rows = inc_buckets.join(
-        kept_ids, F.col("doc_id") == F.col("_keep_id"), "left_semi"
-    )
-    _audit("dedup_indexed", kept, idx_rows)
+    assert len(frames) == 2  # corpus rows, then index rows
+    _audit("dedup_indexed", *frames)
 
 
-def test_dedup_rebuild_batch_plan(spark, stream_dirs):
-    incoming = spark.read.parquet(stream_dirs["docs_b1"])
-    corpus = _read_ingest_ref(
-        spark, stream_dirs["docs_corpus"], 1, ["doc_id", "text"],
-        "doc_id long, text string",
+def test_ann_indexed_batch_plan(spark, stream_dirs, monkeypatch):
+    frames = _written(
+        monkeypatch, ann_ingest_batch,
+        spark.read.parquet(stream_dirs["vecs_b1"]), 1,
+        stream_dirs["srp_corpus"], stream_dirs["srp_index"],
     )
-    verdicts = incremental_lsh_dedup(
-        corpus, incoming.select("doc_id", "text"), "doc_id", "text",
-        threshold=0.5, broadcast_incoming=True,
-    )
-    _audit("dedup_rebuild", verdicts)
-
-
-def test_ann_indexed_batch_plan(spark, stream_dirs):
-    incoming = spark.read.parquet(stream_dirs["vecs_b1"])
-    idx = _read_ingest_ref(
-        spark, stream_dirs["srp_index"], 1, ["id", "vec", "band", "bucket"],
-        "id long, vec array<double>, band int, bucket long",
-    )
-    verdicts, inc_buckets = incremental_cosine_dedup_indexed(
-        idx, incoming.select("vec_id", "embedding"), "vec_id", "embedding",
-        threshold=0.95, broadcast_incoming=True,
-    )
-    kept_ids = verdicts.filter(F.col("keep") == 1).select(
-        F.col("id").alias("_keep_id")
-    )
-    kept = incoming.join(
-        kept_ids, F.col("vec_id").cast("long") == F.col("_keep_id")
-    ).drop("_keep_id")
-    idx_rows = inc_buckets.join(
-        kept_ids, F.col("id") == F.col("_keep_id"), "left_semi"
-    )
-    _audit("ann_indexed", kept, idx_rows)
-
-
-def test_ann_rebuild_batch_plan(spark, stream_dirs):
-    incoming = spark.read.parquet(stream_dirs["vecs_b1"])
-    corpus = _read_ingest_ref(
-        spark, stream_dirs["vecs_corpus"], 1, ["vec_id", "embedding"],
-        "vec_id long, embedding array<double>",
-    )
-    verdicts = incremental_cosine_dedup(
-        corpus, incoming.select("vec_id", "embedding"), "vec_id",
-        "embedding", threshold=0.95, broadcast_incoming=True,
-    )
-    _audit("ann_rebuild", verdicts)
+    assert len(frames) == 2
+    _audit("ann_indexed", *frames)
 
 
 @pytest.mark.parametrize("bcast", [False, True])
-def test_span_scrub_batch_plan(spark, stream_dirs, bcast):
-    incoming = spark.read.parquet(stream_dirs["docs_b1"])
-    seen = _read_ingest_ref(
-        spark, stream_dirs["gh_index"], 1, ["gh"], "gh string"
+def test_span_scrub_batch_plan(spark, stream_dirs, bcast, monkeypatch):
+    frames = _written(
+        monkeypatch, span_scrub_batch,
+        spark.read.parquet(stream_dirs["docs_b1"]), 1,
+        stream_dirs["gh_corpus"], stream_dirs["gh_index"],
+        broadcast_incoming=bcast,
     )
-    cleaned, grams = incremental_span_scrub(
-        seen, incoming.select("doc_id", "text"), "doc_id", "text",
-        hot_gram_guard=False, broadcast_incoming=bcast,
-    )
-    joined = _audit(f"span_scrub bcast={bcast}", cleaned, grams)
+    assert len(frames) == 2  # cleaned docs, then the batch's grams
+    joined = _audit(f"span_scrub bcast={bcast}", *frames)
     if bcast:
         # the r11 structural fix: the index is narrowed to the batch's
         # grams by a BROADCAST semi-join, so the index side is scanned,
@@ -199,19 +120,21 @@ def test_span_scrub_batch_plan(spark, stream_dirs, bcast):
         )
 
 
-def test_span_scrub_frozen_surgical_batch_plan(spark, stream_dirs):
+def test_span_scrub_frozen_surgical_batch_plan(
+    spark, stream_dirs, monkeypatch
+):
     """The exact_span_backfill chunk body (r12): frozen dup-gram set,
     ``within_batch=False`` — membership semi-join only, no occurrence
     window, same non-negotiables."""
-    incoming = spark.read.parquet(stream_dirs["docs_b1"])
-    seen = spark.read.schema("gh string").parquet(
-        os.path.join(stream_dirs["gh_index"], "ingest_batch=0")
+    frames = _written(
+        monkeypatch, span_scrub_batch,
+        spark.read.parquet(stream_dirs["docs_b1"]), 1,
+        os.path.join(stream_dirs["root"], "frozen_corpus"),
+        os.path.join(stream_dirs["gh_index"], "ingest_batch=0"),
+        within_batch=False, frozen_index=True,
     )
-    cleaned, _ = incremental_span_scrub(
-        seen, incoming.select("doc_id", "text"), "doc_id", "text",
-        within_batch=False, hot_gram_guard=False,
-    )
-    joined = _audit("span_scrub frozen surgical", cleaned)
+    assert len(frames) == 1  # a frozen index is never appended to
+    joined = _audit("span_scrub frozen surgical", *frames)
     # the surgical mode must cut by membership: no gh-partitioned
     # occurrence-count window (the doc_id-partitioned island-merge
     # windows of _island_spans are legitimate and remain)

@@ -712,6 +712,7 @@ def test_incremental_dedup_stream(spark, tmp_path):
         str(tmp_path / "corpus"),
         str(tmp_path / "ckpt"),
         threshold=0.5,
+        index_dir=str(tmp_path / "index"),
     )
     q.awaitTermination(180)
     admitted = sorted(
@@ -1007,12 +1008,13 @@ def test_incremental_dedup_stream_survives_restart(spark, tmp_path):
         )
 
     corpus, ckpt = str(tmp_path / "corpus"), str(tmp_path / "ckpt")
+    index = str(tmp_path / "index")
     _drop(0, b1)
     q1 = start_incremental_dedup_stream(
         spark,
         read_file_stream(spark, str(src), schema, max_files_per_trigger=1,
                          glob="*.parquet"),
-        corpus, ckpt, threshold=0.5,
+        corpus, ckpt, threshold=0.5, index_dir=index,
     )
     q1.awaitTermination(120)  # availableNow: terminates after file 00
     assert sorted(
@@ -1024,7 +1026,7 @@ def test_incremental_dedup_stream_survives_restart(spark, tmp_path):
         spark,
         read_file_stream(spark, str(src), schema, max_files_per_trigger=1,
                          glob="*.parquet"),
-        corpus, ckpt, threshold=0.5,
+        corpus, ckpt, threshold=0.5, index_dir=index,
     )
     q2.awaitTermination(120)
     out = spark.read.parquet(corpus)
@@ -1446,8 +1448,8 @@ def test_dim_upsert_migrates_legacy_flat_layout(spark, tmp_path):
     assert got == {"1": "a", "2": "b2"}
 
 
-def _stage_doc_batches(spark, tmp_path, name, batches):
-    schema = StructType(
+def _stage_doc_batches(spark, tmp_path, name, batches, schema=None):
+    schema = schema or StructType(
         [StructField("doc_id", LongType()), StructField("text", StringType())]
     )
     src = tmp_path / name
@@ -1491,50 +1493,49 @@ _INGEST_B3 = [
 def test_incremental_dedup_stream_with_persisted_index(spark, tmp_path):
     """The 100 TB ingest shape: the MinHash band-bucket index is persisted
     per batch and the audit reads IT, not the corpus text. Admissions must
-    be identical to the rebuild-from-text mode on the same batches, and
-    the index must hold exactly the admitted docs' band rows."""
+    equal ``incremental_lsh_dedup`` replayed batch by batch over the
+    admitted docs' text, and the index must hold exactly the admitted
+    docs' band rows."""
+    from gmall_flink_yb_spark.functions.dedup import incremental_lsh_dedup
     from gmall_flink_yb_spark.streaming.pipelines import (
         read_file_stream,
         start_incremental_dedup_stream,
     )
 
     batches = [_INGEST_B1, _INGEST_B2, _INGEST_B3]
-    src_a, schema = _stage_doc_batches(spark, tmp_path, "in_a", batches)
-    src_b, _ = _stage_doc_batches(spark, tmp_path, "in_b", batches)
-
-    # mode A: rebuild-from-text (round-3 behavior)
+    src, schema = _stage_doc_batches(spark, tmp_path, "in", batches)
     q = start_incremental_dedup_stream(
         spark,
-        read_file_stream(spark, src_a, schema, max_files_per_trigger=1,
+        read_file_stream(spark, src, schema, max_files_per_trigger=1,
                          glob="*.parquet"),
-        str(tmp_path / "corpus_a"),
-        str(tmp_path / "ckpt_a"),
+        str(tmp_path / "corpus"),
+        str(tmp_path / "ckpt"),
         threshold=0.5,
-    )
-    q.awaitTermination(180)
-    # mode B: persisted index
-    q = start_incremental_dedup_stream(
-        spark,
-        read_file_stream(spark, src_b, schema, max_files_per_trigger=1,
-                         glob="*.parquet"),
-        str(tmp_path / "corpus_b"),
-        str(tmp_path / "ckpt_b"),
-        threshold=0.5,
-        index_dir=str(tmp_path / "index_b"),
+        index_dir=str(tmp_path / "index"),
     )
     q.awaitTermination(180)
 
-    admitted_a = sorted(
+    # the batch wrapper rebuilds the reference from the admitted text
+    kept: list[tuple] = []
+    for rows in batches:
+        verdicts = incremental_lsh_dedup(
+            spark.createDataFrame(kept, schema),
+            spark.createDataFrame(rows, schema),
+            "doc_id", "text", threshold=0.5, broadcast_incoming=True,
+        )
+        keep = {
+            r["doc_id"]
+            for r in verdicts.filter(F.col("keep") == 1).collect()
+        }
+        kept.extend(r for r in rows if r[0] in keep)
+    admitted = sorted(
         r["doc_id"]
-        for r in spark.read.parquet(str(tmp_path / "corpus_a")).collect()
+        for r in spark.read.parquet(str(tmp_path / "corpus")).collect()
     )
-    admitted_b = sorted(
-        r["doc_id"]
-        for r in spark.read.parquet(str(tmp_path / "corpus_b")).collect()
-    )
-    assert admitted_b == admitted_a == [1, 2, 4, 7]  # 3,5 dups; 6 near-dups 2
+    # 3,5 dups; 6 near-dups 2
+    assert admitted == sorted(r[0] for r in kept) == [1, 2, 4, 7]
 
-    idx = spark.read.parquet(str(tmp_path / "index_b"))
+    idx = spark.read.parquet(str(tmp_path / "index"))
     # index holds band rows for exactly the admitted docs, batch-keyed
     assert sorted(
         r["doc_id"] for r in idx.select("doc_id").distinct().collect()
@@ -1556,8 +1557,8 @@ def test_indexed_ingest_never_rereads_corpus_text(spark, tmp_path):
     batches audit WITHOUT the admitted docs\' text. Proven by replacing the
     corpus partitions with text-free stubs between micro-batch runs (same
     checkpoint, new file arrives) — the indexed ingest still rejects the
-    cross-batch near-dup; the rebuild mode could not have (its reference
-    text is gone)."""
+    cross-batch near-dup; an audit that re-read the corpus could not have
+    (its reference text is gone)."""
     import shutil
 
     from gmall_flink_yb_spark.streaming.pipelines import (
@@ -1626,6 +1627,147 @@ def test_indexed_ingest_never_rereads_corpus_text(spark, tmp_path):
     # doc 3 (near-dup of admitted doc 1) rejected via the index alone;
     # doc 5 rejected as the in-batch dup of 4
     assert admitted == [4]
+
+
+# sink -> (batch schema, two batches of rows, starter keywords, corpus and
+# index id columns for audit_ingest_consistency, or None for the scrub)
+_CRASH_SINKS = {
+    "dedup": (
+        "doc_id long, text string", [_INGEST_B1, _INGEST_B2],
+        {"threshold": 0.5}, ("doc_id", "doc_id"),
+    ),
+    "ann": (
+        "vec_id long, embedding array<double>",
+        [
+            [(1, [1.0, 0.0, 0.0, 0.1]), (2, [0.0, 1.0, 0.2, 0.0])],
+            [
+                (3, [1.01, 0.0, 0.0, 0.1]),   # dup of 1
+                (4, [0.0, 0.0, 1.0, 0.3]),
+                (5, [0.0, 0.0, 1.0, 0.31]),   # in-batch dup of 4
+            ],
+        ],
+        {"threshold": 0.95, "dim": 4}, ("vec_id", "id"),
+    ),
+    "span": (
+        "doc_id long, text string",
+        [
+            [(1, "alpha beta gamma delta epsilon zeta eta theta"),
+             (2, "one two three four five six")],
+            [(3, "x y alpha beta gamma delta epsilon z"),
+             (4, "seven eight nine ten eleven twelve")],
+        ],
+        {"n": 4}, None,
+    ),
+}
+# crash point -> (which of batch 1's two writes, raise after writing it)
+_CRASH_POINTS = {
+    "before_first_write": (1, False),
+    "between_writes": (2, False),
+    "after_second_write": (2, True),
+}
+
+
+def _ingest_rows(spark, path):
+    return sorted(
+        (
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in spark.read.parquet(path).collect()
+        ),
+        key=repr,
+    )
+
+
+def _run_ingest_sink(spark, sink, src, out):
+    from gmall_flink_yb_spark.streaming import pipelines
+
+    schema, _, kwargs, _ = _CRASH_SINKS[sink]
+    starter = {
+        "dedup": pipelines.start_incremental_dedup_stream,
+        "ann": pipelines.start_incremental_ann_stream,
+        "span": pipelines.start_incremental_span_scrub_stream,
+    }[sink]
+    return starter(
+        spark,
+        pipelines.read_file_stream(
+            spark, src, schema, max_files_per_trigger=1, glob="*.parquet"
+        ),
+        os.path.join(out, "corpus"),
+        os.path.join(out, "ckpt"),
+        index_dir=os.path.join(out, "index"),
+        **kwargs,
+    )
+
+
+@pytest.fixture(scope="module")
+def uninterrupted_ingest(spark, tmp_path_factory):
+    """sink -> (staged source dir, corpus rows, index rows) of a run with
+    no crash, computed once per sink."""
+    done = {}
+
+    def get(sink):
+        if sink not in done:
+            root = tmp_path_factory.mktemp(f"ingest_{sink}")
+            schema, batches, _, _ = _CRASH_SINKS[sink]
+            src, _ = _stage_doc_batches(spark, root, "src", batches, schema)
+            out = str(root / "out")
+            q = _run_ingest_sink(spark, sink, src, out)
+            q.awaitTermination(180)
+            assert q.exception() is None
+            done[sink] = (
+                src,
+                _ingest_rows(spark, os.path.join(out, "corpus")),
+                _ingest_rows(spark, os.path.join(out, "index")),
+            )
+        return done[sink]
+
+    return get
+
+
+@pytest.mark.parametrize("point", list(_CRASH_POINTS))
+@pytest.mark.parametrize("sink", list(_CRASH_SINKS))
+def test_ingest_sink_replays_crash_at_every_write_point(
+    spark, tmp_path, monkeypatch, uninterrupted_ingest, sink, point
+):
+    """Exactly-once under replay: kill batch 1 of an ingest sink before,
+    between or after its two partition writes, restart the query on the
+    same checkpoint, and the corpus and the index equal an uninterrupted
+    run's; for the admission sinks the corpus<->index audit is empty."""
+    from pyspark.errors import StreamingQueryException
+
+    from gmall_flink_yb_spark.streaming import pipelines
+
+    src, want_corpus, want_index = uninterrupted_ingest(sink)
+    real = pipelines._write_ingest_partition
+    crash_at, after = _CRASH_POINTS[point]
+    writes = []
+
+    def flaky(df, base_dir, batch_id):
+        if batch_id == 1:
+            writes.append(base_dir)
+            if len(writes) == crash_at:
+                if after:
+                    real(df, base_dir, batch_id)
+                raise RuntimeError(f"injected crash {point}")
+        real(df, base_dir, batch_id)
+
+    monkeypatch.setattr(pipelines, "_write_ingest_partition", flaky)
+    out = str(tmp_path / "out")
+    q = _run_ingest_sink(spark, sink, src, out)
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        q.awaitTermination(180)
+    assert len(writes) == crash_at
+    q = _run_ingest_sink(spark, sink, src, out)  # same checkpoint
+    q.awaitTermination(180)
+    assert q.exception() is None
+    assert _ingest_rows(spark, os.path.join(out, "corpus")) == want_corpus
+    assert _ingest_rows(spark, os.path.join(out, "index")) == want_index
+    ids = _CRASH_SINKS[sink][3]
+    if ids is not None:
+        audit = pipelines.audit_ingest_consistency(
+            spark, os.path.join(out, "corpus"), os.path.join(out, "index"),
+            corpus_id_col=ids[0], index_id_col=ids[1],
+        )
+        assert audit.count() == 0
 
 
 def test_keyword_zh_segmenter_stream_matches_batch(spark, tmp_path):

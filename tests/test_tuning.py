@@ -5,6 +5,9 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
+from gmall_flink_yb_spark.functions import dedup, ngrams, similarity
 from gmall_flink_yb_spark.tuning import (
     GRAM_EXPANSION,
     PARTITIONS_MAX,
@@ -400,65 +403,84 @@ def test_batch_payload_probe_coalesces_null_columns(spark):
         spark.conf.set("spark.sql.shuffle.partitions", str(before))
 
 
+# sink -> (module and name of the audit/scrub function its body calls,
+# batch schema, one row per batch id, stream starter)
+_INGEST_SINKS = {
+    "dedup": (
+        dedup, "incremental_lsh_dedup_indexed", "doc_id long, text string",
+        lambda i: {"doc_id": [i], "text": [f"document {i} on topic {i}"]},
+        "start_incremental_dedup_stream",
+    ),
+    "ann": (
+        similarity, "incremental_cosine_dedup_indexed",
+        "vec_id long, embedding array<double>",
+        lambda i: {"vec_id": [i], "embedding": [[1.0 + i, 2.0, 0.5, 0.0]]},
+        "start_incremental_ann_stream",
+    ),
+    "span": (
+        ngrams, "incremental_span_scrub", "doc_id long, text string",
+        lambda i: {"doc_id": [i], "text": [f"document {i} on topic {i}"]},
+        "start_incremental_span_scrub_stream",
+    ),
+}
+
+
+@pytest.mark.parametrize("sink", sorted(_INGEST_SINKS))
 def test_stream_sizing_stays_on_the_query_session(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, sink
 ):
-    """A foreachBatch sink sizes the streaming query's cloned session:
-    the batch sees its sized value, the parent session stays at its base
-    during the stream and after it — so no sink needs a restore."""
+    """A foreachBatch sink sizes the streaming query's cloned session and
+    plans the whole batch there: the audit/scrub function sees the sized
+    value on BOTH its reference and its incoming frame, while the parent
+    session stays at its base during the stream and after it — so no
+    sink needs a restore."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from gmall_flink_yb_spark import tuning
-    from gmall_flink_yb_spark.functions import dedup
-    from gmall_flink_yb_spark.streaming.pipelines import (
-        read_file_stream,
-        start_incremental_dedup_stream,
-    )
+    from gmall_flink_yb_spark.streaming import pipelines
 
+    module, fn_name, schema, row, starter = _INGEST_SINKS[sink]
     base = tuning.session_base_partitions(spark)
     assert int(spark.conf.get("spark.sql.shuffle.partitions")) == base
     seen = []
-    real = dedup.incremental_lsh_dedup
+    real = getattr(module, fn_name)
 
-    def spy(corpus, incoming, *args, **kwargs):
+    def parts(session):
+        return int(session.conf.get("spark.sql.shuffle.partitions"))
+
+    def spy(reference, incoming, *args, **kwargs):
         seen.append(
             (
-                int(incoming.sparkSession.conf.get(
-                    "spark.sql.shuffle.partitions"
-                )),
-                int(spark.conf.get("spark.sql.shuffle.partitions")),
+                parts(reference.sparkSession),
+                parts(incoming.sparkSession),
+                parts(spark),
             )
         )
-        return real(corpus, incoming, *args, **kwargs)
+        return real(reference, incoming, *args, **kwargs)
 
-    monkeypatch.setattr(dedup, "incremental_lsh_dedup", spy)
+    monkeypatch.setattr(module, fn_name, spy)
     src = tmp_path / "incoming"
     src.mkdir()
     for i in range(2):  # two files, one availableNow batch each
         f = src / f"{i:02d}.parquet"
-        pq.write_table(
-            pa.table({"doc_id": [i], "text": [f"document {i} on topic {i}"]}),
-            f,
-        )
+        pq.write_table(pa.table(row(i)), f)
         os.utime(f, (1_700_000_000 + i * 10,) * 2)
-    stream = read_file_stream(
-        spark,
-        str(src),
-        "doc_id long, text string",
-        max_files_per_trigger=1,
-        glob="*.parquet",
+    stream = pipelines.read_file_stream(
+        spark, str(src), schema, max_files_per_trigger=1, glob="*.parquet"
     )
-    q = start_incremental_dedup_stream(
+    q = getattr(pipelines, starter)(
         spark,
         stream,
         str(tmp_path / "corpus"),
         str(tmp_path / "ckpt"),
+        index_dir=str(tmp_path / "index"),
         auto_partitions=base + 5,
+        **({"dim": 4} if sink == "ann" else {}),
     )
     q.awaitTermination(180)
     assert q.exception() is None
-    assert seen == [(base + 5, base), (base + 5, base)]
+    assert seen == [(base + 5, base + 5, base)] * 2
     assert int(spark.conf.get("spark.sql.shuffle.partitions")) == base
 
 

@@ -1,21 +1,19 @@
-"""Per-batch cost of streaming corpus ingestion: persisted MinHash index
-vs rebuild-from-text, as the admitted corpus grows.
+"""Per-batch cost of streaming corpus ingestion as the admitted corpus
+grows.
 
 The claim under test (streaming/pipelines.py::start_incremental_dedup_stream):
-with ``index_dir`` set, per-batch audit cost tracks BATCH size because the
-corpus side is a precomputed band-bucket table appended per batch; without
-it, every batch re-shingles and re-minhashes the WHOLE admitted corpus, so
-per-batch cost grows linearly with corpus size. This harness ingests N
-equal batches (salted replicas of the sf documents table — cross-batch
-shingle sets are disjoint, so nearly everything is admitted and the corpus
-grows by one batch per step) one micro-batch at a time, wall-clocking each
-batch under both modes.
+per-batch audit cost tracks BATCH size, because the corpus side is the
+persisted band-bucket index appended per batch, not the admitted text.
+This harness ingests N equal batches (salted replicas of the sf documents
+table — cross-batch shingle sets are disjoint, so nearly everything is
+admitted and the corpus grows by one batch per step) one micro-batch at a
+time, wall-clocking each batch. ``--ann`` does the same for the embedding
+ingest (start_incremental_ann_stream) and its SRP band index.
 
 Run:  python tools/bench_ingest.py [--batches N] [--sf-dir DIR]
 Prints one JSON line:
-  {"batch_rows": R, "batches": N,
-   "indexed": [t0..tN-1], "rebuild": [t0..tN-1]}
-Expected shape: "indexed" stays ~flat; "rebuild" grows with batch number.
+  {"batch_rows": R, "batches": N, "indexed": [t0..tN-1]}
+Expected shape: "indexed" stays ~flat with batch number.
 
 ``--span`` / ``--span-crossover`` are MEASUREMENT harnesses for the two
 index-probe plans and deliberately FORCE each arm's plan, bypassing the
@@ -29,9 +27,9 @@ production entry (``start_incremental_span_scrub_stream``) keeps the
 
 ``--span-crossover`` (VERDICT r11 #3): seed a LARGE gram index
 (``--index-reps`` salted replicas of the documents table), then sweep
-probe-batch sizes (``--sweep-mb``) under both plans, calling the batch
-function exactly as the stream wires it (sizing hook + _read_ingest_ref
-+ incremental_span_scrub + cleaned/grams writes). Output:
+probe-batch sizes (``--sweep-mb``) under both plans, running the
+stream's own per-batch body (``span_scrub_batch``: reference read,
+scrub, cleaned/grams writes) on a persisted, sized batch. Output:
   {"index_bytes": B, "index_ghs": G, "sweep": [
     {"mb": M, "batch_bytes": b, "shuffle": [...], "broadcast": [...]}]}
 The crossover (where the broadcast arm stops winning) sets
@@ -61,9 +59,8 @@ def span_crossover(spark, args) -> None:
     """Measure the shuffle-vs-broadcast probe-plan crossover in batch
     size against a corpus-scale gram index (see module docstring)."""
     from gmall_flink_yb_spark import tuning as _tuning
-    from gmall_flink_yb_spark.functions.cacheutil import release_cache
     from gmall_flink_yb_spark.functions.ngrams import incremental_span_scrub
-    from gmall_flink_yb_spark.streaming.pipelines import _read_ingest_ref
+    from gmall_flink_yb_spark.streaming.pipelines import span_scrub_batch
 
     base = read_table(spark, args.sf_dir, "documents").select(
         "doc_id", "text"
@@ -73,7 +70,7 @@ def span_crossover(spark, args) -> None:
     # --- seed the index: R salted replicas' distinct grams, one job.
     # Per-replica token salt keeps cross-replica grams disjoint (the
     # index grows linearly, like a real novel-content ingest); partition
-    # by a gh hash bucket — _read_ingest_ref only needs SOME
+    # by a gh hash bucket — the reference read only needs SOME
     # ingest_batch partitioning, and distinct-within-partition matches
     # what compact_ingest_index leaves behind.
     reps = spark.range(args.index_reps).select(F.col("id").alias("_r"))
@@ -138,34 +135,23 @@ def span_crossover(spark, args) -> None:
             if not f.startswith(("_", "."))
         )
         times: dict[str, list[float]] = {"shuffle": [], "broadcast": []}
-        scratch = os.path.join(args.out, "scratch")
         for _ in range(args.reps):
             for arm_name, arm in (("shuffle", False), ("broadcast", True)):
                 spark.catalog.clearCache()
                 t0 = time.time()
                 incoming = spark.read.parquet(batch_dir).persist()
-                cleaned = None
                 failed = False
                 try:
                     _tuning.auto_shuffle_partitions_for_batch(
                         incoming, _tuning.GRAM_EXPANSION, "text"
                     )
-                    seen = _read_ingest_ref(
-                        spark, index_dir, 10**9, ["gh"], "gh string"
-                    )
-                    cleaned, grams = incremental_span_scrub(
-                        seen,
-                        incoming.select("doc_id", "text"),
-                        "doc_id",
-                        "text",
-                        hot_gram_guard=False,
+                    # batch id past every seeded partition: the whole
+                    # index is the reference, and the batch's own grams
+                    # land in a partition later reps do not read
+                    span_scrub_batch(
+                        incoming, 10**9,
+                        os.path.join(args.out, "cleaned"), index_dir,
                         broadcast_incoming=arm,
-                    )
-                    cleaned.write.mode("overwrite").parquet(
-                        os.path.join(scratch, "cleaned")
-                    )
-                    grams.write.mode("overwrite").parquet(
-                        os.path.join(scratch, "grams")
                     )
                 except Exception as exc:  # a forced-broadcast blowup IS
                     # a data point: the failure boundary the gate guards
@@ -176,8 +162,6 @@ def span_crossover(spark, args) -> None:
                         file=sys.stderr,
                     )
                 finally:
-                    if cleaned is not None:
-                        release_cache(cleaned)
                     incoming.unpersist()
                 times[arm_name].append(
                     None if failed else round(time.time() - t0, 2)
@@ -211,21 +195,20 @@ def main() -> None:
     ap.add_argument(
         "--batch-rows", type=int, default=None,
         help="docs per batch (default: the whole documents table per "
-        "batch); smaller batches raise the corpus-to-batch ratio, which "
-        "is what separates the two modes",
+        "batch); smaller batches raise the corpus-to-batch ratio",
     )
     ap.add_argument(
         "--ann", action="store_true",
-        help="measure the EMBEDDING ingest (start_incremental_ann_stream, "
-        "persisted SRP band index vs rebuild-from-vectors) instead of the "
-        "text ingest; replicas are circular-shifted so cross-batch cosines "
-        "stay below the dup threshold and the corpus grows per batch",
+        help="measure the EMBEDDING ingest (start_incremental_ann_stream "
+        "and its persisted SRP band index) instead of the text ingest; "
+        "replicas are circular-shifted so cross-batch cosines stay below "
+        "the dup threshold and the corpus grows per batch",
     )
     ap.add_argument(
         "--span", action="store_true",
         help="measure the SPAN-SCRUB ingest "
-        "(start_incremental_span_scrub_stream; index mode only — the gram "
-        "index is mandatory there). Salted replicas make cross-batch grams "
+        "(start_incremental_span_scrub_stream) under both index-probe "
+        "plans. Salted replicas make cross-batch grams "
         "disjoint, so nothing is scrubbed and the index grows linearly — "
         "the worst case for the per-batch index probe the pipeline claims "
         "is flat-ish",
@@ -318,19 +301,11 @@ def main() -> None:
     # span mode A/Bs the index-PROBE plan instead (r11): shuffle the
     # accumulated gram index per batch vs narrow it to the batch's grams
     # via broadcast semi-join (index scanned, never shuffled)
-    modes = (
-        ("span_shuffle", "span_broadcast")
-        if args.span
-        else ("indexed", "rebuild")
-    )
+    modes = ("span_shuffle", "span_broadcast") if args.span else ("indexed",)
     for mode in modes:
         mdir = os.path.join(args.out, mode)
         corpus, ckpt = os.path.join(mdir, "corpus"), os.path.join(mdir, "ck")
-        index = (
-            os.path.join(mdir, "index")
-            if (mode == "indexed" or args.span)
-            else None
-        )
+        index = os.path.join(mdir, "index")
         times = []
         for r in range(args.batches):
             src = files[r]
