@@ -141,27 +141,13 @@ def exact_dedup(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    auto_partitions: bool | int = True,
 ) -> DataFrame:
     """Exact dedup: keep the lowest id per normalized-text fingerprint.
 
     Returns (fingerprint, keep_id, dup_count). One hash shuffle on the
     16-byte fingerprint — at 100 TB this is the cheapest possible exact dedup
     (shuffles hashes, not documents).
-
-    ``auto_partitions``: the shuffle here is NARROW (one ~48 B
-    fingerprint row per document, independent of document size), so it
-    sizes from the ROW COUNT — parquet footer metadata, no job
-    (``tuning.auto_shuffle_partitions_for_rows``) — not from scan bytes.
-    A 10^9-document corpus needs ~700 partitions however many TB the
-    documents themselves weigh; the session default would funnel those
-    fingerprints through 32.
     """
-    from gmall_flink_yb_spark import tuning as _tuning
-
-    _tuning.auto_shuffle_partitions_for_rows(
-        df, _tuning.FINGERPRINT_ROW_BYTES, auto_partitions
-    )
     return (
         df.select(
             doc_fingerprint(F.col(text_col)).alias("fingerprint"),
@@ -175,26 +161,12 @@ def exact_dedup(
     )
 
 
-def _auto_size_shingle(df: DataFrame, auto_partitions: bool | int) -> None:
-    """Operator-entry shuffle sizing for the shingle/MinHash family
-    (VERDICT r8 #1): raise the session's shuffle partitions to
-    scan_bytes x SHINGLE_EXPANSION / 64 MB when ``df`` is file-backed
-    (floor = session base; AQE coalesces overshoot). int = explicit
-    target for non-file inputs; False = leave the session alone."""
-    from gmall_flink_yb_spark import tuning as _tuning
-
-    _tuning.auto_shuffle_partitions(
-        df, _tuning.SHINGLE_EXPANSION, auto_partitions
-    )
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
     threshold: float = 0.5,
     n: int = 3,
-    auto_partitions: bool | int = True,
 ) -> DataFrame:
     """Word n-gram (shingle) Jaccard near-dup pairs via inverted index.
 
@@ -210,7 +182,6 @@ def ngram_jaccard_pairs(
     switch to minhash_lsh_pairs. This exact variant is the correctness
     oracle.
     """
-    _auto_size_shingle(df, auto_partitions)
     # persisted: read 3x (sizes + both join sides); at production scale this
     # inverted index would be checkpointed to a table. Narrow form: the
     # consumers re-key by token, so the doc_id-window formulation's
@@ -389,7 +360,6 @@ def jaccard_prefix_pairs(
     threshold: float = 0.5,
     n: int = 3,
     verify_array_cap: int = 250_000,
-    auto_partitions: bool | int = True,
 ) -> DataFrame:
     """Prefix-filtered exact Jaccard pairs (SSJoin/PPJoin prefix filter).
 
@@ -411,7 +381,6 @@ def jaccard_prefix_pairs(
     global df (window over token). Verified equal to the exact variant by
     test and by the driver's DuckDB oracle (same SQL as dedup_jaccard).
     """
-    _auto_size_shingle(df, auto_partitions)
     # tier-1 mega-doc gate probe (see below), launched on a DRIVER THREAD
     # before the candidate plan is built (r13, VERDICT #9): the probe is
     # a ~0.2 s blocking 1-task job per call and the candidate tree costs
@@ -883,7 +852,6 @@ def minhash_lsh_pairs(
     shingle_n: int = 3,
     threshold: float = 0.5,
     portable: bool = False,
-    auto_partitions: bool | int = True,
     band_recall: float = 0.9,
 ) -> DataFrame:
     """MinHash+LSH near-dup candidate pairs with estimated Jaccard.
@@ -900,7 +868,6 @@ def minhash_lsh_pairs(
     Jaccard level recall must hold at (:func:`recommended_minhash_bands`;
     the Jaccard twin of the SRP family's derived banding).
     """
-    _auto_size_shingle(df, auto_partitions)
     bands = _resolve_minhash_bands(bands, num_hashes, threshold, band_recall)
     rows_per_band = num_hashes // bands
     # persisted: the band join reads the signatures on BOTH sides — without
@@ -958,7 +925,6 @@ def incremental_lsh_dedup(
     threshold: float = 0.5,
     portable: bool = False,
     broadcast_incoming: bool = False,
-    auto_partitions: bool | int = True,
     band_recall: float = 0.9,
 ) -> DataFrame:
     """Incremental MinHash+LSH dedup: audit a NEW batch against an
@@ -984,16 +950,6 @@ def incremental_lsh_dedup(
     and incoming ids greater than existing ones for the greedy order to
     mean "earlier wins".
     """
-    # both sides re-shingle inside this one plan: one SUMMED sizing call
-    from gmall_flink_yb_spark import tuning as _tuning
-
-    _tuning.auto_shuffle_partitions_inputs(
-        [
-            (existing, _tuning.SHINGLE_EXPANSION),
-            (incoming, _tuning.SHINGLE_EXPANSION),
-        ],
-        auto_partitions,
-    )
     # "auto" holds band_recall at the dedup threshold (safe here because
     # both sides band inside one plan; the INDEXED form stays int-only —
     # the persisted index's banding is an on-disk contract)
@@ -1572,7 +1528,6 @@ def simhash_pairs(
     text_col: str,
     max_hamming: int = 3,
     portable: bool = False,
-    auto_partitions: bool | int = True,
 ) -> DataFrame:
     """SimHash near-dup pairs with hamming distance <= max_hamming.
 
@@ -1581,7 +1536,6 @@ def simhash_pairs(
     generated by joining on (chunk_idx, chunk_value) — never all pairs.
     Returns (id_a, id_b, hamming).
     """
-    _auto_size_shingle(df, auto_partitions)
     # persisted: the chunk join reads the hashes on both sides (see
     # minhash_lsh_pairs for the scale rationale)
     hashed = simhash_table(df, id_col, text_col, portable=portable).persist(

@@ -143,7 +143,6 @@ def span_dup_stats(
     hot_gram_guard: bool = True,
     gram_sample_fraction: float = 0.05,
     gram_share_threshold: float | None = None,
-    auto_partitions: bool | int = True,
 ) -> DataFrame:
     """Per-document duplicated-span metric: of the document's DISTINCT
     token n-grams, how many also occur in at least one other document.
@@ -164,15 +163,7 @@ def span_dup_stats(
     hot slice, window for the cold remainder, and a per-doc
     totals-join-dup aggregate — answer-identical by construction
     (pytest). No hot gram -> the single-window plan below,
-    byte-identical to the pre-guard form.
-
-    ``auto_partitions``: data-sized shuffle parallelism at operator entry
-    (VERDICT r8 #1) — see :func:`dup_span_rows`."""
-    from gmall_flink_yb_spark import tuning as _tuning
-
-    _tuning.auto_shuffle_partitions(
-        df, _tuning.GRAM_EXPANSION, auto_partitions
-    )
+    byte-identical to the pre-guard form."""
     grams = _distinct_doc_grams(df, id_col, text_col, n)
     if hot_gram_guard:
         from pyspark.storagelevel import StorageLevel
@@ -180,8 +171,7 @@ def span_dup_stats(
         from gmall_flink_yb_spark.functions.cacheutil import owns_cache
         from gmall_flink_yb_spark.operators import skew as _skew
 
-        spark = df.sparkSession
-        parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        parts = _skew.shuffle_partitions(df)
         thr = (
             gram_share_threshold
             if gram_share_threshold is not None
@@ -306,7 +296,6 @@ def dup_span_rows(
     hot_gram_guard: bool = True,
     gram_sample_fraction: float = 0.05,
     gram_share_threshold: float | None = None,
-    auto_partitions: bool | int = True,
 ) -> DataFrame:
     """Maximal duplicated token spans per document: (doc_id, span_start,
     span_end), token indices 0-based inclusive.
@@ -332,21 +321,7 @@ def dup_span_rows(
     all-corpus hot grams (22.7 vs 12.0 s), because it regenerates the
     gram stream twice for EVERY gram; the guard pays that double scan
     only for the profiled-hot slice.
-
-    ``auto_partitions`` (VERDICT r8 #1 — the sizing rule enforced AT THE
-    OPERATOR, not by whoever read the bench code): ``True`` raises the
-    session's shuffle partitions to scan_bytes x GRAM_EXPANSION / 64 MB
-    when ``df`` is file-backed (floor = session base, AQE coalesces
-    overshoot — the 1000x measured fix for the superlinear
-    session-default regime, 248 s -> 130 s on the same plan); an int is
-    an explicit target for non-file inputs; ``False`` leaves the session
-    alone.
     """
-    from gmall_flink_yb_spark import tuning as _tuning
-
-    _tuning.auto_shuffle_partitions(
-        df, _tuning.GRAM_EXPANSION, auto_partitions
-    )
     dup, deps = _dup_occurrence_positions(
         df, id_col, text_col, n,
         hot_gram_guard=hot_gram_guard,
@@ -472,8 +447,7 @@ def _dup_occurrence_positions(
 
     positions = _gram_positions(df, id_col, text_col, n)
     if hot_gram_guard:
-        spark = df.sparkSession
-        parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        parts = _skew.shuffle_partitions(df)
         thr = (
             share_threshold if share_threshold is not None else 1.0 / parts
         )
@@ -510,7 +484,7 @@ def _dup_occurrence_positions(
             )
             dup_ghs = counts.filter(F.col("n_occ") > 1).select("gh")
             if seen is not None:
-                hot_frame = spark.createDataFrame(
+                hot_frame = df.sparkSession.createDataFrame(
                     [(v,) for v in hot_vals], "gh string"
                 )
                 seen_hot = seen.join(
@@ -552,7 +526,6 @@ def remove_dup_spans(
     hot_gram_guard: bool = True,
     gram_sample_fraction: float = 0.05,
     gram_share_threshold: float | None = None,
-    auto_partitions: bool | int = True,
 ) -> DataFrame:
     """Cut every maximal duplicated span (``dup_span_rows``) out of its
     document. Returns one row per input document:
@@ -566,8 +539,7 @@ def remove_dup_spans(
     the cut itself is a codegen'd higher-order ``filter`` with an index
     lambda — no explode of the token stream, no per-token range join, no
     Python. ``hot_gram_guard`` and the gram_* knobs pass through to
-    :func:`dup_span_rows` (the hot-gram escape hatch), as does
-    ``auto_partitions`` (data-sized shuffle parallelism, VERDICT r8 #1)."""
+    :func:`dup_span_rows` (the hot-gram escape hatch)."""
     from gmall_flink_yb_spark.functions.cacheutil import owns_cache
 
     spans = dup_span_rows(
@@ -575,7 +547,6 @@ def remove_dup_spans(
         hot_gram_guard=hot_gram_guard,
         gram_sample_fraction=gram_sample_fraction,
         gram_share_threshold=gram_share_threshold,
-        auto_partitions=auto_partitions,
     )
     return owns_cache(
         _cut_spans(df, spans, id_col, text_col),
@@ -647,7 +618,6 @@ def incremental_span_scrub(
     hot_gram_guard: bool = True,
     gram_sample_fraction: float = 0.05,
     gram_share_threshold: float | None = None,
-    auto_partitions: bool | int = True,
     broadcast_incoming: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental exact substring dedup: scrub from ``incoming`` every
@@ -697,27 +667,9 @@ def incremental_span_scrub(
     hatch of :func:`_dup_occurrence_positions`, applied to the BATCH's
     gram stream — a batch-universal boilerplate gram would otherwise sort
     through one task exactly like the batch operator's exposure.
-
-    ``auto_partitions`` (VERDICT r8 #1): sizes the session's shuffle
-    partitions from BOTH file-backed inputs in ONE summed derivation
-    (``tuning.auto_shuffle_partitions_inputs``) — the batch at
-    GRAM_EXPANSION (its gram stream explodes like the batch operator's)
-    and the seen index at HASH_INDEX_EXPANSION (already gram-shaped md5
-    rows, decompression-only). An explicit int is the whole plan's
-    target.
-    Streaming micro-batches usually aren't file-backed (no-op); giant
-    availableNow backfill batches ARE — the case the sizing exists for.
     """
-    from gmall_flink_yb_spark import tuning as _tuning
     from gmall_flink_yb_spark.functions.cacheutil import owns_cache
 
-    sized_inputs = [(incoming, _tuning.GRAM_EXPANSION)]
-    if not broadcast_incoming:
-        # under the broadcast plan the index is scanned via a map-side
-        # probe, never shuffled — sizing for it would derive a
-        # 20k-partition session for a KB batch against a 100 TB index
-        sized_inputs.append((seen_grams, _tuning.HASH_INDEX_EXPANSION))
-    _tuning.auto_shuffle_partitions_inputs(sized_inputs, auto_partitions)
     positions = _gram_positions(incoming, id_col, text_col, n)
     batch_ghs = positions.select("gh").distinct()
     if broadcast_incoming:

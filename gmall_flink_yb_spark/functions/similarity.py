@@ -699,8 +699,7 @@ def _file_backed_rows(df: DataFrame) -> int | None:
     Footer reads are capped (stride-sample + extrapolate past the cap;
     files in one dataset are written at a common target size, and P
     tolerates 2x count error by construction). Implementation lives in
-    ``tuning.file_backed_rows`` — shared with the narrow-row partition
-    sizing (``tuning.auto_shuffle_partitions_for_rows``)."""
+    ``tuning.file_backed_rows``."""
     from gmall_flink_yb_spark.tuning import file_backed_rows
 
     return file_backed_rows(df)
@@ -1152,7 +1151,6 @@ def incremental_cosine_dedup(
     n_planes: int | str = "auto",
     dim: int = 64,
     broadcast_incoming: bool = False,
-    auto_partitions: bool | int = True,
     band_recall: float = 0.9,
 ) -> DataFrame:
     """Wrapper over ``incremental_cosine_dedup_indexed`` that REBUILDS the
@@ -1172,17 +1170,6 @@ def incremental_cosine_dedup(
     so it doubles as auto-banding's cos_level (see
     :func:`recommended_n_bands` and BASELINE.md round-9). Precision is
     unaffected either way (exact-cosine verification)."""
-    # both sides hash and band-shuffle inside this one plan: one SUMMED
-    # sizing call
-    from gmall_flink_yb_spark import tuning as _tuning
-
-    _tuning.auto_shuffle_partitions_inputs(
-        [
-            (existing, _tuning.VECTOR_EXPANSION),
-            (incoming, _tuning.VECTOR_EXPANSION),
-        ],
-        auto_partitions,
-    )
     n_planes = _resolve_n_planes(n_planes, existing, incoming)
     n_bands = _resolve_n_bands(n_bands, n_planes, threshold, band_recall)
     ve = existing.select(
@@ -1215,7 +1202,6 @@ def ivf_topk(
     n_probe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    auto_partitions: bool | int = True,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k — the second scale path beside
     SRP-LSH, with a tunable recall/cost knob (n_probe).
@@ -1237,7 +1223,6 @@ def ivf_topk(
     unit: the shuffle moves each corpus row once and each query n_probe
     times — queries are the small side.
     """
-    _auto_size_vectors(embeddings, auto_partitions)
     e = embeddings.select(
         F.col(id_col).cast("long").alias("id"),
         _as_double(F.col(vec_col)).alias("vec"),
@@ -1299,18 +1284,6 @@ def ivf_topk(
     return _global_topk(scored, k)
 
 
-def _auto_size_vectors(df: DataFrame, auto_partitions: bool | int) -> None:
-    """Operator-entry shuffle sizing for the vector/ANN family (VERDICT
-    r8 #1): scan_bytes x VECTOR_EXPANSION / 64 MB when ``df`` is
-    file-backed (floor = session base; AQE coalesces overshoot); int =
-    explicit target for non-file inputs; False = off."""
-    from gmall_flink_yb_spark import tuning as _tuning
-
-    _tuning.auto_shuffle_partitions(
-        df, _tuning.VECTOR_EXPANSION, auto_partitions
-    )
-
-
 def lsh_bucket_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -1319,7 +1292,6 @@ def lsh_bucket_topk(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    auto_partitions: bool | int = True,
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's SRP bucket.
 
@@ -1327,11 +1299,8 @@ def lsh_bucket_topk(
     the same exact cosine. Recall < 1.0 by design (approximate) — rows-only
     correctness check, benched for speed. ``n_planes="auto"`` sizes P
     from the CORPUS side's count (:func:`auto_n_planes`); queries hash
-    with the same resolved P inside this one plan. ``auto_partitions``
-    sizes the bucket-join shuffle from the corpus side's scan bytes
-    (:func:`_auto_size_vectors`).
+    with the same resolved P inside this one plan.
     """
-    _auto_size_vectors(embeddings, auto_partitions)
     n_planes = _resolve_n_planes(n_planes, embeddings)
     # single-band plane family (band 0 = global planes 0..P-1, the same
     # family the literal-era _srp_bucket used) shipped as broadcast data,

@@ -133,9 +133,7 @@ def interval_join(
     ):
         from gmall_flink_yb_spark.operators import skew as _skew
 
-        parts = int(
-            right.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
+        parts = _skew.shuffle_partitions(right)
         combined = left.select(
             F.col(left_key).cast("string").alias("_lk"),
             F.lit(None).cast("string").alias("_rk"),
@@ -287,9 +285,7 @@ def enrich_dims(
     profile: dict[str, list[tuple[str, float]]] = {}
     parts = None
     if strategy == "shuffle_hash" and skew_guard:
-        parts = int(
-            facts.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
+        parts = _skew.shuffle_partitions(facts)
         candidates = list(
             dict.fromkeys(
                 fk for _, fk, _, _ in dims if fk in facts.columns

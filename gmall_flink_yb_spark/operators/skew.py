@@ -158,7 +158,7 @@ def salted_join(
     salted_facts = hot_facts.withColumn("_salt", salt_expr(buckets, salt_on))
     # sequence, not an unrolled literal array: buckets scales with the
     # hot share x shuffle partitions (tens of thousands at a fully-hot
-    # key on a data-sized session), and the plan must not grow with it
+    # key on a cluster-sized session), and the plan must not grow with it
     replicated = hot_build.withColumn(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)))
     )
@@ -366,7 +366,12 @@ def hot_key_shares(
     return out
 
 
-def _shuffle_partitions(df: DataFrame) -> int:
+def shuffle_partitions(df: DataFrame) -> int:
+    """The shuffle partition count hot-key thresholds and salt buckets
+    size against: ``spark.sql.shuffle.partitions`` on ``df``'s session.
+    That value is a deployment setting (``session.get_spark``); no
+    engine code writes it, and AQE sizes each shuffle at run time, so
+    concurrent plans on one session see a stable number."""
     return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
 
@@ -400,7 +405,7 @@ def skew_aware_join(
     chosen route is exposed on the result as ``_skew_salt_buckets``
     (None = plain) plus ``_skew_hot_keys`` for tests/observability.
     """
-    parts = _shuffle_partitions(facts)
+    parts = shuffle_partitions(facts)
     hot = hot_key_shares(
         facts, [fact_key], 1.0 / parts, sample_fraction,
         min_sampled_count=8,  # tiny-sample guard (see hot_key_shares)

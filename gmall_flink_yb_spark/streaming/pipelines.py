@@ -561,12 +561,14 @@ def start_cdc_routing(
     Exactly-once intent: the checkpoint makes batch replay deterministic and
     the writes are batchId-keyed (kafka payload partition dir) or idempotent
     (dim upsert by pk), replacing the reference's EXACTLY_ONCE producer
-    (MyKafkaUtil.java:29).
+    (MyKafkaUtil.java:29). Every read and write of a batch runs on the
+    query's own session (``batch_df.sparkSession``), and the batch's
+    cached frames are released even when a write raises.
     """
-    spark = envelope_stream.sparkSession
     ddl_seen: set[str] = set()
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        session = batch_df.sparkSession
         cfg = config_loader()  # latest config wins, per batch (ST4)
         if catalog_db is not None:
             # config is broadcast-small by design; collecting it is the same
@@ -578,7 +580,7 @@ def start_cdc_routing(
             ):
                 if row["sinkTable"] not in ddl_seen:
                     ensure_sink_table(
-                        spark,
+                        session,
                         row["sinkTable"],
                         row["sinkColumns"],
                         row["sinkPk"],
@@ -596,22 +598,22 @@ def start_cdc_routing(
                 os.path.join(out_dir, "kafka_out", f"batch_id={batch_id}")
             )
             hbase = routed["hbase"].persist()
-            sink_tables = [
-                r["sinkTable"]
-                for r in hbase.select("sinkTable").distinct().collect()
-            ]
-            for tbl in sink_tables:
-                rows = (
-                    hbase.filter(F.col("sinkTable") == tbl)
-                    .select(
+            try:
+                sink_tables = [
+                    r["sinkTable"]
+                    for r in hbase.select("sinkTable").distinct().collect()
+                ]
+                for tbl in sink_tables:
+                    rows = hbase.filter(F.col("sinkTable") == tbl).select(
                         F.col("after").getItem(dim_pk).alias(dim_pk),
                         F.to_json("after").alias("payload"),
                     )
-                )
-                upsert_dim_parquet(
-                    spark, rows, os.path.join(out_dir, f"dim_{tbl}"), dim_pk
-                )
-            hbase.unpersist()
+                    upsert_dim_parquet(
+                        session, rows, os.path.join(out_dir, f"dim_{tbl}"),
+                        dim_pk,
+                    )
+            finally:
+                hbase.unpersist()
         finally:
             batch_df.unpersist()
 
@@ -745,26 +747,19 @@ def _write_ingest_partition(
 
 
 def _start_ingest_stream(
-    stream: DataFrame, checkpoint_dir: str, expansion: float,
-    payload_col: str, auto_partitions: bool | int,
+    stream: DataFrame, checkpoint_dir: str,
     body: Callable[[DataFrame, int], None],
 ) -> StreamingQuery:
     """Start ``stream`` availableNow with ``body(incoming, batch_id)`` as
-    its per-batch work. Each non-empty batch is persisted, its shuffle is
-    sized from its payload (``tuning.auto_shuffle_partitions_for_batch``,
-    on the query's own cloned session — a micro-batch frame is not
-    file-backed, so the operators' entry hooks no-op here), and it is
-    unpersisted whether the body succeeds or not."""
+    its per-batch work. Each non-empty batch is persisted, the body runs
+    on the query's own cloned session (``batch_df.sparkSession``), and
+    the batch is unpersisted whether the body succeeds or not."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.head(1):
             return
         incoming = batch_df.persist()
         try:
-            _tuning.auto_shuffle_partitions_for_batch(
-                incoming, expansion, payload_col,
-                auto_partitions=auto_partitions,
-            )
             body(incoming, batch_id)
         finally:
             incoming.unpersist()
@@ -827,7 +822,7 @@ def dedup_ingest_batch(
     id_col: str = "doc_id", text_col: str = "text", threshold: float = 0.5,
 ) -> None:
     """One batch of :func:`start_incremental_dedup_stream` on an already
-    persisted and sized ``incoming`` frame."""
+    persisted ``incoming`` frame."""
     from gmall_flink_yb_spark.functions.dedup import (
         incremental_lsh_dedup_indexed,
     )
@@ -851,7 +846,6 @@ def start_incremental_dedup_stream(
     threshold: float = 0.5,
     *,
     index_dir: str,
-    auto_partitions: bool | int = True,
 ) -> StreamingQuery:
     """Admit new documents into a curated corpus, rejecting near-dups of
     anything already admitted (or of a smaller-id doc in the same batch).
@@ -869,18 +863,16 @@ def start_incremental_dedup_stream(
       directory (``PATH_NOT_FOUND``) falls back to an empty reference —
       any other read error fails the batch for the checkpoint to retry;
     - ``index_dir`` is required;
-    - shuffle sizing (``auto_partitions``, SHINGLE_EXPANSION) and every
-      reference read run on the batch's own session.
+    - every reference read runs on the batch's own session.
 
     Requires globally increasing doc ids across batches (ingest order =
     greedy keep order). For a corpus-sized backlog use
-    :func:`backfill_corpus`: sizing bounds shuffle state, not the batch's
-    heap residency — the rate limit does that. Mirrors the reference's
+    :func:`backfill_corpus`: AQE sizes the shuffles at run time, but
+    the batch's heap residency is bounded only by the rate limit. Mirrors the reference's
     idempotent-sink discipline (BaseLogApp's batchId-keyed fanout above).
     """
     return _start_ingest_stream(
-        docs_stream, checkpoint_dir, _tuning.SHINGLE_EXPANSION, text_col,
-        auto_partitions,
+        docs_stream, checkpoint_dir,
         lambda incoming, batch_id: dedup_ingest_batch(
             incoming, batch_id, corpus_dir, index_dir, id_col, text_col,
             threshold,
@@ -895,7 +887,7 @@ def span_scrub_batch(
     within_batch: bool = True, frozen_index: bool = False,
 ) -> None:
     """One batch of :func:`start_incremental_span_scrub_stream` on an
-    already persisted and sized ``incoming`` frame."""
+    already persisted ``incoming`` frame."""
     from gmall_flink_yb_spark.functions.cacheutil import release_cache
     from gmall_flink_yb_spark.functions.ngrams import incremental_span_scrub
 
@@ -939,7 +931,6 @@ def start_incremental_span_scrub_stream(
     text_col: str = "text",
     n: int = 8,
     hot_gram_guard: bool = False,
-    auto_partitions: bool | int = True,
     broadcast_incoming: bool | str = "auto",
     within_batch: bool = True,
     frozen_index: bool = False,
@@ -960,9 +951,8 @@ def start_incremental_span_scrub_stream(
     Replay contract: each batch OVERWRITES only its own
     ``ingest_batch=N`` partitions; the reference reads strictly SMALLER
     batch ids, and only ``PATH_NOT_FOUND`` falls back to an empty
-    reference; ``index_dir`` is required; shuffle sizing
-    (``auto_partitions``, GRAM_EXPANSION) and the reference read run on
-    the batch's own session.
+    reference; ``index_dir`` is required; the reference read runs on the
+    batch's own session.
 
     ``within_batch=False`` drops the repeat-within-batch rule (only index
     membership cuts). ``frozen_index=True`` treats ``index_dir`` as a
@@ -985,8 +975,7 @@ def start_incremental_span_scrub_stream(
     ``SPAN_BCAST_MAX_BATCH_BYTES`` scan bytes.
     """
     return _start_ingest_stream(
-        docs_stream, checkpoint_dir, _tuning.GRAM_EXPANSION, text_col,
-        auto_partitions,
+        docs_stream, checkpoint_dir,
         lambda incoming, batch_id: span_scrub_batch(
             incoming, batch_id, corpus_dir, index_dir, id_col, text_col, n,
             hot_gram_guard, broadcast_incoming, within_batch, frozen_index,
@@ -1072,7 +1061,7 @@ def ann_ingest_batch(
     dim: int = 64,
 ) -> None:
     """One batch of :func:`start_incremental_ann_stream` on an already
-    persisted and sized ``incoming`` frame."""
+    persisted ``incoming`` frame."""
     from gmall_flink_yb_spark.functions.similarity import (
         incremental_cosine_dedup_indexed,
     )
@@ -1100,7 +1089,6 @@ def start_incremental_ann_stream(
     n_bands: int = 4,
     n_planes: int = 8,
     dim: int = 64,
-    auto_partitions: bool | int = True,
 ) -> StreamingQuery:
     """Admit new embedding vectors into a curated corpus, rejecting
     near-dups (exact cosine >= ``threshold``) of anything already admitted
@@ -1115,13 +1103,11 @@ def start_incremental_ann_stream(
     Replay contract: each batch OVERWRITES only its own
     ``ingest_batch=N`` partitions; the reference reads strictly SMALLER
     batch ids, and only ``PATH_NOT_FOUND`` falls back to an empty
-    reference; ``index_dir`` is required; shuffle sizing
-    (``auto_partitions``, VECTOR_EXPANSION) and the reference read run on
-    the batch's own session. For a corpus-sized backlog use
+    reference; ``index_dir`` is required; the reference read runs on the
+    batch's own session. For a corpus-sized backlog use
     :func:`backfill_corpus`."""
     return _start_ingest_stream(
-        vecs_stream, checkpoint_dir, _tuning.VECTOR_EXPANSION, vec_col,
-        auto_partitions,
+        vecs_stream, checkpoint_dir,
         lambda incoming, batch_id: ann_ingest_batch(
             incoming, batch_id, corpus_dir, index_dir, id_col, vec_col,
             threshold, n_bands, n_planes, dim,
@@ -1315,7 +1301,7 @@ SPAN_BCAST_MAX_BATCH_BYTES = 4 << 20
 # post-parquet heap footprint of one in-flight backfill chunk relative to
 # its on-disk bytes, with safety margin: the batch persists
 # (MEMORY_AND_DISK) while its gram/shingle/band stream explodes ~10-30x
-# over scan bytes (tuning.py family constants) and the window/hash state
+# over scan bytes and the window/hash state
 # stacks on top in the SAME JVM in local mode. MEASURED r11 (VERDICT r10
 # #4, tools/calibrate_backfill_heap.py; BASELINE.md round-11 grid): at
 # the r9 OOM-regime tier (5M docs / 899 MB backlog / 8 g heap) explicit
@@ -1485,7 +1471,6 @@ def exact_span_backfill(
     fmt: str = "parquet",
     glob: str | None = None,
     max_bytes_per_batch: int | None = None,
-    auto_partitions: bool | int = True,
 ) -> StreamingQuery:
     """Heap-bounded backfill with EXACT batch-operator semantics — the
     chunk-INVARIANT drain (VERDICT r11 #5, option a, upgraded from the
@@ -1495,7 +1480,7 @@ def exact_span_backfill(
     copy of every chunk-boundary-straddling dup (kept_tokens monotone in
     chunk count, ~2.2% spread at the 5M-doc tier).
 
-    Two phases, both distributed and partition-sized:
+    Two phases, both distributed:
 
     1. **Global dup-gram set** ``D = {gh : corpus occurrence count >= 2}``
        — one batch aggregation over the backlog (gram explode ->
@@ -1533,9 +1518,6 @@ def exact_span_backfill(
     if glob:
         reader = reader.option("pathGlobFilter", glob)
     docs = reader.load(src_dir)
-    _tuning.auto_shuffle_partitions_inputs(
-        [(docs, _tuning.GRAM_EXPANSION)], auto_partitions
-    )
     (
         _gram_positions(docs.select(id_col, text_col), id_col, text_col, n)
         .groupBy("gh")
@@ -1559,5 +1541,4 @@ def exact_span_backfill(
         n=n,
         within_batch=False,
         frozen_index=True,
-        auto_partitions=auto_partitions,
     )

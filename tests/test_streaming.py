@@ -579,6 +579,63 @@ def test_cdc_routing_stream_refreshes_config(spark, tmp_path):
     ).count() == 1
 
 
+def test_cdc_sink_releases_cache_on_failed_upsert(spark, tmp_path, monkeypatch):
+    """A dim upsert that raises fails the batch without leaving its
+    persisted frames cached, the upsert runs on the query's own session,
+    and a restart on the same checkpoint replays the batch."""
+    from gmall_flink_yb_spark.streaming import pipelines
+
+    src = str(tmp_path / "cdc_src")
+    os.makedirs(src)
+    spark.createDataFrame(
+        [Row(database="gmall", tableName="user_info", before=None,
+             after={"id": "7", "name": "ann"}, type="insert")],
+        CDC_ENVELOPE_SCHEMA,
+    ).coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "stage"))
+    part = [
+        f for f in os.listdir(tmp_path / "stage") if f.endswith(".parquet")
+    ]
+    os.rename(tmp_path / "stage" / part[0], os.path.join(src, "00.parquet"))
+    cfg = spark.createDataFrame(
+        [Row(sourceTable="user_info", operateType="insert", sinkType="hbase",
+             sinkTable="dim_user_info", sinkColumns="id,name", sinkPk="id",
+             sinkExtend=None)],
+        TABLE_PROCESS_SCHEMA,
+    )
+    real = pipelines.upsert_dim_parquet
+    sessions = []
+
+    def flaky(session, *args, **kwargs):
+        sessions.append(session._jsparkSession)
+        if len(sessions) == 1:
+            raise RuntimeError("injected upsert failure")
+        return real(session, *args, **kwargs)
+
+    monkeypatch.setattr(pipelines, "upsert_dim_parquet", flaky)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = {int(i) for i in persistent().keySet().toArray()}
+    out, ckpt = str(tmp_path / "routed"), str(tmp_path / "ckpt")
+
+    def run():
+        stream = read_file_stream(
+            spark, src, CDC_ENVELOPE_SCHEMA, glob="*.parquet"
+        )
+        return start_cdc_routing(stream, lambda: cfg, out, ckpt)
+
+    q = run()
+    with pytest.raises(Exception, match="injected upsert failure"):
+        q.awaitTermination(120)
+    leaked = {int(i) for i in persistent().keySet().toArray()} - before
+    assert not leaked, f"failed CDC batch left cached RDDs: {sorted(leaked)}"
+    assert not sessions[0].equals(spark._jsparkSession)
+
+    run().awaitTermination(120)
+    from gmall_flink_yb_spark.streaming.pipelines import read_dim_parquet
+
+    dim = read_dim_parquet(spark, os.path.join(out, "dim_dim_user_info"))
+    assert json.loads(dim.first()["payload"])["name"] == "ann"
+
+
 def test_ensure_sink_table_catalog_ddl(spark):
     """K4 dynamic DDL (TableProcessFunction.java:116-176): a config row
     creates a catalog table with sinkColumns in CSV order, pk default 'id'

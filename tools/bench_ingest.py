@@ -29,7 +29,7 @@ production entry (``start_incremental_span_scrub_stream``) keeps the
 (``--index-reps`` salted replicas of the documents table), then sweep
 probe-batch sizes (``--sweep-mb``) under both plans, running the
 stream's own per-batch body (``span_scrub_batch``: reference read,
-scrub, cleaned/grams writes) on a persisted, sized batch. Output:
+scrub, cleaned/grams writes) on a persisted batch. Output:
   {"index_bytes": B, "index_ghs": G, "sweep": [
     {"mb": M, "batch_bytes": b, "shuffle": [...], "broadcast": [...]}]}
 The crossover (where the broadcast arm stops winning) sets
@@ -58,7 +58,6 @@ ID_STRIDE = 1_000_000_000
 def span_crossover(spark, args) -> None:
     """Measure the shuffle-vs-broadcast probe-plan crossover in batch
     size against a corpus-scale gram index (see module docstring)."""
-    from gmall_flink_yb_spark import tuning as _tuning
     from gmall_flink_yb_spark.functions.ngrams import incremental_span_scrub
     from gmall_flink_yb_spark.streaming.pipelines import span_scrub_batch
 
@@ -88,7 +87,6 @@ def span_crossover(spark, args) -> None:
         "doc_id",
         "text",
         hot_gram_guard=False,
-        auto_partitions=max(32, args.index_reps),
     )
     (
         ghs.withColumn(
@@ -142,9 +140,6 @@ def span_crossover(spark, args) -> None:
                 incoming = spark.read.parquet(batch_dir).persist()
                 failed = False
                 try:
-                    _tuning.auto_shuffle_partitions_for_batch(
-                        incoming, _tuning.GRAM_EXPANSION, "text"
-                    )
                     # batch id past every seeded partition: the whole
                     # index is the reference, and the batch's own grams
                     # land in a partition later reps do not read

@@ -70,17 +70,6 @@ DEDUP_QUERIES = [
     "weighted_sample_docs",
 ]
 
-# queries whose dominant shuffle is the shingle/MinHash stream (their
-# harness repin uses SHINGLE_EXPANSION; everything else documents-shaped
-# uses GRAM_EXPANSION — VERDICT r8 #3)
-SHINGLE_FAMILY = {
-    "dedup_jaccard_prefix",
-    "dedup_minhash_lsh",
-    "dedup_clusters",
-    "dedup_canonical",
-    "dedup_incremental",
-}
-
 FACT_QUERIES = [
     "q1_pricing_summary",
     "q18_large_orders",
@@ -377,18 +366,9 @@ def main() -> None:
     )
     ap.add_argument(
         "--shuffle-partitions", type=int, default=None,
-        help="override spark.sql.shuffle.partitions for the run — the "
-        "cluster sizing rule under test at large --replicas: partitions "
-        "must grow with the data or per-partition sorts spill (the box "
-        "default 32 is sized for 1x/10x)",
-    )
-    ap.add_argument(
-        "--no-repin", action="store_true",
-        help="harness does NO sizing: before every timed sample the "
-        "session is RESET to its base partition count and the OPERATOR's "
-        "own entry sizing (tuning.auto_shuffle_partitions, VERDICT r8 #1) "
-        "is what must restore the at-linear regime — the wiring's "
-        "end-to-end proof mode",
+        help="spark.sql.shuffle.partitions the session is built with "
+        "(get_spark's deployment setting; AQE sizes each batch shuffle "
+        "at run time either way)",
     )
     args = ap.parse_args()
     global REPLICAS
@@ -405,43 +385,6 @@ def main() -> None:
     n1 = n10 = None
     docs_built = False
     out: dict[str, dict[str, float]] = {}
-    base_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    def repin_partitions(sf_dir: str, query: str | None = None) -> int:
-        """Size shuffle partitions for the corpus about to be timed
-        (VERDICT r7 #3: the 1000x run must restore at-linear growth with
-        NO hand-passed --shuffle-partitions). An explicit knob pins; the
-        default derives partitions from the corpus's scan bytes x the
-        QUERY'S family expansion (VERDICT r8 #3 — GRAM_EXPANSION was
-        being applied to the shingle stages too; the shingle stream
-        measured HEAVIER, tools/calibrate_expansion.py), floored at the
-        session default. Note the operators now size themselves at entry
-        (tuning.auto_shuffle_partitions) but only ever UP — this harness
-        repin is what resets DOWN when timing drops back to the 1x
-        corpus."""
-        if args.no_repin:
-            # reset DOWN to base so the operator's entry sizing is the
-            # only thing standing between the query and the superlinear
-            # session-default regime
-            spark.conf.set("spark.sql.shuffle.partitions", str(base_parts))
-            return base_parts
-        if args.shuffle_partitions is not None:
-            return args.shuffle_partitions
-        from gmall_flink_yb_spark import tuning
-
-        expansion = (
-            tuning.SHINGLE_EXPANSION
-            if query in SHINGLE_FAMILY
-            else tuning.GRAM_EXPANSION
-        )
-        p = tuning.partitions_for_bytes(
-            tuning.estimate_parquet_bytes(
-                spark, os.path.join(sf_dir, "documents.parquet")
-            ) * expansion,
-            lo=base_parts,
-        )
-        spark.conf.set("spark.sql.shuffle.partitions", str(p))
-        return p
 
     for name in [] if args.skip_dedup else DEDUP_QUERIES:
         if not docs_built:
@@ -453,15 +396,7 @@ def main() -> None:
             n10 = spark.read.parquet(
                 os.path.join(ten_dir, "documents.parquet")
             ).count()
-            print(
-                "# sized shuffle partitions: "
-                f"1x {repin_partitions(one_dir)} / "
-                f"{args.replicas}x {repin_partitions(ten_dir)}",
-                file=sys.stderr,
-            )
-        repin_partitions(one_dir, name)
         t1 = time_query(spark, name, one_dir, args.runs)
-        repin_partitions(ten_dir, name)
         t10 = time_query(spark, name, ten_dir, args.runs)
         out[name] = {
             "t1": round(t1, 2),

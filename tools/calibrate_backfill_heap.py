@@ -4,8 +4,7 @@
 ``min JVM heap / BACKFILL_HEAP_PER_CHUNK_BYTE``. The constant was
 bracketed by the round-9 endpoint observations (8 g OOM at a 850 MB
 one-batch drain; OK at ~106 MB chunks) but never MEASURED. This tool
-fixes it the way round-10's hash-index probe fixed
-``HASH_INDEX_EXPANSION``: drive the same span-scrub backfill at several
+measures it: drive the same span-scrub backfill at several
 explicit chunk sizes in a FIXED-heap JVM and read peak heap from the
 JVM's own memory MXBean, so the constant derives from measured
 bytes-of-heap per chunk byte (slope across chunk sizes) plus the
