@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def formatted_plan(df: DataFrame) -> str:
@@ -86,6 +86,16 @@ def has_whole_stage_codegen(df: DataFrame, execute: bool = True) -> bool:
         )
     )
     return bool(re.search(r"\*\(\d+\)", simple))
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes the JVM's code generator has compiled so far (the count of
+    Spark's ``CodegenMetrics`` compilation-time histogram). The count is
+    JVM-wide, across sessions; a class found in the codegen cache adds
+    nothing, so its growth over a warm repeat of a query counts the
+    classes the cache no longer held."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 def scans_are_vectorized(df: DataFrame) -> bool:

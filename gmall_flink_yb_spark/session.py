@@ -18,6 +18,14 @@ engine writes ``spark.sql.shuffle.partitions`` after the session is
 built: it stays the deployment value, which plans read as a stable
 number (``operators.skew.shuffle_partitions``) and streaming state
 keeps as its partition count.
+
+A served query pays no fixed JVM cost that a repeat of it can avoid.
+Generated classes are compiled once: the codegen cache holds
+``CODEGEN_CACHE_ENTRIES`` classes, more than a serving mix cycles through,
+so a repeated query finds its classes instead of recompiling them. Each
+table's schema is inferred once per file version
+(``sources.readers.read_table``), so building a plan over an unchanged
+file launches no Spark job.
 """
 
 from __future__ import annotations
@@ -37,6 +45,14 @@ SHUFFLE_INITIAL_PARTITIONS = 256
 # ~1.3x slower than at 16 MB (24 tasks). Shuffles smaller than
 # defaultParallelism x 16 MB are split across the cores either way.
 SHUFFLE_ADVISORY_PARTITION_BYTES = 16 << 20
+# JVM-wide LRU cache of compiled whole-stage/expression classes. Spark's
+# default of 100 is below what a serving mix cycles through: the 16-query
+# perfbench mix generates about 235 distinct classes, so at 100 every
+# warm pass recompiled ~230 of them; at 2000 a warm pass compiles 0-6
+# (AQE re-plans). The conf is static and the cache is built on the JVM's
+# first codegen, so a vanilla driver session (``__spark_entry__``) keeps
+# Spark's default: it is only slower there, never wrong.
+CODEGEN_CACHE_ENTRIES = 2000
 
 # Streaming state backends (VERDICT r6 #3). The reference carries a
 # commented-out FsStateBackend/RocksDB block in every app
@@ -93,6 +109,9 @@ def get_spark(
             "true",
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config(
+            "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES)
+        )
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
@@ -49,6 +50,56 @@ def _ensure_read_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+# qualified table path -> (file version, schema inferred at that
+# version): one entry per path, so a rewritten table replaces its entry.
+# Process-wide on purpose: under the confs _ensure_read_confs forces, a
+# file version's schema is the same on every session. Threads share it
+# without a lock: a lookup and a store are each atomic, and two threads
+# racing on one miss both infer the same schema.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _file_version(spark: SparkSession, path: str) -> tuple[str, tuple]:
+    """(qualified path, version) of a parquet table from Hadoop
+    ``FileStatus`` — driver-side metadata, no Spark job, and correct on
+    any filesystem the session's Hadoop conf resolves. A file's version
+    is its (size, mtime); a directory's is the (path, size, mtime) of
+    every file under it."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    qualified = fs.makeQualified(jpath)
+    st = fs.getFileStatus(qualified)
+    if not st.isDirectory():
+        return qualified.toString(), (st.getLen(), st.getModificationTime())
+    files = []
+    it = fs.listFiles(qualified, True)
+    while it.hasNext():
+        f = it.next()
+        files.append(
+            (f.getPath().toString(), f.getLen(), f.getModificationTime())
+        )
+    return qualified.toString(), tuple(sorted(files))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per file
+    version. Inference is a Spark job (a footer-merge over the files);
+    a repeat read of an unchanged table passes the cached schema and
+    launches none. A path whose version cannot be read (missing, no
+    permission) takes the inferring read, which raises Spark's usual
+    error."""
+    try:
+        key, version = _file_version(spark, path)
+    except Py4JError:
+        return spark.read.parquet(path)
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == version:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (version, df.schema)
+    return df
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver testdata table (parquet).
 
@@ -58,10 +109,17 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     to microsecond TimestampType (truncating ns -> us) so downstream plans
     and the driver's value-hash compare see ONE stable type. The DuckDB
     oracle truncates identically via epoch_ns(ts)//1000.
+
+    The schema is inferred once per file version, keyed by the table's
+    qualified path and its files' sizes and mtimes (``_read_parquet``),
+    so building a plan over an unchanged table launches no Spark job and
+    a rewritten table is inferred again. Inference always runs after
+    ``_ensure_read_confs``, so a cached schema is the one this session's
+    confs would infer, whichever session filled the cache.
     """
     _ensure_read_confs(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
+    df = _read_parquet(spark, path)
     for col, dtype in df.dtypes:
         if dtype == "timestamp_ntz":
             # naive wall-clock == UTC instant under the forced UTC session TZ

@@ -30,7 +30,7 @@ import uuid
 from typing import Callable
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
@@ -372,8 +372,9 @@ def read_dim_parquet(spark: SparkSession, path: str) -> DataFrame:
     ``upsert_dim_parquet`` writes only NEW ``gen=`` dirs and publishes
     them with a new manifest, so this DataFrame keeps reading an
     unchanging file set (valid for at least ``retain_gens`` subsequent
-    upserts). Falls back to a plain parquet read for pre-manifest
-    layouts."""
+    upserts). The manifest's writer schema types the read, so it
+    launches no inference job. Falls back to a plain parquet read for
+    pre-manifest layouts."""
     m = _read_dim_manifest(spark, path)
     if m is None:
         return spark.read.parquet(path)
@@ -390,9 +391,22 @@ def read_dim_parquet(spark: SparkSession, path: str) -> DataFrame:
         f"{path.rstrip('/')}/gen={g}/_pk_bucket={b}"
         for b, g in sorted(m["buckets"].items())
     ]
-    return (
-        spark.read.option("basePath", path).parquet(*paths).drop("gen")
-    )
+    return _dim_bucket_reader(spark, path, m).parquet(*paths).drop("gen")
+
+
+def _dim_bucket_reader(
+    spark: SparkSession, path: str, manifest: dict
+) -> DataFrameReader:
+    """Reader for a dim's ``gen=/_pk_bucket=`` dirs under ``basePath``.
+    With the writer's schema from the manifest it skips schema
+    inference, a Spark job per read; ``gen`` is still discovered from
+    the paths, and ``_pk_bucket`` takes the writer's type."""
+    reader = spark.read.option("basePath", path)
+    if manifest.get("schema"):
+        reader = reader.schema(
+            StructType.fromJson(json.loads(manifest["schema"]))
+        )
+    return reader
 
 
 def upsert_dim_parquet(
@@ -486,7 +500,7 @@ def upsert_dim_parquet(
         ]
         if old_paths:
             old = (
-                spark.read.option("basePath", path)
+                _dim_bucket_reader(spark, path, manifest)
                 .parquet(*old_paths)
                 .drop("gen")
             )

@@ -78,25 +78,33 @@ def spread_file_scan(df: DataFrame) -> DataFrame:
     return df.repartition(target)
 
 
-# analyzed-plan node names that keep a frame "a bare scan" for
-# spread_file_scan: projections/filters/aliases over a relation. Anything
-# else (Join/Generate/Aggregate/Repartition/Window/...) either multiplies
-# rows, already spreads them, or would make the df.rdd probe execute
-# upstream shuffle stages eagerly under AQE.
-_SPREAD_SCAN_NODES = ("Project", "Filter", "Relation", "SubqueryAlias", "View")
+# analyzed-plan node names (``TreeNode.nodeName``) that keep a frame "a
+# bare scan" for spread_file_scan: projections/filters/aliases over a
+# file relation. Anything else (Join/Generate/Aggregate/Repartition/
+# Window/...) either multiplies rows, already spreads them, or would make
+# the df.rdd probe execute upstream shuffle stages eagerly under AQE.
+_SPREAD_SCAN_NODES = frozenset({
+    "Project", "Filter", "SubqueryAlias", "View",
+    "LogicalRelation", "DataSourceV2Relation",
+})
 
 
 def _scan_only_plan(df: DataFrame) -> bool:
-    """True iff every node of ``df``'s analyzed plan is a
-    Project/Filter/alias over a relation (see ``spread_file_scan``)."""
+    """True iff every node of ``df``'s analyzed plan, subquery plans
+    included, is a Project/Filter/alias over a relation (see
+    ``spread_file_scan``). Walks the JVM tree and compares exact node
+    names, so text inside the plan (a literal, a column name) is never
+    mistaken for a node."""
     try:
-        plan = df._jdf.queryExecution().analyzed().toString()
+        stack = [df._jdf.queryExecution().analyzed()]
+        while stack:
+            node = stack.pop()
+            if node.nodeName() not in _SPREAD_SCAN_NODES:
+                return False
+            for seq in (node.children(), node.subqueries()):
+                stack.extend(seq.apply(i) for i in range(seq.size()))
     except Exception:
         return False
-    for line in plan.splitlines():
-        node = line.lstrip(" :+-").split(" ", 1)[0]
-        if node and not node.startswith(_SPREAD_SCAN_NODES):
-            return False
     return True
 
 

@@ -1,9 +1,11 @@
-"""Run-time shuffle sizing and the job-free scan helpers.
+"""Run-time shuffle sizing, the codegen cache and the job-free scan
+helpers.
 
 ``session.get_spark`` leaves shuffle sizing to AQE: every batch shuffle
 starts at a fixed initial count and coalesces from the bytes its map
 side wrote, persisted plans included. No engine code writes
-``spark.sql.shuffle.partitions``."""
+``spark.sql.shuffle.partitions``. Its codegen cache holds every class a
+serving mix generates, so a warm repeat compiles nothing."""
 
 from __future__ import annotations
 
@@ -12,8 +14,13 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import SF_ORACLE
 from gmall_flink_yb_spark.functions import dedup, ngrams, similarity
+from gmall_flink_yb_spark.functions.cacheutil import release_cache
+from gmall_flink_yb_spark.plans.inspect import codegen_compiles
+from gmall_flink_yb_spark.queries import QUERIES
 from gmall_flink_yb_spark.session import (
+    CODEGEN_CACHE_ENTRIES,
     SHUFFLE_ADVISORY_PARTITION_BYTES,
     SHUFFLE_INITIAL_PARTITIONS,
 )
@@ -33,6 +40,32 @@ def test_get_spark_sets_runtime_sizing_confs(spark):
         spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
         == "true"
     )
+
+
+def test_get_spark_sets_codegen_cache_entries(spark):
+    assert int(spark.conf.get("spark.sql.codegen.cache.maxEntries")) == (
+        CODEGEN_CACHE_ENTRIES
+    )
+
+
+def test_warm_serving_pass_reuses_compiled_classes(spark):
+    """The serving mix generates about 235 classes, more than Spark's
+    default 100-entry codegen cache, so there every warm pass recompiles
+    about 230 of them. With the engine's cache a warm pass finds its
+    classes; the few it may compile are AQE re-plans that number a
+    query's codegen stages in a different order (0-6 measured)."""
+    from perfbench.serving import MIX
+
+    def one_pass() -> int:
+        before = codegen_compiles(spark)
+        for name in MIX:
+            df = QUERIES[name](spark, SF_ORACLE)
+            df.collect()
+            release_cache(df)
+        return codegen_compiles(spark) - before
+
+    one_pass()  # cold, or warm from earlier tests
+    assert one_pass() <= 8
 
 
 def _aqe_session(spark, cached_flag: str):
@@ -232,3 +265,26 @@ def test_spread_file_scan_gates_and_identity(spark, tmp_path):
     assert tuning.spread_file_scan(repart) is repart
     projected = bdf.select("id", F.col("txt").alias("t")).filter("id > 10")
     assert tuning._scan_only_plan(projected)
+
+
+def test_scan_only_plan_reads_nodes_not_text(spark, tmp_path):
+    """A scan-only frame is classified by its plan's nodes, not by the
+    plan's text: a filter literal holding a newline and a node name
+    (which printed as a ``Join`` line) still leaves a bare scan, and
+    ``spread_file_scan`` spreads it; a real join is still rejected."""
+    from gmall_flink_yb_spark import tuning
+
+    big = str(tmp_path / "big.parquet")
+    spark.range(200_000).select(
+        F.col("id"), F.md5(F.col("id").cast("string")).alias("txt")
+    ).coalesce(1).write.parquet(big)
+    bdf = spark.read.parquet(big)
+    tricky = bdf.filter(F.col("txt") != "x\nJoin y").select(
+        "id", F.col("txt").alias("t")
+    )
+    assert tuning._scan_only_plan(tricky)
+    target = spark.sparkContext.defaultParallelism
+    if bdf.rdd.getNumPartitions() < target:  # one file, one row group
+        spread = tuning.spread_file_scan(tricky)
+        assert spread.rdd.getNumPartitions() == target
+    assert not tuning._scan_only_plan(bdf.join(bdf.select("id"), "id"))

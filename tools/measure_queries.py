@@ -6,8 +6,15 @@ Runs each named registered query ``--runs`` times (default 5) in
 registry-interleaved order (q1 q2 ... q1 q2 ...) with a cold cache per
 repeat and the noop sink, exactly like bench.py's timed region, and
 prints one JSON line {"queries": {name: {"samples": [...], "min": s,
-"median": s}}, "tide": {...}}. Interleaving spreads window drift across
-the arms instead of concentrating it in one query's samples.
+"median": s, "compiles": [...], "build_jobs": [...]}}, "tide": {...}}.
+Interleaving spreads window drift across the arms instead of
+concentrating it in one query's samples.
+
+Per run, ``compiles`` counts the classes the code generator compiled
+(0 when every class came from the codegen cache) and ``build_jobs`` the
+Spark jobs launched while the plan was built, before its action (0
+when every read found its schema cached). Together they tell a query's
+fixed per-call costs apart from its data work.
 """
 
 from __future__ import annotations
@@ -23,6 +30,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import tide_probe
 from gmall_flink_yb_spark.functions.cacheutil import release_cache
+from gmall_flink_yb_spark.plans.inspect import codegen_compiles
 from gmall_flink_yb_spark.queries import QUERIES
 from gmall_flink_yb_spark.session import get_spark
 
@@ -49,16 +57,25 @@ def main() -> None:
     ).mapInPandas(lambda it: it, "id long").write.format("noop").mode(
         "overwrite"
     ).save()
+    sc = spark.sparkContext
     pre = tide_probe()
     samples: dict[str, list[float]] = {n: [] for n in names}
-    for _ in range(runs):
+    compiles: dict[str, list[int]] = {n: [] for n in names}
+    build_jobs: dict[str, list[int]] = {n: [] for n in names}
+    for rep in range(runs):
         for n in names:
             spark.catalog.clearCache()
-            spark.sparkContext.setJobDescription(f"measure:{n}")
+            group = f"measure:{n}:{rep}"
+            sc.setJobGroup(group, f"measure:{n}")
+            c0 = codegen_compiles(spark)
             t0 = time.time()
             df = QUERIES[n](spark, sf_dir)
+            build_jobs[n].append(
+                len(sc.statusTracker().getJobIdsForGroup(group))
+            )
             df.write.format("noop").mode("overwrite").save()
             samples[n].append(round(time.time() - t0, 3))
+            compiles[n].append(codegen_compiles(spark) - c0)
             release_cache(df)
     out = {
         "queries": {
@@ -66,6 +83,8 @@ def main() -> None:
                 "samples": s,
                 "min": min(s),
                 "median": round(statistics.median(s), 3),
+                "compiles": compiles[n],
+                "build_jobs": build_jobs[n],
             }
             for n, s in samples.items()
         },
