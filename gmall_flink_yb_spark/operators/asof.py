@@ -18,8 +18,9 @@ the union-and-window formulation:
       -> keep left rows
 
 One hash shuffle on the key, sort within partition, zero row explosion —
-the same cost profile as a single groupBy. Skewed keys can reuse
-`operators.skew.salted_join` upstream if one key dominates.
+the same cost profile as a single groupBy. A dominant key lands on one
+window task (AQE splits join skew, not window skew); drop bot keys
+upstream with `operators.skew.hot_keys` if one key dominates.
 
 Tie semantics: a right row with ts == left ts IS visible (at-or-before,
 i.e. `left.ts >= right.ts`), matching DuckDB's `ASOF JOIN ... ON l.ts >=

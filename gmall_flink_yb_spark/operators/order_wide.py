@@ -68,9 +68,6 @@ def interval_join(
     lower_seconds: float = -5.0,
     upper_seconds: float = 5.0,
     how: str = "inner",
-    skew_guard: bool = False,
-    salt_on: list[str] | None = None,
-    left_salt_on: list[str] | None = None,
 ) -> DataFrame:
     """J1 — equi-join + event-time range predicate
     (right.ts BETWEEN left.ts + lower AND left.ts + upper).
@@ -81,42 +78,10 @@ def interval_join(
     range as a post-join filter; in streaming the same expression with
     watermarks on both sides gives bounded state.
 
-    ``skew_guard`` (batch-BOTH-sides + inner only; a streaming side can't
-    run the plan-time sample job — and a streaming LEFT must not be
-    explode-replicated (ADVICE r6) — while outer sides would be
-    duplicated by replication): profile BOTH sides' key shares in ONE
-    sampled job (ADVICE r7 — the r6 form profiled only the right side, so
-    a hot key concentrated on the LEFT still made an unsplittable
-    straggler while reporting _skew_salt_buckets=None): the sides union
-    into a two-column frame where each row carries its own side's key and
-    NULL for the other, and ``hot_key_shares(null_in_total=False)`` keeps
-    each column's share denominator = its own side's rows. Keys hot on
-    the RIGHT salt the right rows and replicate ONLY the left rows
-    carrying them over the computed bucket count (VERDICT r6 #1 hot/cold
-    split); keys hot on the LEFT only take the mirror branch (left
-    salted, right hot rows replicated); a key hot on BOTH sides salts
-    whichever side carries more sampled rows and replicates the smaller
-    (ADVICE r8 — replication cost is #smaller-side-rows x buckets, the
-    minimum a salted plan can pay for that key); the cold remainder of
-    both sides takes the plain join and the branches union — inner-only,
-    so the disjoint key routing is lossless. Same range predicate on
-    every branch. The fired route is exposed as ``_skew_salt_buckets`` on the
-    result (None = plain; the max across fired branches otherwise) plus
-    ``_skew_salted_sides`` ({'right': buckets, 'left': buckets} for the
-    branches that fired).
-
-    Share caveat: shares are per-side ROW shares, so a very small side's
-    keys trivially exceed 1/shuffle_partitions — profiling therefore
-    requires a minimum sampled count (``min_sampled_count=8``) before a
-    key reports hot, so sides too small to estimate shares never fire;
-    should a borderline side still fire, the cost stays bounded (only
-    the OTHER side's rows for those keys replicate, buckets x #hot-key
-    rows). A genuinely tiny side belongs in a broadcast join upstream,
-    not an interval shuffle join.
-
-    ``salt_on`` / ``left_salt_on``: RIGHT- / LEFT-side columns giving
-    each row an identity so its salt is retry-deterministic (see
-    ``skew.salt_expr``); omit for keyless frames (rand fallback).
+    Key skew is AQE's: a sort-merge join whose partition holds a hot key
+    (even ONE key on one side) is split at run time by map-output blocks
+    (``SortMergeJoin(skew=true)`` in the final plan), so there is no
+    plan-time profile or salted branch here (see ``operators/skew.py``).
     """
     # cast NTZ timestamps through TimestampType first (session TZ is UTC)
     lts = F.col(f"l.{left_ts}").cast("timestamp").cast("double")
@@ -125,116 +90,7 @@ def interval_join(
         rts <= lts + F.lit(upper_seconds)
     )
     cond = (F.col(f"l.{left_key}") == F.col(f"r.{right_key}")) & range_cond
-    if (
-        skew_guard
-        and how == "inner"
-        and not right.isStreaming
-        and not left.isStreaming
-    ):
-        from gmall_flink_yb_spark.operators import skew as _skew
-
-        parts = _skew.shuffle_partitions(right)
-        combined = left.select(
-            F.col(left_key).cast("string").alias("_lk"),
-            F.lit(None).cast("string").alias("_rk"),
-        ).unionByName(
-            right.select(
-                F.lit(None).cast("string").alias("_lk"),
-                F.col(right_key).cast("string").alias("_rk"),
-            )
-        )
-        prof = _skew.hot_key_shares(
-            combined, ["_lk", "_rk"], 1.0 / parts, null_in_total=False,
-            min_sampled_count=8,  # tiny-sample guard: a small side's
-            # singletons all clear share thresholds; 8 sampled rows is
-            # the floor for a share estimate to mean anything
-            include_counts=True,
-        )
-        # A key hot on BOTH sides routes to the branch that salts its
-        # BIGGER side and replicates the smaller (ADVICE r8: routing every
-        # both-hot key right replicated ALL left rows carrying it across
-        # buckets — for a left-dominant key that is the larger cost, not
-        # the bounded one the docstring promises). Shares are per-side
-        # fractions and incomparable across sides; the raw sampled counts
-        # from the uniformly-sampled union are the comparable quantity.
-        n_l = {v: n for v, _, n in prof["_lk"]}
-        n_r = {v: n for v, _, n in prof["_rk"]}
-        hot_r = [
-            (v, s) for v, s, n in prof["_rk"]
-            if v not in n_l or n >= n_l[v]  # tie -> right (r7 behavior)
-        ]
-        hot_l = [
-            (v, s) for v, s, n in prof["_lk"]
-            if v not in n_r or n > n_r[v]
-        ]
-
-        salt_cond = (
-            (F.col(f"l.{left_key}") == F.col(f"r.{right_key}"))
-            & (F.col("l._salt_l") == F.col("r._salt_r"))
-            & range_cond
-        )
-
-        def _salted(l_sub: DataFrame, r_sub: DataFrame, buckets: int,
-                    salt_right: bool) -> DataFrame:
-            # salt the hot side's rows; replicate the other side's hot
-            # rows across every salt value (bounded: hot rows x buckets;
-            # sequence keeps the plan constant-size in buckets)
-            replicate = F.explode(
-                F.sequence(F.lit(0), F.lit(buckets - 1))
-            )
-            if salt_right:
-                r_s = r_sub.withColumn(
-                    "_salt_r", _skew.salt_expr(buckets, salt_on)
-                )
-                l_s = l_sub.withColumn("_salt_l", replicate)
-            else:
-                l_s = l_sub.withColumn(
-                    "_salt_l", _skew.salt_expr(buckets, left_salt_on)
-                )
-                r_s = r_sub.withColumn("_salt_r", replicate)
-            return (
-                l_s.alias("l")
-                .join(r_s.alias("r"), salt_cond, how)
-                .drop("_salt_l", "_salt_r")
-            )
-
-        branches: list[DataFrame] = []
-        sides: dict[str, int] = {}
-        l_rest, r_rest = left, right
-        if hot_r:
-            buckets_r = _skew.salt_buckets_for(
-                max(s for _, s in hot_r), parts
-            )
-            vals = [v for v, _ in hot_r]
-            l_hot, l_rest = _skew.hot_cold_split(l_rest, left_key, vals)
-            r_hot, r_rest = _skew.hot_cold_split(r_rest, right_key, vals)
-            branches.append(_salted(l_hot, r_hot, buckets_r, True))
-            sides["right"] = buckets_r
-        if hot_l:
-            buckets_l = _skew.salt_buckets_for(
-                max(s for _, s in hot_l), parts
-            )
-            vals = [v for v, _ in hot_l]
-            l_hot, l_rest = _skew.hot_cold_split(l_rest, left_key, vals)
-            r_hot, r_rest = _skew.hot_cold_split(r_rest, right_key, vals)
-            branches.append(_salted(l_hot, r_hot, buckets_l, False))
-            sides["left"] = buckets_l
-        if branches:
-            # inner-only: a hot-keyed row can never match a cold-keyed
-            # one, so both sides shed every hot key before the cold join
-            out = branches[0]
-            for b in branches[1:]:
-                out = out.unionByName(b)
-            out = out.unionByName(
-                l_rest.alias("l").join(r_rest.alias("r"), cond, how)
-            )
-            out._skew_salt_buckets = max(sides.values())
-            out._skew_salted_sides = sides
-            return out
-    out = left.alias("l").join(right.alias("r"), cond, how)
-    out._skew_salt_buckets = None
-    out._skew_salted_sides = {}
-    return out
+    return left.alias("l").join(right.alias("r"), cond, how)
 
 
 def enrich_dims(
@@ -242,7 +98,6 @@ def enrich_dims(
     dims: list[tuple[DataFrame, str, str, list[str] | None]],
     how: str = "left",
     strategy: str = "broadcast",
-    skew_guard: bool = True,
 ) -> DataFrame:
     """J2 — chain dimension joins against the fact stream.
 
@@ -253,68 +108,20 @@ def enrich_dims(
 
     ``strategy`` is the size-fallback knob (SURVEY §4.2): "broadcast" for
     dims that fit executor memory (every gmall dim does — zero shuffles on
-    the fact side); "shuffle_hash" for dims too big to broadcast but small
-    enough to hash (one shuffle each side, no sort); "auto" to leave the
-    choice to Catalyst/AQE size estimates.
-
-    ``skew_guard`` (shuffle_hash only — broadcast joins never shuffle the
-    fact side, so a hot key costs nothing there): profile ALL the fact
-    keys' value shares in ONE sampled plan-time job
-    (``skew.hot_key_shares`` — VERDICT r6 #4; the r6 form paid one eager
-    scan of the fact lineage PER DIM) and route a dim through the
-    hot/cold-split ``skew.salted_join`` when any of its key's values
-    exceeds 1/shuffle_partitions — the point where AQE's partition
-    splitting stops helping because the skew sits in ONE key (VERDICT r5
-    #3; the reference's exposure is a bot device on keyBy(mid),
-    BaseLogApp.java:74). Only rows carrying the hot values are salted and
-    only the matching dim rows replicate (VERDICT r6 #1). Detection
-    samples the ORIGINAL fact frame, so it only applies to keys present
-    on ``facts`` itself; snowflake second-hop keys (arriving via an
-    earlier dim) are dim-shaped and skipped. The one profile job executes
-    ``facts``' lineage — persist a DERIVED fact frame before calling
-    (ADVICE r6), or its upstream runs once for the profile and again for
-    the real job. Fired routes are recorded on the result as
-    ``_skew_salted_dims`` ({fact_key: buckets}).
+    the fact side, so a hot fact key costs nothing); "shuffle_hash" for
+    dims too big to broadcast but small enough to hash (one shuffle each
+    side, no sort); "auto" to leave the choice to Catalyst/AQE size
+    estimates. A hot fact key on a shuffled join is left to AQE's
+    run-time skew-join split; no plan-time job runs here.
     """
     if strategy not in ("broadcast", "shuffle_hash", "auto"):
         raise ValueError(f"unknown join strategy {strategy!r}")
-    from gmall_flink_yb_spark.operators import skew as _skew
-
-    skew_guard = skew_guard and not facts.isStreaming  # no plan-time
-    # sample job on a streaming frame; streaming dim joins broadcast
-    profile: dict[str, list[tuple[str, float]]] = {}
-    parts = None
-    if strategy == "shuffle_hash" and skew_guard:
-        parts = _skew.shuffle_partitions(facts)
-        candidates = list(
-            dict.fromkeys(
-                fk for _, fk, _, _ in dims if fk in facts.columns
-            )
-        )
-        if candidates:  # ONE sampled job for every dim's key column
-            profile = _skew.hot_key_shares(
-                facts, candidates, 1.0 / parts,
-                min_sampled_count=8,  # tiny-sample guard
-            )
-    fired: dict[str, int] = {}
     out = facts
     for dim_df, fact_key, dim_key, keep in dims:
         d = dim_df
         if keep is not None:
             d = d.select(dim_key, *keep)
         d = d.withColumnRenamed(dim_key, f"__dimkey_{fact_key}")
-        hot = profile.get(fact_key, [])
-        if hot:
-            buckets = _skew.salt_buckets_for(
-                max(s for _, s in hot), parts
-            )
-            out = _skew.salted_join(
-                out, d, fact_key, f"__dimkey_{fact_key}",
-                buckets=buckets, how=how,
-                hot_keys=[v for v, _ in hot],
-            )
-            fired[fact_key] = buckets
-            continue
         if strategy == "broadcast":
             d = F.broadcast(d)
         elif strategy == "shuffle_hash":
@@ -322,5 +129,4 @@ def enrich_dims(
         out = out.join(
             d, out[fact_key] == d[f"__dimkey_{fact_key}"], how
         ).drop(f"__dimkey_{fact_key}")
-    out._skew_salted_dims = fired
     return out

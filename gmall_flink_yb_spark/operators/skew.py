@@ -1,38 +1,37 @@
-"""Explicit key-salting for skewed joins and aggregations.
+"""Key salting for skewed aggregations; join skew is AQE's.
 
-AQE's skew-join splitting (enabled in session.py) handles most skew at
-runtime by splitting oversized partitions, but it only applies to sort-merge
-joins and can't help when one logical key is so hot that a single key's rows
-overflow an executor (the reference's ``keyBy(mid)`` pipelines have exactly
-this exposure: one bot device = one Flink subtask melting,
-BaseLogApp.java:74). These operators make the mitigation explicit:
+Measured rule (Spark 4.1, ``session.get_spark`` confs): AQE's skew-join
+split handles join skew at run time, including ONE hot key. When a
+sort-merge join's shuffle partition exceeds the skew threshold, AQE
+splits it by map-output blocks and replicates the other side's matching
+partition (``SortMergeJoin(skew=true)`` in the final plan), so a key
+holding 40% of the fact rows spreads over many tasks with no plan-time
+job. A plan-time profile + hot/cold salted join took 1.4-1.6x the
+plain join's time (16M facts, one key holding 40%, 4 cores), so joins
+carry no skew code.
 
-- salted_join: fact keys get a salt in [0, buckets); the build side is
-  replicated ``buckets`` times with every salt value. The join key becomes
-  (key, salt), so a hot key's rows spread over ``buckets`` reducers. With
-  ``hot_keys`` given (the production form — VERDICT r6 #1), ONLY rows
-  whose key is hot take the salted/replicated path and the cold remainder
-  takes a plain join, so replication cost is #hot_keys x buckets ROWS
-  instead of build_side x buckets — bounded even at cluster partition
-  counts where ``buckets`` reaches the thousands. Without ``hot_keys``
-  the whole build side replicates (use only for genuinely small builds).
-- salted_agg: two-phase aggregation — partial agg on (key, salt), final agg
-  on key. Spark's hash aggregate already does map-side partial aggregation,
-  so this only wins for algebraic aggs whose partial states are large
-  (e.g. collect_set) or under extreme single-key skew.
+AQE does not split AGGREGATION or WINDOW skew: a groupBy or a window
+partitioned by a hot key still lands that key on one reducer. This
+module keeps the mitigation for those shapes, used by the n-gram
+hot-gram guard (``functions/ngrams.py``):
 
-WHEN to reach for these (the documented threshold, exercised by
-tests/test_merge_skew.py): salt once a single key's row share exceeds
-~1/shuffle_partitions — at that point the key's reducer is the whole
-stage's straggler bound and AQE cannot split it further (skew-split works
-on partitions, not keys: a partition holding ONE giant key is
-unsplittable). Below that share, leave it to AQE's skew-join/partition
-splitting; above it, buckets ~= ceil(key_share * shuffle_partitions * 2)
-spreads the key back to average-partition size. For keyed-state streaming
-(uv/bounce), the same hot device is bounded per-key by CONSTANT state
-(one flag / one pending ts), so throughput skews but memory does not —
-mitigate upstream by dropping bot devices, the reference's exposure
-(BaseLogApp.java:74).
+- hot_key_shares: one sampled plan-time job reporting every value whose
+  row share exceeds a threshold (~1/shuffle_partitions — above it the
+  key's reducer is the stage's straggler bound).
+- hot_cold_split: route the hot values' rows to a separate branch.
+- salted_agg: two-phase aggregation — partial agg on (key, salt), final
+  agg on key, with buckets ~= ceil(key_share * shuffle_partitions * 2)
+  (``salt_buckets_for``) spreading the key back to average-partition
+  size. Spark's hash aggregate already does map-side partial
+  aggregation, so this only wins for aggregates whose partial states
+  are large or under extreme single-key skew.
+
+For per-key ORDER-DEPENDENT operators (bounce/CEP, per-key sequence
+windows) salting cannot help; ``hot_keys`` finds the bot devices to drop
+upstream (the reference's exposure: one bot device on ``keyBy(mid)``,
+BaseLogApp.java:74). For keyed-state streaming (uv/bounce) the same hot
+device is bounded per key by CONSTANT state (one flag / one pending ts),
+so throughput skews but memory does not.
 """
 
 from __future__ import annotations
@@ -48,9 +47,8 @@ def salt_expr(buckets: int, salt_on: list[str] | None = None) -> Column:
 
     With ``salt_on`` (columns forming a per-row identity) the salt is
     ``pmod(xxhash64(cols), buckets)`` — DETERMINISTIC under task retry, so
-    a recomputed partition reassigns every row the same salt and no join
-    match is dropped or duplicated even over a nondeterministic upstream
-    (ADVICE r6). Without it, ``rand(seed)`` is the documented fallback for
+    a recomputed partition reassigns every row the same salt even over a
+    nondeterministic upstream (ADVICE r6). Without it, ``rand(seed)`` is the documented fallback for
     keyless frames: per-partition-seeded rand is only retry-stable when
     upstream partitioning and row order are deterministic. Prefer
     ``salt_on`` whenever any unique id columns exist."""
@@ -80,9 +78,8 @@ def hot_cold_split(
 ) -> tuple[DataFrame, DataFrame]:
     """(hot_rows, cold_rows) of ``df`` by ``key_col`` membership in
     ``hot_keys`` (string-compared, like :func:`_is_hot`). NULL keys
-    always route COLD — an equi-join never matches NULL, so salting it is
-    pointless, and the cold branch is where left-join semantics preserve
-    it. Small lists inline one ``isin`` literal per side; lists over
+    always route COLD (:func:`hot_key_shares` never reports NULL hot).
+    Small lists inline one ``isin`` literal per side; lists over
     ``ISIN_LITERAL_MAX`` become a broadcast left-semi (hot) / left-anti
     (cold) join against a one-column hot-keys frame, so the plan carries
     one tiny relation instead of 2 x len(hot_keys) string literals per
@@ -109,79 +106,6 @@ def hot_cold_split(
     return hot, cold
 
 
-def salted_join(
-    facts: DataFrame,
-    build: DataFrame,
-    fact_key: str,
-    build_key: str,
-    buckets: int = 16,
-    how: str = "inner",
-    hot_keys: list | None = None,
-    salt_on: list[str] | None = None,
-) -> DataFrame:
-    """Join with the fact side salted and the build side replicated
-    ``buckets`` times, spreading each hot key over ``buckets`` tasks.
-    Output columns = fact columns + build columns (minus the build key).
-
-    ``hot_keys`` (VERDICT r6 #1 — the hot/cold split): when given, ONLY
-    rows whose key value is in ``hot_keys`` go through the salted plan,
-    with the build side replicated for those keys alone; everything else
-    takes a plain equi-join and the two halves union. Replication is then
-    bounded by #hot_keys x buckets rows, not build_size x buckets — at
-    cluster settings (share 0.4, 2000 partitions -> 1600 buckets) the
-    unbounded form replicates a full dim 1600x, the bounded form a few
-    thousand ROWS. NULL fact keys route to the cold branch, preserving
-    left-join semantics. The replicated build frame is exposed on the
-    result as ``_skew_replicated_build`` for tests/observability.
-
-    ``salt_on``: see :func:`salt_expr` — deterministic salts under retry.
-
-    Only inner/left joins are valid: an outer-preserved build row exists
-    ``buckets`` times after replication, so right/full joins would emit
-    every unmatched build record ``buckets`` times."""
-    if how not in ("inner", "left", "left_outer", "leftouter"):
-        raise ValueError(
-            f"salted_join supports inner/left joins only, got {how!r} "
-            "(the replicated build side would duplicate outer-preserved rows)"
-        )
-    if hot_keys is not None and not hot_keys:
-        out = facts.join(
-            build, facts[fact_key] == build[build_key], how
-        ).drop(build[build_key])
-        out._skew_replicated_build = None
-        return out
-    hot_facts, hot_build = facts, build
-    cold_facts = cold_build = None
-    if hot_keys is not None:
-        hot_facts, cold_facts = hot_cold_split(facts, fact_key, hot_keys)
-        hot_build, cold_build = hot_cold_split(build, build_key, hot_keys)
-    salted_facts = hot_facts.withColumn("_salt", salt_expr(buckets, salt_on))
-    # sequence, not an unrolled literal array: buckets scales with the
-    # hot share x shuffle partitions (tens of thousands at a fully-hot
-    # key on a cluster-sized session), and the plan must not grow with it
-    replicated = hot_build.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)))
-    )
-    cond = (salted_facts[fact_key] == replicated[build_key]) & (
-        salted_facts["_salt"] == replicated["_salt"]
-    )
-    salted_out = (
-        salted_facts.join(replicated, cond, how)
-        .drop(replicated["_salt"])
-        .drop(replicated[build_key])
-        .drop("_salt")
-    )
-    if hot_keys is None:
-        salted_out._skew_replicated_build = replicated
-        return salted_out
-    cold_out = cold_facts.join(
-        cold_build, cold_facts[fact_key] == cold_build[build_key], how
-    ).drop(cold_build[build_key])
-    out = salted_out.unionByName(cold_out)
-    out._skew_replicated_build = replicated
-    return out
-
-
 def salted_agg(
     df: DataFrame,
     key_cols: list[str],
@@ -206,77 +130,25 @@ def salted_agg(
     )
 
 
-# ---------------------------------------------------------------------------
-# Detection + automatic routing (VERDICT r4 #5 / r5 #3): the decision rule
-# documented above, wired so shuffling callers apply it without hand-tuning.
-# ---------------------------------------------------------------------------
-
-def top_key_share(
-    df: DataFrame,
-    key_col: str,
-    sample_fraction: float = 0.05,
-    seed: int = 42,
-) -> tuple[object, float]:
-    """(hottest key value, estimated row share) from a Bernoulli sample.
-
-    Single-key convenience probe (kept public for ad-hoc diagnosis and
-    tests); the production routing paths use :func:`hot_key_shares`,
-    which profiles EVERY hot value of MANY columns in one job.
-
-    One small eager job at plan-build time: scan ``key_col`` only (column
-    pruning reaches the parquet scan), sample, hash-aggregate, take the
-    max — the aggregate output is one row per DISTINCT sampled key, so the
-    job is bounded by key cardinality, not input rows. A 5% sample puts
-    the share estimate for any key big enough to matter (>1/parts of the
-    data) within a few relative percent; keys too rare to sample reliably
-    are by construction keys AQE can already handle.
-
-    Returns ``(None, 0.0)`` on an empty (or empty-after-sampling) frame.
-    """
-    s = (
-        df.select(key_col)
-        if sample_fraction >= 1.0
-        else df.select(key_col).sample(fraction=sample_fraction, seed=seed)
-    )
-    top = (
-        s.groupBy(key_col)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .agg(
-            F.max_by(F.col(key_col), F.col("_n")).alias("k"),
-            F.max("_n").alias("n"),
-            F.sum("_n").alias("total"),
-        )
-        .first()
-    )
-    if top is None or top["total"] is None or top["total"] == 0:
-        return None, 0.0
-    return top["k"], float(top["n"]) / float(top["total"])
-
-
 def hot_key_shares(
     df: DataFrame,
     key_cols: list[str],
     share_threshold: float,
     sample_fraction: float = 0.05,
     seed: int = 42,
-    null_in_total: bool = True,
     min_sampled_count: int = 1,
-    include_counts: bool = False,
 ) -> dict[str, list[tuple[str, float]]]:
     """Per key column, every value whose sampled row share exceeds
-    ``share_threshold`` — in ONE sampled job for ALL columns (VERDICT r6
-    #4: the per-dim ``top_key_share`` loop paid one eager scan of the
-    fact lineage per dim; this pays one total). Each sampled row explodes
-    into (column, value-as-string) pairs, one hash aggregate counts them,
-    and a window over the aggregate's tiny output (one row per distinct
-    sampled value) turns counts into shares.
+    ``share_threshold`` — in ONE sampled job for ALL columns. Each
+    sampled row explodes into (column, value-as-string) pairs, one hash
+    aggregate counts them, and per-column totals turn counts into
+    shares.
 
     Returns ``{key_col: [(value_str, share), ...]}`` with every input
     column present (empty list = no hot values). Values are STRINGS so
     mixed-type key columns share the one job; match them with
-    :func:`_is_hot`. NULL key values are never reported hot (an equi-join
-    never matches NULL, so salting it is pointless; hot/cold splits send
-    NULLs cold, where left-join semantics preserve them). Output is
+    :func:`_is_hot`. NULL key values are never reported hot
+    (:func:`hot_cold_split` sends NULLs cold). Output is
     bounded: at most len(key_cols)/share_threshold rows can exceed the
     threshold, so the collect is model-sized by construction.
 
@@ -291,16 +163,8 @@ def hot_key_shares(
     single-reducer shape this module exists to avoid.)
 
     One eager job runs at plan-build time over ``df``'s lineage — callers
-    enriching a DERIVED fact frame should persist it first (ADVICE r6),
-    or the upstream pipeline executes once here and again for the real
-    job.
-
-    ``null_in_total=False`` excludes NULL-valued rows from each column's
-    denominator. That is the contract for profiling TWO frames' keys in
-    one job (ADVICE r7, interval_join): union the sides into one frame
-    where each row carries its own side's key and NULL for the other —
-    with NULLs excluded, each column's total counts exactly its own
-    side's sampled rows, so shares stay per-side row shares.
+    profiling a DERIVED frame should sample or persist it first, or the
+    upstream pipeline executes once here and again for the real job.
 
     ``min_sampled_count``: a value is only reported hot if it was seen
     at least this many times in the sample — the tiny-sample guard. A
@@ -311,16 +175,7 @@ def hot_key_shares(
     over ``share_threshold`` is expected ``threshold x sampled_total``
     times in the sample, so requiring ~8 costs detection power only
     when the sample is too small for share estimates to mean anything —
-    exactly when firing should be suppressed.
-
-    ``include_counts``: return ``(value, share, sampled_n)`` triples
-    instead of pairs. The sampled count is the ``_n`` already present in
-    the collected rows — same single job. Shares are PER-COLUMN fractions
-    so they cannot be compared across columns when the columns represent
-    different frames (the two-frame union contract above); the raw
-    sampled counts CAN, because the union is sampled uniformly — that
-    absolute comparison is what lets ``interval_join`` pick which side to
-    salt for a key hot on BOTH sides (ADVICE r8)."""
+    exactly when firing should be suppressed."""
     s = df.select(*key_cols)
     if sample_fraction < 1.0:
         s = s.sample(fraction=sample_fraction, seed=seed)
@@ -338,10 +193,7 @@ def hot_key_shares(
         ).alias("p")
     ).select("p.c", "p.v")
     counts = pairs.groupBy("c", "v").agg(F.count(F.lit(1)).alias("_n"))
-    totals_src = counts if null_in_total else counts.filter(
-        F.col("v").isNotNull()
-    )
-    totals = totals_src.groupBy("c").agg(F.sum("_n").alias("_total"))
+    totals = counts.groupBy("c").agg(F.sum("_n").alias("_total"))
     rows = (
         counts.join(F.broadcast(totals), "c")
         .filter(
@@ -352,17 +204,12 @@ def hot_key_shares(
             )
             & (F.col("_n") >= F.lit(int(min_sampled_count)))
         )
-        .select(
-            "c", "v", (F.col("_n") / F.col("_total")).alias("_share"), "_n"
-        )
+        .select("c", "v", (F.col("_n") / F.col("_total")).alias("_share"))
         .collect()  # bounded: <= len(key_cols)/share_threshold rows
     )
     out: dict[str, list[tuple[str, float]]] = {k: [] for k in key_cols}
     for r in rows:
-        if include_counts:
-            out[r["c"]].append((r["v"], float(r["_share"]), int(r["_n"])))
-        else:
-            out[r["c"]].append((r["v"], float(r["_share"])))
+        out[r["c"]].append((r["v"], float(r["_share"])))
     return out
 
 
@@ -379,58 +226,6 @@ def salt_buckets_for(share: float, shuffle_partitions: int) -> int:
     """buckets ~= ceil(share * parts * 2) — spreads the hot key back to
     roughly average-partition size with 2x headroom (module docstring)."""
     return max(2, math.ceil(share * shuffle_partitions * 2))
-
-
-def skew_aware_join(
-    facts: DataFrame,
-    build: DataFrame,
-    fact_key: str,
-    build_key: str,
-    how: str = "inner",
-    sample_fraction: float = 0.05,
-    salt_on: list[str] | None = None,
-) -> DataFrame:
-    """Measure-then-route shuffle join: plain equi-join below the skew
-    threshold, hot/cold-split :func:`salted_join` above it.
-
-    The documented rule: a single key holding more than 1/shuffle_partitions
-    of the fact rows is a straggler AQE cannot split (a partition holding
-    ONE giant key is unsplittable). Detection is one sampled aggregate over
-    the fact key column at plan-build time (:func:`hot_key_shares`); every
-    key over the threshold routes through the salted branch with
-    ``salt_buckets_for(max_share, parts)`` buckets, with the build side
-    replicated for THOSE KEYS ONLY (VERDICT r6 #1) — the cold remainder
-    keeps the plain join. Output contract matches :func:`salted_join`
-    either way: fact columns + build columns minus the build key. The
-    chosen route is exposed on the result as ``_skew_salt_buckets``
-    (None = plain) plus ``_skew_hot_keys`` for tests/observability.
-    """
-    parts = shuffle_partitions(facts)
-    hot = hot_key_shares(
-        facts, [fact_key], 1.0 / parts, sample_fraction,
-        min_sampled_count=8,  # tiny-sample guard (see hot_key_shares)
-    )[fact_key]
-    if hot:
-        buckets = salt_buckets_for(max(s for _, s in hot), parts)
-        out = salted_join(
-            facts,
-            build,
-            fact_key,
-            build_key,
-            buckets=buckets,
-            how=how,
-            hot_keys=[v for v, _ in hot],
-            salt_on=salt_on,
-        )
-        out._skew_salt_buckets = buckets
-        out._skew_hot_keys = [v for v, _ in hot]
-        return out
-    out = facts.join(
-        build, facts[fact_key] == build[build_key], how
-    ).drop(build[build_key])
-    out._skew_salt_buckets = None
-    out._skew_hot_keys = []
-    return out
 
 
 def hot_keys(

@@ -2365,16 +2365,6 @@ def q_interval_join_shipments(spark: SparkSession, sf_dir: str) -> DataFrame:
         right_ts="l_shipdate",
         lower_seconds=0.0,
         upper_seconds=30 * 24 * 3600.0,
-        # production skew wiring (VERDICT r5 #3): sample the lineitem key
-        # share at plan time; hot l_orderkeys (>1/shuffle_partitions of
-        # rows) flip ONLY their rows to the salted branch (r6 hot/cold
-        # split). TPC-H keys are flat, so here the sample is the only
-        # added work and the plan is unchanged — the salted route is
-        # exercised by tests/test_merge_skew.py on a 40%-hot synthetic
-        # key. salt_on: (orderkey, linenumber) is lineitem's primary key,
-        # making the salt retry-deterministic (ADVICE r6).
-        skew_guard=True,
-        salt_on=["l_orderkey", "l_linenumber"],
     )
     return j.groupBy(
         F.date_format("o_orderdate", "yyyy-MM").alias("order_month")

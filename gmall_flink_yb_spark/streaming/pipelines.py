@@ -293,7 +293,7 @@ def _read_dim_manifest(
     spark: SparkSession, path: str, gen: int | None = None
 ) -> dict | None:
     """Parse the dim manifest at ``gen`` (default: the newest one); None
-    when the table has no manifest (absent or pre-manifest legacy)."""
+    when the table has no manifest (nothing committed yet)."""
     gens = _dim_manifest_gens(spark, path)
     if not gens:
         return None
@@ -342,17 +342,20 @@ def _write_dim_manifest(
         out.close()
 
 
-def _vacuum_dim(
-    spark: SparkSession, path: str, cur_gen: int, retain_gens: int
-) -> None:
+def _vacuum_dim(spark: SparkSession, path: str, retain_gens: int) -> None:
     """Drop generation dirs no manifest in the retention window references,
-    and manifests older than the window. ``retain_gens`` superseded
-    manifests stay readable, so a reader that resolved a manifest up to
-    ``retain_gens`` upserts ago still finds every file of its snapshot."""
-    floor = cur_gen - retain_gens
+    and manifests older than the window. The window is the newest manifest
+    plus ``retain_gens`` superseded ones, counted as manifests (generation
+    numbers can skip an orphaned dir), so a reader that resolved a
+    manifest up to ``retain_gens`` upserts ago still finds every file of
+    its snapshot. An orphaned ``gen=`` dir (renamed into place by an
+    upsert that died before its manifest) is referenced by no manifest
+    and goes here."""
+    gens = _dim_manifest_gens(spark, path)
+    keep = gens[-(retain_gens + 1):]
     live: set[int] = set()
-    for g in _dim_manifest_gens(spark, path):
-        if g < floor:
+    for g in gens:
+        if g not in keep:
             fs, jp = _hadoop_fs(spark, _dim_manifest_file(path, g))
             fs.delete(jp, False)
             continue
@@ -373,11 +376,12 @@ def read_dim_parquet(spark: SparkSession, path: str) -> DataFrame:
     them with a new manifest, so this DataFrame keeps reading an
     unchanging file set (valid for at least ``retain_gens`` subsequent
     upserts). The manifest's writer schema types the read, so it
-    launches no inference job. Falls back to a plain parquet read for
-    pre-manifest layouts."""
+    launches no inference job. A dim with no manifest has no committed
+    rows (any ``gen=`` dir there is an upsert that died before its
+    publish), so reading one raises ``FileNotFoundError``."""
     m = _read_dim_manifest(spark, path)
     if m is None:
-        return spark.read.parquet(path)
+        raise FileNotFoundError(f"dim table {path} has no committed manifest")
     if not m["buckets"]:
         # an all-empty-upserts table: the gen dir holds no parquet files,
         # so a path read would fail schema inference (ADVICE r5). The
@@ -444,19 +448,24 @@ def upsert_dim_parquet(
     ``n_buckets`` is persisted in the manifest and the persisted value
     ALWAYS wins on later upserts (ADVICE r04): re-bucketing under a new
     modulus without a full rewrite would strand old pk rows in buckets the
-    merge never loads, silently duplicating pks. Legacy layouts (flat
-    files, or round-4 top-level ``_pk_bucket=`` dirs, whose modulus is
-    unrecorded) are migrated by a one-time full merge + rewrite under the
-    caller's modulus. All file probes go through the Hadoop FS API, so the
-    same code is correct against HDFS/S3A, not just local disk. Production
-    target is Delta/Iceberg ``MERGE INTO`` either way — this is the same
-    snapshot-manifest idea those formats implement with richer metadata.
+    merge never loads, silently duplicating pks. All file probes go
+    through the Hadoop FS API, so the same code is correct against
+    HDFS/S3A, not just local disk. Production target is Delta/Iceberg
+    ``MERGE INTO`` either way — this is the same snapshot-manifest idea
+    those formats implement with richer metadata.
 
     Concurrency contract: SINGLE WRITER per dim table (one CDC driver per
     sink, the reference's deployment shape); readers are unlimited and
     snapshot-isolated. A second concurrent writer deterministically fails
     its publish (staging-dir rename or create-new manifest) without
     corrupting the winner's generation.
+
+    Crash contract: the manifest create is the commit point. An upsert
+    that dies after renaming its ``gen=`` dir into place but before the
+    manifest leaves an orphan dir no manifest names; the next upsert
+    numbers its generation past every existing ``gen=`` dir, so the
+    orphan is never reused (a replayed batch publishes cleanly) and its
+    vacuum deletes it.
     """
     manifest = _read_dim_manifest(spark, path)
     if manifest is not None:
@@ -475,19 +484,8 @@ def upsert_dim_parquet(
         .withColumn("_pk_bucket", bucket_of)
     )
     base = path.rstrip("/")
-    legacy = manifest is None and hadoop_path_exists(spark, path)
-    if legacy:
-        # pre-manifest layout: modulus unknown/unrecorded -> one-time full
-        # merge and rewrite under the caller's modulus
-        old = spark.read.option("basePath", path).parquet(path)
-        if "_pk_bucket" in old.columns:
-            old = old.drop("_pk_bucket")
-        old = old.withColumn("_pk_bucket", bucket_of)
-        merged = old.join(new_rows.select(pk), pk, "left_anti").unionByName(
-            new_rows
-        )
-        gen, prev_buckets = 1, {}
-    elif manifest is not None:
+    merged, prev_buckets = new_rows, {}
+    if manifest is not None:
         # bounded driver state: at most n_buckets rows
         touched = [
             r["_pk_bucket"]
@@ -507,12 +505,14 @@ def upsert_dim_parquet(
             merged = old.join(
                 new_rows.select(pk), pk, "left_anti"
             ).unionByName(new_rows)
-        else:
-            merged = new_rows
-        gen, prev_buckets = manifest["gen"] + 1, dict(manifest["buckets"])
-    else:
-        merged = new_rows
-        gen, prev_buckets = 1, {}
+        prev_buckets = dict(manifest["buckets"])
+    # past the newest manifest AND every gen= dir: an orphan left by a
+    # crash between rename and manifest is skipped, never reused
+    gen_dirs = hadoop_child_dirs(spark, path, "gen=")
+    gen = 1 + max(
+        [manifest["gen"] if manifest else 0]
+        + [int(d.split("=", 1)[1]) for d in gen_dirs]
+    )
     # Collision safety (ADVICE r5): the store assumes a SINGLE writer (one
     # CDC driver per dim table — the reference's one-job-per-sink layout),
     # with the create-new manifest as the commit point. Defense in depth
@@ -541,18 +541,7 @@ def upsert_dim_parquet(
     _write_dim_manifest(
         spark, path, gen, n_buckets, buckets, schema_json=merged.schema.json()
     )
-    if legacy:
-        # clear superseded legacy files (one-time; concurrent readers of a
-        # PRE-manifest layout have no snapshot guarantee to preserve)
-        fs, jbase = _hadoop_fs(spark, base)
-        for st in fs.listStatus(jbase):
-            name = st.getPath().getName()
-            if not (
-                name.startswith("gen=")
-                or name.startswith(_DIM_MANIFEST_PREFIX)
-            ):
-                fs.delete(st.getPath(), True)
-    _vacuum_dim(spark, path, gen, retain_gens)
+    _vacuum_dim(spark, path, retain_gens)
 
 
 def start_cdc_routing(

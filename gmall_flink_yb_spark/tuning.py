@@ -18,6 +18,8 @@ decisions AQE cannot make:
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
 from pyspark.sql import DataFrame
 
 # above-file-count threshold where per-file size stats switch to
@@ -89,23 +91,35 @@ _SPREAD_SCAN_NODES = frozenset({
 })
 
 
+# analyzed-plan node names that can emit more rows than their inputs
+# hold, so leaf-file row counts bound nothing (see file_backed_rows)
+_ROW_MULTIPLYING_NODES = frozenset({
+    "Join", "LateralJoin", "AsOfJoin", "Generate", "Expand",
+})
+
+
+def _plan_node_names(df: DataFrame) -> Iterator[str]:
+    """Yield the node name of every node of ``df``'s analyzed plan,
+    subquery plans included. Walks the JVM tree and yields exact
+    ``nodeName()``s, so text inside the plan (a literal, a column name)
+    is never mistaken for a node. Raises whatever py4j raises when the
+    plan cannot be read; callers treat that as "not this shape"."""
+    stack = [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        yield node.nodeName()
+        for seq in (node.children(), node.subqueries()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
+
+
 def _scan_only_plan(df: DataFrame) -> bool:
     """True iff every node of ``df``'s analyzed plan, subquery plans
     included, is a Project/Filter/alias over a relation (see
-    ``spread_file_scan``). Walks the JVM tree and compares exact node
-    names, so text inside the plan (a literal, a column name) is never
-    mistaken for a node."""
+    ``spread_file_scan``)."""
     try:
-        stack = [df._jdf.queryExecution().analyzed()]
-        while stack:
-            node = stack.pop()
-            if node.nodeName() not in _SPREAD_SCAN_NODES:
-                return False
-            for seq in (node.children(), node.subqueries()):
-                stack.extend(seq.apply(i) for i in range(seq.size()))
+        return all(n in _SPREAD_SCAN_NODES for n in _plan_node_names(df))
     except Exception:
         return False
-    return True
 
 
 def input_file_bytes(df: DataFrame) -> int | None:
@@ -146,10 +160,10 @@ def input_file_bytes(df: DataFrame) -> int | None:
 def file_backed_rows(df: DataFrame) -> int | None:
     """Row count for a parquet-file-backed frame from footer metadata —
     driver-side, no Spark job. Exact for scan + row-preserving plans;
-    ``None`` when the frame isn't local-parquet-backed or its plan can
-    MULTIPLY rows (Join/Generate/Expand — leaf counts then bound
-    nothing). Row-SHRINKING nodes (Filter/Sample/Aggregate) only make it
-    an upper bound — the safe direction for SRP plane derivation
+    ``None`` when the frame isn't local-parquet-backed or its plan has a
+    node that can MULTIPLY rows (``_ROW_MULTIPLYING_NODES``, matched by
+    exact node name — leaf counts then bound nothing). Row-SHRINKING
+    nodes (Filter/Sample/Aggregate) only make it an upper bound — the safe direction for SRP plane derivation
     (similarity._file_backed_rows delegates here).
     Footer reads cap at ``_MAX_FILE_STATS`` files, then stride-sample and
     extrapolate by file count."""
@@ -157,12 +171,11 @@ def file_backed_rows(df: DataFrame) -> int | None:
 
     try:
         files = df.inputFiles()
-        plan = df._jdf.queryExecution().analyzed().toString()
+        if any(n in _ROW_MULTIPLYING_NODES for n in _plan_node_names(df)):
+            return None
     except Exception:
         return None
     if not files or any(not f.endswith(".parquet") for f in files):
-        return None
-    if any(op in plan for op in ("Join", "Generate", "Expand")):
         return None
     paths = []
     for f in files:

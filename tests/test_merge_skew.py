@@ -1,5 +1,6 @@
-"""merge_wide (PaymentWide-style null-coalescing merge) and explicit
-skew-salting operators: salted forms must equal their unsalted answers."""
+"""merge_wide (PaymentWide-style null-coalescing merge) and skew
+handling: salted aggregations must equal their unsalted answers, and
+skewed joins are split by AQE at run time."""
 
 from __future__ import annotations
 
@@ -7,7 +8,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from gmall_flink_yb_spark.operators.merge_wide import merge_wide
-from gmall_flink_yb_spark.operators.skew import salted_agg, salted_join
+from gmall_flink_yb_spark.operators.skew import salted_agg
 
 
 def test_merge_wide_null_coalescing(spark):
@@ -27,24 +28,6 @@ def test_merge_wide_null_coalescing(spark):
     assert got[2]["pay_type"] == "cash"      # right-only column passes through
     assert got[3]["user_name"] == "cal"      # full-outer keeps right-only keys
     assert got[3]["amount"] is None
-
-
-def test_salted_join_matches_plain_join(spark, sf_dir):
-    from gmall_flink_yb_spark.sources.readers import read_table
-
-    orders = read_table(spark, sf_dir, "orders")
-    cust = read_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_nationkey"
-    )
-    plain = orders.join(
-        cust, orders["o_custkey"] == cust["c_custkey"]
-    ).groupBy("c_nationkey").count()
-    salted = salted_join(
-        orders, cust, "o_custkey", "c_custkey", buckets=8
-    ).groupBy("c_nationkey").count()
-    assert sorted(map(tuple, salted.collect())) == sorted(
-        map(tuple, plain.collect())
-    )
 
 
 def test_enrich_dims_shuffle_hash_fallback(spark, sf_dir):
@@ -292,94 +275,6 @@ def test_hot_shingle_generates_no_prefix_candidates(spark):
     assert jaccard_prefix_pairs(docs, "doc_id", "text", 0.5).count() == 0
 
 
-def test_skew_aware_join_salts_hot_key_and_not_flat(spark):
-    """The wired decision rule (VERDICT r5 #3): a 40%-hot fact key must
-    route through the salted plan; a flat key distribution must keep the
-    plain join. Both routes must produce the plain join's exact answer."""
-    from gmall_flink_yb_spark.operators.skew import skew_aware_join, top_key_share
-
-    hot = _hot_key_events(spark, n=20_000, hot_share=0.4).select(
-        F.col("mid"), F.col("event_id")
-    )
-    flat = _hot_key_events(spark, n=20_000, hot_share=0.0).select(
-        F.col("mid"), F.col("event_id")
-    )
-    build = spark.createDataFrame(
-        [("hot", "bot")] + [(f"m{i}", f"dev{i}") for i in range(200)],
-        ["dev_mid", "label"],
-    )
-
-    salted = skew_aware_join(hot, build, "mid", "dev_mid", how="left")
-    assert salted._skew_salt_buckets is not None and salted._skew_salt_buckets >= 2
-    plain = skew_aware_join(flat, build, "mid", "dev_mid", how="left")
-    assert plain._skew_salt_buckets is None
-
-    expected = (
-        hot.join(build, hot["mid"] == build["dev_mid"], "left")
-        .groupBy("label").count()
-    )
-    got = salted.groupBy("label").count()
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, expected.collect())
-    )
-    # the estimate that drove the decision is in the right ballpark
-    _, share = top_key_share(hot, "mid")
-    assert 0.3 < share < 0.5
-
-
-def test_enrich_dims_skew_guard_fires_on_hot_key(spark):
-    """enrich_dims(strategy='shuffle_hash') with a 40%-hot fact key must
-    salt that dim join (and record it); a flat distribution must not."""
-    from gmall_flink_yb_spark.operators.order_wide import enrich_dims
-
-    hot = _hot_key_events(spark, n=20_000, hot_share=0.4)
-    flat = _hot_key_events(spark, n=20_000, hot_share=0.0)
-    dim = spark.createDataFrame(
-        [("hot", "bot")] + [(f"m{i}", f"dev{i}") for i in range(200)],
-        ["dev_mid", "label"],
-    )
-    dims = [(dim, "mid", "dev_mid", ["label"])]
-
-    salted = enrich_dims(hot, dims, how="left", strategy="shuffle_hash")
-    assert list(salted._skew_salted_dims) == ["mid"]
-    plain = enrich_dims(flat, dims, how="left", strategy="shuffle_hash")
-    assert plain._skew_salted_dims == {}
-
-    expected = enrich_dims(hot, dims, how="left", strategy="broadcast")
-    assert sorted(
-        map(tuple, salted.groupBy("label").count().collect())
-    ) == sorted(map(tuple, expected.groupBy("label").count().collect()))
-
-
-def test_interval_join_skew_guard(spark):
-    """interval_join(skew_guard=True) on a hot right key salts (right
-    salted, left replicated) and matches the plain answer; flat stays
-    plain; streaming/outer joins never sample."""
-    import datetime
-
-    from gmall_flink_yb_spark.operators.order_wide import interval_join
-
-    base = datetime.datetime(2024, 1, 1)
-    left = spark.createDataFrame(
-        [("hot", base), ("m1", base), ("m2", base)], ["k", "lts"]
-    )
-    right = _hot_key_events(spark, n=20_000, hot_share=0.4).select(
-        F.col("mid").alias("rk"), F.col("ts").alias("rts")
-    )
-    j = interval_join(
-        left, right, "k", "rk", "lts", "rts",
-        lower_seconds=0.0, upper_seconds=3600.0, skew_guard=True,
-    )
-    assert j._skew_salt_buckets is not None
-    plain = interval_join(
-        left, right, "k", "rk", "lts", "rts",
-        lower_seconds=0.0, upper_seconds=3600.0,
-    )
-    assert plain._skew_salt_buckets is None
-    assert j.count() == plain.count()
-    assert "_salt_l" not in j.columns and "_salt_r" not in j.columns
-
-
 def test_uv_agg_strategy_matches_window(spark):
     """The skew-immune min_by-aggregate uv form must pick the same first
     rows as the row_number window form (deterministic: order includes the
@@ -399,160 +294,88 @@ def test_uv_agg_strategy_matches_window(spark):
     assert agg_rows == win_rows and len(agg_rows) > 0
 
 
-def test_salted_join_hot_cold_bounds_replication(spark):
-    """VERDICT r6 #1: with ``hot_keys`` given, the replicated branch holds
-    EXACTLY #hot_build_rows x buckets rows (here the build has one row per
-    key, so #hot_keys x buckets) — not build_size x buckets — and the
-    split answer still equals the plain join, including NULL fact keys
-    preserved through the cold branch under a left join."""
-    buckets = 16
-    facts = _hot_key_events(spark, n=20_000, hot_share=0.4).select(
-        F.when(F.col("event_id") % 997 == 0, F.lit(None)).otherwise(
-            F.col("mid")
-        ).alias("mid"),
-        F.col("event_id"),
-    )
-    build = spark.createDataFrame(
-        [("hot", "bot")] + [(f"m{i}", f"dev{i}") for i in range(200)],
-        ["dev_mid", "label"],
-    )
-    out = salted_join(
-        facts, build, "mid", "dev_mid", buckets=buckets,
-        how="left", hot_keys=["hot"],
-    )
-    assert out._skew_replicated_build.count() == 1 * buckets
-    # vs the unbounded form: whole build x buckets
-    full = salted_join(facts, build, "mid", "dev_mid", buckets=buckets,
-                       how="left")
-    assert full._skew_replicated_build.count() == 201 * buckets
-    plain = facts.join(
-        build, facts["mid"] == build["dev_mid"], "left"
-    ).drop("dev_mid")
-    key = lambda r: (r["event_id"],)  # noqa: E731
-    assert sorted(
-        (r["event_id"], r["mid"], r["label"]) for r in out.collect()
-    ) == sorted(
-        (r["event_id"], r["mid"], r["label"]) for r in plain.collect()
-    )
-
-
-def test_salted_join_deterministic_salt(spark):
+def test_salt_expr_deterministic(spark):
     """salt_on (ADVICE r6): xxhash64-derived salts are a pure function of
     the row, so two evaluations of the same plan assign identical salts
-    (retry-stability), and the join answer matches plain."""
+    (retry-stability)."""
     from gmall_flink_yb_spark.operators.skew import salt_expr
 
-    facts = _hot_key_events(spark, n=5_000, hot_share=0.4).select(
-        "mid", "event_id"
-    )
+    facts = _hot_key_events(spark, n=5_000, hot_share=0.4)
     two = facts.select(
         "event_id",
         salt_expr(8, ["event_id"]).alias("s1"),
         salt_expr(8, ["event_id"]).alias("s2"),
     )
     assert two.filter("s1 <> s2").count() == 0
-    build = spark.createDataFrame(
-        [("hot", "bot")] + [(f"m{i}", f"dev{i}") for i in range(200)],
-        ["dev_mid", "label"],
-    )
-    out = salted_join(
-        facts, build, "mid", "dev_mid", buckets=8, how="left",
-        hot_keys=["hot"], salt_on=["event_id"],
-    )
-    plain = facts.join(
-        build, facts["mid"] == build["dev_mid"], "left"
-    ).drop("dev_mid")
-    assert sorted(map(tuple, out.select("event_id", "label").collect())) \
-        == sorted(map(tuple, plain.select("event_id", "label").collect()))
 
 
-def test_skew_aware_join_replication_bounded(spark):
-    """The wired route exposes its hot keys and its replicated branch is
-    bounded by them (#hot_keys x buckets rows for a 1-row-per-key dim)."""
-    from gmall_flink_yb_spark.operators.skew import skew_aware_join
+def test_aqe_splits_skewed_joins_at_run_time(spark):
+    """Join skew is left to AQE: with a 40%-hot fact key, an inner join,
+    a left join and an interval_join each run as
+    ``SortMergeJoin(skew=true)`` (the hot partition split by map-output
+    blocks), and each answer equals the same join with the skew split
+    off. Small advisory/threshold sizes stand in for cluster-sized data;
+    the run-time broadcast is off so every arm shuffles."""
+    import datetime
 
-    hot = _hot_key_events(spark, n=20_000, hot_share=0.4).select(
-        "mid", "event_id"
-    )
-    build = spark.createDataFrame(
-        [("hot", "bot")] + [(f"m{i}", f"dev{i}") for i in range(200)],
-        ["dev_mid", "label"],
-    )
-    out = skew_aware_join(hot, build, "mid", "dev_mid", how="left")
-    assert out._skew_hot_keys == ["hot"]
-    b = out._skew_salt_buckets
-    assert b is not None
-    assert out._skew_replicated_build.count() == len(out._skew_hot_keys) * b
-
-
-def test_enrich_dims_one_plan_time_profile_job(spark, monkeypatch):
-    """VERDICT r6 #4 / ADVICE r6: a 3-dim enrich runs exactly ONE sampled
-    profile call covering every (deduped, fact-resident) key column — not
-    one per dim — and the routing decisions match the per-dim form."""
-    import gmall_flink_yb_spark.operators.skew as skew_mod
-    from gmall_flink_yb_spark.operators.order_wide import enrich_dims
-
-    hot = _hot_key_events(spark, n=20_000, hot_share=0.4)
-    dim1 = spark.createDataFrame(
-        [("hot", "bot")] + [(f"m{i}", f"dev{i}") for i in range(200)],
-        ["dev_mid", "label"],
-    )
-    dim2 = spark.createDataFrame([("1", "new")], ["flag", "flag_name"])
-    dim3 = spark.createDataFrame(
-        [(True, "entry")], ["entry_key", "entry_name"]
-    )
-    dims = [
-        (dim1, "mid", "dev_mid", ["label"]),
-        (dim2, "is_new", "flag", ["flag_name"]),
-        # second dim on the SAME fact key: must not re-profile it
-        (dim1.withColumnRenamed("label", "label2"), "mid", "dev_mid",
-         ["label2"]),
-        (dim3, "is_entry", "entry_key", ["entry_name"]),
-    ]
-    calls = []
-    orig = skew_mod.hot_key_shares
-
-    def counting(df, key_cols, *a, **k):
-        calls.append(list(key_cols))
-        return orig(df, key_cols, *a, **k)
-
-    monkeypatch.setattr(skew_mod, "hot_key_shares", counting)
-    out = enrich_dims(hot, dims, how="left", strategy="shuffle_hash")
-    assert calls == [["mid", "is_new", "is_entry"]]
-    # the hot device key fired; is_new='1' is 100% of rows -> also hot;
-    # boolean is_entry is concentrated too — what matters for the bound:
-    # mid routed salted and recorded
-    assert "mid" in out._skew_salted_dims
-    # broadcast strategy never profiles
-    calls.clear()
-    enrich_dims(hot, dims, how="left", strategy="broadcast")
-    assert calls == []
-
-
-def test_interval_join_streaming_left_never_salted(spark):
-    """ADVICE r6: a streaming LEFT with a batch right must not take the
-    salted branch (it would explode-replicate the stream); the guard now
-    requires both sides batch."""
-    left = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", "1")
-        .load()
-        .select(
-            F.col("value").cast("string").alias("k"),
-            F.col("timestamp").alias("lts"),
-        )
-    )
-    right = _hot_key_events(spark, n=5_000, hot_share=0.5).select(
-        F.col("mid").alias("rk"), F.col("ts").alias("rts")
-    )
     from gmall_flink_yb_spark.operators.order_wide import interval_join
 
-    j = interval_join(
-        left, right, "k", "rk", "lts", "rts",
-        lower_seconds=0.0, upper_seconds=60.0, skew_guard=True,
+    s = spark.newSession()
+    s.conf.set(
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum", "16"
     )
-    assert j._skew_salt_buckets is None
-    assert j.isStreaming
+    s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4k")
+    s.conf.set(
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16k"
+    )
+    s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    n, base = 20_000, datetime.datetime(2024, 1, 1)
+
+    def mid(c):
+        return F.when(c == 0, F.lit("hot")).otherwise(
+            F.concat(F.lit("m"), c.cast("string"))
+        )
+
+    # ids below 40% of n all carry the hot key; four map tasks give AQE
+    # map-output blocks to split the hot partition by
+    facts = s.range(0, n, numPartitions=4).select(
+        mid(F.when(F.col("id") < int(n * 0.4), 0).otherwise(F.col("id") % 200))
+        .alias("mid"),
+        F.col("id").alias("event_id"),
+        (F.lit(base) + F.make_interval(secs=(F.col("id") % 60).cast("double")))
+        .alias("ts"),
+    )
+    build = s.range(0, 200, 2, numPartitions=2).select(
+        mid(F.col("id")).alias("dev_mid"),
+        F.concat(F.lit("dev"), F.col("id").cast("string")).alias("label"),
+        F.lit(base).alias("dev_ts"),
+    )
+    joins = {
+        "inner": lambda: facts.join(
+            build, facts["mid"] == build["dev_mid"], "inner"
+        ),
+        "left": lambda: facts.join(
+            build, facts["mid"] == build["dev_mid"], "left"
+        ),
+        "interval": lambda: interval_join(
+            facts, build, "mid", "dev_mid", "ts", "dev_ts",
+            lower_seconds=-30.0, upper_seconds=0.0,
+        ),
+    }
+
+    def run(make):
+        df = make().select("event_id", "label")
+        rows = sorted(tuple(r) for r in df.collect())
+        return rows, df._jdf.queryExecution().executedPlan().toString()
+
+    for how, make in joins.items():
+        s.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
+        got, plan = run(make)
+        assert "SortMergeJoin(skew=true)" in plan, (how, plan)
+        s.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
+        want, plain_plan = run(make)
+        assert "skew=true" not in plain_plan, how
+        assert got == want and len(got) > int(n * 0.4) // 2, how
 
 
 def test_hot_keys_detector(spark):
@@ -606,32 +429,6 @@ def test_hot_cold_split_large_list_uses_join_not_literals(spark):
     assert hot_j.count() + cold_j.count() == df.count()
 
 
-def test_salted_join_large_hot_list_matches_plain(spark):
-    """salted_join through the join-based split (>100 hot keys) still
-    equals the plain join, including NULL fact keys under a left join."""
-    facts = _hot_key_events(spark, n=20_000, hot_share=0.0).select(
-        F.when(F.col("event_id") % 997 == 0, F.lit(None))
-        .otherwise(F.col("mid")).alias("mid"),
-        "event_id",
-    )
-    build = spark.createDataFrame(
-        [(f"m{i}", f"dev{i}") for i in range(200)], ["dev_mid", "label"]
-    )
-    hot_vals = [f"m{i}" for i in range(150)]
-    out = salted_join(
-        facts, build, "mid", "dev_mid", buckets=4, how="left",
-        hot_keys=hot_vals,
-    )
-    plain = facts.join(
-        build, facts["mid"] == build["dev_mid"], "left"
-    ).drop("dev_mid")
-    assert sorted(
-        (r["event_id"], r["mid"], r["label"]) for r in out.collect()
-    ) == sorted(
-        (r["event_id"], r["mid"], r["label"]) for r in plain.collect()
-    )
-
-
 def test_hot_keys_single_action(spark, monkeypatch):
     """VERDICT r7 #5: hot_keys runs its aggregate ONCE — a single collect
     with the total broadcast back, not a first() for the total plus a
@@ -663,80 +460,3 @@ def test_hot_keys_single_action(spark, monkeypatch):
     empty = ev.filter(F.lit(False))
     assert hot_keys(empty, "mid", share_threshold=0.1) == []
     assert actions == ["collect"]
-
-
-def test_interval_join_left_side_skew_guard(spark):
-    """ADVICE r7: a hot key concentrated on the LEFT side now fires the
-    mirror branch (left salted, right hot rows replicated) from the same
-    single profile job, reports its route, and equals the plain answer."""
-    from gmall_flink_yb_spark.operators.order_wide import interval_join
-
-    left = _hot_key_events(spark, n=20_000, hot_share=0.4).select(
-        F.col("mid").alias("lk"), F.col("ts").alias("lts"),
-        F.col("event_id"),
-    )
-    # near-flat right: 'hot' holds 2% (< 1/32), the rest 200 keys ~0.5%
-    # each — nothing right-hot, but the left-hot key DOES match rows
-    right = _hot_key_events(spark, n=20_000, hot_share=0.02).select(
-        F.col("mid").alias("rk"), F.col("ts").alias("rts")
-    )
-    j = interval_join(
-        left, right, "lk", "rk", "lts", "rts",
-        lower_seconds=0.0, upper_seconds=30.0, skew_guard=True,
-        left_salt_on=["event_id"],
-    )
-    assert "left" in j._skew_salted_sides
-    assert "right" not in j._skew_salted_sides
-    assert j._skew_salt_buckets == j._skew_salted_sides["left"]
-    plain = interval_join(
-        left, right, "lk", "rk", "lts", "rts",
-        lower_seconds=0.0, upper_seconds=30.0,
-    )
-    assert j.count() == plain.count()
-    assert "_salt_l" not in j.columns and "_salt_r" not in j.columns
-
-
-def test_interval_join_both_sides_hot_salts_bigger_side(spark):
-    """ADVICE r8: a key hot on BOTH sides routes to the branch that salts
-    the side carrying MORE rows (replication = #smaller-side-rows x
-    buckets, the minimum a salted plan can pay). Left-dominant 'hot' must
-    fire the LEFT branch — the pre-fix routing sent every both-hot key
-    right, replicating the dominant left side. Mirror case symmetric, and
-    both equal the plain answer."""
-    from gmall_flink_yb_spark.operators.order_wide import interval_join
-
-    big = _hot_key_events(spark, n=40_000, hot_share=0.4).select(
-        F.col("mid").alias("bk"), F.col("ts").alias("bts"),
-        F.col("event_id"),
-    )
-    small = _hot_key_events(spark, n=4_000, hot_share=0.4).select(
-        F.col("mid").alias("sk"), F.col("ts").alias("sts"),
-        F.col("event_id").alias("s_event_id"),
-    )
-
-    j = interval_join(
-        big, small, "bk", "sk", "bts", "sts",
-        lower_seconds=0.0, upper_seconds=30.0, skew_guard=True,
-        left_salt_on=["event_id"], salt_on=["s_event_id"],
-    )
-    assert "left" in j._skew_salted_sides, j._skew_salted_sides
-    assert "right" not in j._skew_salted_sides
-
-    m = interval_join(
-        small, big, "sk", "bk", "sts", "bts",
-        lower_seconds=0.0, upper_seconds=30.0, skew_guard=True,
-        left_salt_on=["s_event_id"], salt_on=["event_id"],
-    )
-    assert "right" in m._skew_salted_sides, m._skew_salted_sides
-    assert "left" not in m._skew_salted_sides
-
-    plain = interval_join(
-        big, small, "bk", "sk", "bts", "sts",
-        lower_seconds=0.0, upper_seconds=30.0,
-    )
-    assert j.count() == plain.count()
-    plain_m = interval_join(
-        small, big, "sk", "bk", "sts", "bts",
-        lower_seconds=0.0, upper_seconds=30.0,
-    )
-    assert m.count() == plain_m.count()

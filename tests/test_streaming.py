@@ -636,6 +636,144 @@ def test_cdc_sink_releases_cache_on_failed_upsert(spark, tmp_path, monkeypatch):
     assert json.loads(dim.first()["payload"])["name"] == "ann"
 
 
+_CDC_CRASH_BATCHES = [
+    [
+        Row(database="gmall", tableName="order_info", before=None,
+            after={"id": "1", "amount": "10"}, type="insert"),
+        Row(database="gmall", tableName="user_info", before=None,
+            after={"id": "7", "name": "ann"}, type="insert"),
+        Row(database="gmall", tableName="base_province", before=None,
+            after={"id": "1", "name": "north"}, type="insert"),
+    ],
+    [
+        Row(database="gmall", tableName="order_info", before=None,
+            after={"id": "2", "amount": "20"}, type="insert"),
+        Row(database="gmall", tableName="user_info", before=None,
+            after={"id": "7", "name": "bob"}, type="update"),
+        Row(database="gmall", tableName="user_info", before=None,
+            after={"id": "8", "name": "cy"}, type="insert"),
+        Row(database="gmall", tableName="base_province", before=None,
+            after={"id": "1", "name": "south"}, type="update"),
+    ],
+]
+_CDC_CRASH_DIMS = ("dim_user_info", "dim_base_province")
+# crash point -> the pipelines function that raises instead of running on
+# its first call in batch 1 (batch 0 calls each once per dim)
+_CDC_CRASH_POINTS = {
+    "after_kafka_out": "upsert_dim_parquet",
+    "after_gen_rename": "_write_dim_manifest",
+    "after_manifest": "_vacuum_dim",
+}
+
+
+def _run_cdc_sink(spark, src, out):
+    from gmall_flink_yb_spark.streaming import pipelines
+
+    cfg = spark.createDataFrame(
+        [
+            Row(sourceTable="order_info", operateType="insert",
+                sinkType="kafka", sinkTable="dwd_order_info",
+                sinkColumns="id,amount", sinkPk="id", sinkExtend=None),
+        ]
+        + [
+            Row(sourceTable=tbl[4:], operateType=op, sinkType="hbase",
+                sinkTable=tbl, sinkColumns="id,name", sinkPk="id",
+                sinkExtend=None)
+            for tbl in _CDC_CRASH_DIMS
+            for op in ("insert", "update")
+        ],
+        TABLE_PROCESS_SCHEMA,
+    )
+    stream = read_file_stream(
+        spark, src, CDC_ENVELOPE_SCHEMA, max_files_per_trigger=1,
+        glob="*.parquet",
+    )
+    return pipelines.start_cdc_routing(
+        stream, lambda: cfg, out, os.path.join(out, "_ckpt")
+    )
+
+
+def _cdc_sink_rows(spark, out):
+    from gmall_flink_yb_spark.streaming.pipelines import read_dim_parquet
+
+    kafka = sorted(
+        tuple(r) for r in spark.read.parquet(
+            os.path.join(out, "kafka_out")
+        ).collect()
+    )
+    dims = {
+        tbl: sorted(
+            tuple(r) for r in read_dim_parquet(
+                spark, os.path.join(out, f"dim_{tbl}")
+            ).collect()
+        )
+        for tbl in _CDC_CRASH_DIMS
+    }
+    return kafka, dims
+
+
+@pytest.fixture(scope="module")
+def uninterrupted_cdc(spark, tmp_path_factory):
+    """(staged CDC source dir, kafka_out rows, dim rows) of a run with no
+    crash."""
+    root = tmp_path_factory.mktemp("cdc_crash")
+    src = str(root / "src")
+    os.makedirs(src)
+    for i, rows in enumerate(_CDC_CRASH_BATCHES):
+        stage = str(root / f"stage{i}")
+        spark.createDataFrame(rows, CDC_ENVELOPE_SCHEMA).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(stage)
+        part = [f for f in os.listdir(stage) if f.endswith(".parquet")]
+        dst = os.path.join(src, f"{i:02d}.parquet")
+        os.rename(os.path.join(stage, part[0]), dst)
+        os.utime(dst, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
+    out = str(root / "out")
+    q = _run_cdc_sink(spark, src, out)
+    q.awaitTermination(180)
+    assert q.exception() is None
+    return (src, *_cdc_sink_rows(spark, out))
+
+
+@pytest.mark.parametrize("point", list(_CDC_CRASH_POINTS))
+def test_cdc_sink_replays_crash_at_every_write_point(
+    spark, tmp_path, monkeypatch, uninterrupted_cdc, point
+):
+    """Exactly-once under replay for the CDC sink: kill batch 1 after its
+    kafka_out write, after a dim upsert renamed its generation dir into
+    place but before the manifest, or after the manifest but before the
+    vacuum; restart on the same checkpoint, and kafka_out and every dim
+    read equal an uninterrupted run's. The middle case leaves an orphan
+    ``gen=`` dir that the replayed upsert must skip, not collide with."""
+    from pyspark.errors import StreamingQueryException
+
+    from gmall_flink_yb_spark.streaming import pipelines
+
+    src, want_kafka, want_dims = uninterrupted_cdc
+    name = _CDC_CRASH_POINTS[point]
+    real = getattr(pipelines, name)
+    calls = []
+
+    def flaky(*args, **kwargs):
+        calls.append(name)
+        if len(calls) == len(_CDC_CRASH_DIMS) + 1:
+            raise RuntimeError(f"injected crash {point}")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(pipelines, name, flaky)
+    out = str(tmp_path / "out")
+    q = _run_cdc_sink(spark, src, out)
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        q.awaitTermination(180)
+    monkeypatch.setattr(pipelines, name, real)
+    q = _run_cdc_sink(spark, src, out)  # same checkpoint
+    q.awaitTermination(180)
+    assert q.exception() is None
+    kafka, dims = _cdc_sink_rows(spark, out)
+    assert kafka == want_kafka
+    assert dims == want_dims
+
+
 def test_ensure_sink_table_catalog_ddl(spark):
     """K4 dynamic DDL (TableProcessFunction.java:116-176): a config row
     creates a catalog table with sinkColumns in CSV order, pk default 'id'
@@ -1476,33 +1614,42 @@ def test_dim_upsert_vacuums_stale_generations(spark, tmp_path):
     } == {"c"}
 
 
-def test_dim_upsert_migrates_legacy_flat_layout(spark, tmp_path):
-    """A dim written before bucketing (flat parquet dir) is migrated to
-    the manifest+generation layout on its first upsert, keeping every
-    row and clearing the superseded flat files."""
-    from pyspark.sql import Row
+def test_dim_upsert_skips_orphan_generation(spark, tmp_path, monkeypatch):
+    """An upsert that dies between its gen-dir rename and its manifest
+    leaves an orphan ``gen=`` dir. The next upsert numbers past it,
+    vacuums it, and keeps the previous manifest by count: the reader
+    grace window is one manifest however the numbers skip."""
+    from gmall_flink_yb_spark.streaming import pipelines
 
-    from gmall_flink_yb_spark.streaming.pipelines import (
-        read_dim_parquet,
-        upsert_dim_parquet,
-    )
+    path = str(tmp_path / "dim_orphan")
 
-    path = str(tmp_path / "dim_legacy")
-    spark.createDataFrame(
-        [Row(id="1", payload="a"), Row(id="2", payload="b")]
-    ).write.parquet(path)
-    upsert_dim_parquet(
-        spark,
-        spark.createDataFrame([Row(id="2", payload="b2")]),
-        path,
-        "id",
-        n_buckets=4,
-    )
-    assert any(d.startswith("gen=") for d in os.listdir(path))
-    assert any(d.startswith("_dim_manifest-") for d in os.listdir(path))
-    assert not any(f.endswith(".parquet") for f in os.listdir(path))
-    got = {r["id"]: r["payload"] for r in read_dim_parquet(spark, path).collect()}
-    assert got == {"1": "a", "2": "b2"}
+    def upsert(payload):
+        pipelines.upsert_dim_parquet(
+            spark, spark.createDataFrame([Row(id="1", payload=payload)]),
+            path, "id", n_buckets=4,
+        )
+
+    upsert("a")
+    real = pipelines._write_dim_manifest
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("injected crash before manifest")
+
+    monkeypatch.setattr(pipelines, "_write_dim_manifest", crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        upsert("b")
+    monkeypatch.setattr(pipelines, "_write_dim_manifest", real)
+    assert sorted(d for d in os.listdir(path) if d.startswith("gen=")) == [
+        "gen=1", "gen=2",
+    ]
+    upsert("c")
+    assert sorted(d for d in os.listdir(path) if d.startswith("gen=")) == [
+        "gen=1", "gen=3",
+    ]
+    assert pipelines._dim_manifest_gens(spark, path) == [1, 3]
+    assert [r["payload"] for r in pipelines.read_dim_parquet(
+        spark, path
+    ).collect()] == ["c"]
 
 
 def _stage_doc_batches(spark, tmp_path, name, batches, schema=None):

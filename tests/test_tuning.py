@@ -288,3 +288,24 @@ def test_scan_only_plan_reads_nodes_not_text(spark, tmp_path):
         spread = tuning.spread_file_scan(tricky)
         assert spread.rdd.getNumPartitions() == target
     assert not tuning._scan_only_plan(bdf.join(bdf.select("id"), "id"))
+
+
+def test_file_backed_rows_reads_nodes_not_text(spark, tmp_path):
+    """``file_backed_rows`` refuses a plan by its nodes, not its text: a
+    parquet table with a ``JoinDate`` column (its relation line prints
+    ``Join``) gives its footer count, while a real join and an
+    ``explode`` still give None."""
+    from gmall_flink_yb_spark import tuning
+
+    path = str(tmp_path / "members")
+    spark.range(1_000).select(
+        F.col("id"),
+        F.date_add(F.lit("2024-01-01").cast("date"), (F.col("id") % 90)
+                   .cast("int")).alias("JoinDate"),
+        F.array(F.col("id"), F.col("id") + 1).alias("arr"),
+    ).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert tuning.file_backed_rows(df) == 1_000
+    assert tuning.file_backed_rows(df.select("id", "JoinDate")) == 1_000
+    assert tuning.file_backed_rows(df.join(df.select("id"), "id")) is None
+    assert tuning.file_backed_rows(df.select(F.explode("arr"))) is None
