@@ -26,6 +26,20 @@ so a repeated query finds its classes instead of recompiling them. Each
 table's schema is inferred once per file version
 (``sources.readers.read_table``), so building a plan over an unchanged
 file launches no Spark job.
+
+A streaming commit forks no process for a file it renames. Every
+micro-batch writes an offsets file, a commit file, a source-log file and
+one state delta (plus its checksum sidecar) per store and partition, each
+as a temp file renamed into place. Spark's default checkpoint manager
+renames through Hadoop's ``FileContext``, which on the local filesystem
+resolves symlinks by forking ``readlink`` four times per file when Hadoop
+runs without ``libhadoop`` (pip PySpark ships none). The session writes
+checkpoints through ``CHECKPOINT_FILE_MANAGER`` (Hadoop ``FileSystem``)
+instead. A no-overwrite write still fails when the file exists, which the
+offsets, commit and metadata logs rely on. An overwrite write is
+best-effort, as the manager contract allows: on ``file:`` the rename onto
+an existing file fails, so the existing file is kept and the temp file is
+left behind, where ``FileContext`` would have replaced it.
 """
 
 from __future__ import annotations
@@ -53,6 +67,21 @@ SHUFFLE_ADVISORY_PARTITION_BYTES = 16 << 20
 # first codegen, so a vanilla driver session (``__spark_entry__``) keeps
 # Spark's default: it is only slower there, never wrong.
 CODEGEN_CACHE_ENTRIES = 2000
+# Checkpoint and state-store files are written through Hadoop FileSystem,
+# not Spark's default FileContext manager. Without libhadoop a FileContext
+# rename forks `readlink` four times per file (getFileLinkStatus ->
+# FileUtil.readLink): 2 552 of the 3 725 processes the driver JVM started
+# in one 29 s dw_stream window, and 0 of 1 173 with this manager. Over 10
+# alternating dw_stream pairs (4 cores) freshness p50 fell 15.6 -> 12.4 s;
+# in a traced pair state.dwm_order_wide.commit_s fell 5.8 -> 1.2 s with
+# the same jobs, stages and tasks. No-overwrite writes still fail if the
+# file exists; overwrite writes are best-effort (the existing file is
+# kept). The session's Hadoop conf carries the class to the driver-side
+# logs and to the executor-side state stores alike.
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 # Streaming state backends (VERDICT r6 #3). The reference carries a
 # commented-out FsStateBackend/RocksDB block in every app
@@ -129,6 +158,10 @@ def get_spark(
         .config(
             "spark.sql.adaptive.autoBroadcastJoinThreshold",
             str(64 * 1024 * 1024),
+        )
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            CHECKPOINT_FILE_MANAGER,
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # 128 MB splits: good parquet scan granularity at 100 TB

@@ -1,6 +1,7 @@
 """The mechanical cross-round comparison rule (tools/bench_compare.py):
-totals compare only when every canary leg's band overlaps; otherwise
-per-query fallback with movers flagged."""
+totals compare only when every canary leg's band overlaps and the median
+per-query ratio stays inside the band; otherwise per-query fallback with
+movers flagged."""
 
 from __future__ import annotations
 
@@ -71,3 +72,19 @@ def test_added_and_removed_queries_are_listed_not_counted():
     assert by_q["gone"]["new"] is None and by_q["gone"]["ratio"] is None
     assert by_q["fresh"]["old"] is None and by_q["fresh"]["ratio"] is None
     assert set(by_q) == {"gone", "fresh"}
+
+
+def test_moved_window_blocks_totals_despite_overlapping_canaries():
+    """Canaries overlap, yet the queries the change does not touch all ran
+    at 0.35-0.42x: the window moved, so the totals are not comparable."""
+    old_q = {"touched": 2.0, "q6": 1.0, "hist": 1.0, "mm": 1.0, "kw": 1.0}
+    new_q = {"touched": 1.0, "q6": 0.35, "hist": 0.39, "mm": 0.40,
+             "kw": 0.42}
+    old = _artifact(6.0, old_q, 5.5, 8.0, 1.3)
+    new = _artifact(2.56, new_q, 5.4, 7.6, 1.28)
+    r = compare(old, new)
+    assert r["comparable"] is False
+    assert "window moved" in r["reason"]
+    assert "ratio" not in r
+    assert r["median_query_ratio"] == 0.4
+    assert [m["query"] for m in r["movers"]] == ["hist", "kw", "mm", "q6"]

@@ -5,7 +5,8 @@ helpers.
 starts at a fixed initial count and coalesces from the bytes its map
 side wrote, persisted plans included. No engine code writes
 ``spark.sql.shuffle.partitions``. Its codegen cache holds every class a
-serving mix generates, so a warm repeat compiles nothing."""
+serving mix generates, so a warm repeat compiles nothing, and its
+streaming checkpoints are written through Hadoop ``FileSystem``."""
 
 from __future__ import annotations
 
@@ -20,6 +21,7 @@ from gmall_flink_yb_spark.functions.cacheutil import release_cache
 from gmall_flink_yb_spark.plans.inspect import codegen_compiles
 from gmall_flink_yb_spark.queries import QUERIES
 from gmall_flink_yb_spark.session import (
+    CHECKPOINT_FILE_MANAGER,
     CODEGEN_CACHE_ENTRIES,
     SHUFFLE_ADVISORY_PARTITION_BYTES,
     SHUFFLE_INITIAL_PARTITIONS,
@@ -40,6 +42,31 @@ def test_get_spark_sets_runtime_sizing_confs(spark):
         spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
         == "true"
     )
+
+
+def test_checkpoints_write_through_filesystem_manager(spark, tmp_path):
+    """Streaming checkpoints go through Hadoop FileSystem, whose local
+    rename forks no process, and a no-overwrite write still fails when
+    its file exists: the offsets and commit logs rely on that."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark._jvm
+    managers = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    factory = getattr(getattr(managers, "CheckpointFileManager$"), "MODULE$")
+    fm = factory.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert fm.getClass().getName() == CHECKPOINT_FILE_MANAGER
+    path = jvm.org.apache.hadoop.fs.Path(str(tmp_path / "0"))
+    out = fm.createAtomic(path, False)
+    out.write(b"first")
+    out.close()
+    out = fm.createAtomic(path, False)
+    out.write(b"second")
+    with pytest.raises(Py4JJavaError, match="FileAlreadyExists"):
+        out.close()
+    assert (tmp_path / "0").read_bytes() == b"first"
 
 
 def test_get_spark_sets_codegen_cache_entries(spark):

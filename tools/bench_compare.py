@@ -8,12 +8,21 @@ they do not — or when an artifact predates the canary — totals carry no
 signal and the comparison falls back to per-query values, flagging only
 large movers for adjudication against per-query history.
 
+Overlapping canaries are necessary, not sufficient: two sf0.1 artifacts
+taken 9 minutes apart had overlapping bands on every leg while queries
+neither side's code touched ran at 0.35-0.42x. So the median per-query
+new/old ratio over the queries both artifacts hold is a second check: a
+code change moves some queries, a moved window moves the typical one.
+When that median falls outside 1 +/- ``BAND_MARGIN``, the totals are not
+comparable either.
+
 Usage:
   python tools/bench_compare.py OLD.json NEW.json [--mover-threshold 2.0]
 
 Prints one JSON line:
   {"comparable": bool, "reason": str,
    "total_old": s, "total_new": s, "ratio": r,     # ratio only if comparable
+   "median_query_ratio": r,                        # null if no common query
    "movers": [{"query": q, "old": s, "new": s, "ratio": r}, ...]}
 
 ``movers`` lists queries whose new/old ratio exceeds the threshold in
@@ -26,6 +35,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import statistics
 
 # A leg may drift a little between two genuinely comparable windows;
 # intervals are widened by this relative margin before the overlap test
@@ -67,10 +77,19 @@ def _overlap(a: tuple[float, float], b: tuple[float, float]) -> bool:
     return alo <= bhi and blo <= ahi
 
 
+def _median_query_ratio(qo: dict, qn: dict) -> float | None:
+    """Median new/old wall ratio over the queries both artifacts timed."""
+    ratios = [qn[q] / qo[q] for q in set(qo) & set(qn) if qo[q] > 0]
+    return round(statistics.median(ratios), 3) if ratios else None
+
+
 def compare(old: dict, new: dict, mover_threshold: float = 2.0) -> dict:
+    qo, qn = old.get("queries", {}), new.get("queries", {})
+    median = _median_query_ratio(qo, qn)
     result: dict = {
         "total_old": old.get("value"),
         "total_new": new.get("value"),
+        "median_query_ratio": median,
     }
     bands_old, bands_new = _leg_intervals(old), _leg_intervals(new)
     if bands_old is None or bands_new is None:
@@ -91,14 +110,23 @@ def compare(old: dict, new: dict, mover_threshold: float = 2.0) -> dict:
                 + " — totals measure the environment, not the code; "
                 "per-query fallback"
             )
+        elif median is not None and abs(median - 1) > BAND_MARGIN:
+            result["comparable"] = False
+            result["reason"] = (
+                "window moved: canary bands overlap but the median "
+                f"query ran at {median}x — totals measure the window, "
+                "not the code; per-query fallback"
+            )
         else:
             result["comparable"] = True
-            result["reason"] = "canary bands overlap on every leg"
+            result["reason"] = (
+                "canary bands overlap on every leg and the median query "
+                "ratio is inside the band"
+            )
             if result["total_old"]:
                 result["ratio"] = round(
                     result["total_new"] / result["total_old"], 3
                 )
-    qo, qn = old.get("queries", {}), new.get("queries", {})
     movers = []
     for q in sorted(set(qo) | set(qn)):
         a, b = qo.get(q), qn.get(q)
