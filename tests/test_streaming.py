@@ -774,6 +774,128 @@ def test_cdc_sink_replays_crash_at_every_write_point(
     assert dims == want_dims
 
 
+_FANOUT_TABLES = ("dwd_start_log", "dwd_page_log", "dwd_display_log")
+# crash point -> batch-1 part writes (start, page, display in that order)
+# that complete before the injected raise
+_FANOUT_CRASH_POINTS = {
+    "before_start": 0,
+    "before_page": 1,
+    "before_display": 2,
+    "after_display": 3,
+}
+
+
+def _stage_log_file(staged: str, src: str, i: int) -> None:
+    """Move staged log file ``i`` into the source dir, 10 s apart in
+    mtime so it is micro-batch ``i``."""
+    dst = os.path.join(src, f"{i:02d}.json")
+    os.rename(os.path.join(staged, f"{i:02d}.json"), dst)
+    os.utime(dst, (1_700_000_000 + i * 10,) * 2)
+
+
+def _stage_log_files(root, n: int) -> str:
+    """Write ``n`` log files, each one start event and one page event
+    with two displays, into ``root/staged``."""
+    staged = str(root / "staged")
+    os.makedirs(staged)
+    for i in range(n):
+        events = [
+            {"common": {"mid": f"m{i}", "is_new": "1"},
+             "start": {"entry": "icon"}, "ts": 1000 * i},
+            {"common": {"mid": f"m{i}", "is_new": "0"},
+             "page": {"page_id": f"p{i}", "last_page_id": None},
+             "displays": [
+                 {"item": f"sku{i}{k}", "item_type": "sku_id", "order": k}
+                 for k in (1, 2)
+             ],
+             "ts": 1000 * i + 500},
+        ]
+        with open(os.path.join(staged, f"{i:02d}.json"), "w") as f:
+            f.writelines(json.dumps(e) + "\n" for e in events)
+    return staged
+
+
+def _run_log_fanout(spark, src, out):
+    raw = (
+        spark.readStream.schema("value string").format("text")
+        .option("maxFilesPerTrigger", 1).load(src)
+    )
+    clean, _dirty = parse_log_stream(raw)
+    return start_log_split_fanout(clean, out, os.path.join(out, "_ckpt"))
+
+
+def _fanout_rows(spark, out) -> dict:
+    return {
+        t: sorted(
+            json.dumps(r.asDict(recursive=True), sort_keys=True, default=str)
+            for r in spark.read.parquet(os.path.join(out, t)).collect()
+        )
+        for t in _FANOUT_TABLES
+    }
+
+
+@pytest.fixture(scope="module")
+def uninterrupted_fanout(spark, tmp_path_factory):
+    """The three DWD tables of a three-batch log fan-out with no crash."""
+    root = tmp_path_factory.mktemp("fanout_crash")
+    staged = _stage_log_files(root, 3)
+    src = str(root / "src")
+    os.makedirs(src)
+    for i in range(3):
+        _stage_log_file(staged, src, i)
+    out = str(root / "out")
+    q = _run_log_fanout(spark, src, out)
+    q.awaitTermination(180)
+    assert q.exception() is None
+    return _fanout_rows(spark, out)
+
+
+@pytest.mark.parametrize("point", list(_FANOUT_CRASH_POINTS))
+def test_log_fanout_replays_crash_at_every_write_point(
+    spark, tmp_path, monkeypatch, uninterrupted_fanout, point
+):
+    """Exactly-once under replay for the log fan-out sink: kill batch 1
+    before its first part write, between two of them, or after the last;
+    restart on the same checkpoint with a third input file, and each DWD
+    table equals an uninterrupted run's. The replayed batch overwrites
+    its ``batch_id=1`` dirs, so a half-written batch leaves no rows
+    behind and a fully written one is not appended twice."""
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    staged = _stage_log_files(tmp_path, 3)
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    for i in range(2):
+        _stage_log_file(staged, src, i)
+    crash_after = _FANOUT_CRASH_POINTS[point]
+    real = DataFrameWriter.parquet
+    done = []
+
+    def flaky(self, path, *args, **kwargs):
+        if "batch_id=1" not in path:
+            return real(self, path, *args, **kwargs)
+        if len(done) == crash_after:
+            raise RuntimeError(f"injected crash {point}")
+        real(self, path, *args, **kwargs)
+        done.append(path)
+        if len(done) == crash_after:
+            raise RuntimeError(f"injected crash {point}")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", flaky)
+    out = str(tmp_path / "out")
+    q = _run_log_fanout(spark, src, out)
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        q.awaitTermination(180)
+    assert len(done) == crash_after
+    monkeypatch.setattr(DataFrameWriter, "parquet", real)
+    _stage_log_file(staged, src, 2)
+    q = _run_log_fanout(spark, src, out)  # same checkpoint
+    q.awaitTermination(180)
+    assert q.exception() is None
+    assert _fanout_rows(spark, out) == uninterrupted_fanout
+
+
 _INFO_SCHEMA = StructType([
     StructField("id", LongType()),
     StructField("user_id", LongType()),

@@ -5,8 +5,9 @@ helpers.
 starts at a fixed initial count and coalesces from the bytes its map
 side wrote, persisted plans included. No engine code writes
 ``spark.sql.shuffle.partitions``. Its codegen cache holds every class a
-serving mix generates, so a warm repeat compiles nothing, and its
-streaming checkpoints are written through Hadoop ``FileSystem``."""
+serving mix generates, so a warm repeat compiles nothing, its
+streaming checkpoints are written through Hadoop ``FileSystem``, and its
+Python workers parse an unchanged archive's directory once."""
 
 from __future__ import annotations
 
@@ -23,6 +24,7 @@ from gmall_flink_yb_spark.queries import QUERIES
 from gmall_flink_yb_spark.session import (
     CHECKPOINT_FILE_MANAGER,
     CODEGEN_CACHE_ENTRIES,
+    PYTHON_DAEMON_MODULE,
     SHUFFLE_ADVISORY_PARTITION_BYTES,
     SHUFFLE_INITIAL_PARTITIONS,
 )
@@ -73,6 +75,42 @@ def test_get_spark_sets_codegen_cache_entries(spark):
     assert int(spark.conf.get("spark.sql.codegen.cache.maxEntries")) == (
         CODEGEN_CACHE_ENTRIES
     )
+
+
+def test_python_tasks_parse_no_archive_directory(spark):
+    """Workers start from the engine daemon, so the
+    ``importlib.invalidate_caches()`` each task runs before its UDF finds
+    every zip on the worker's path unchanged and parses none of them
+    (PySpark's daemon re-parses pyspark.zip through 14-18 zipimporters
+    per task)."""
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.python.daemon.module") == PYTHON_DAEMON_MODULE
+
+    def probe(batches):
+        import zipimport
+
+        import pandas as pd
+
+        from gmall_flink_yb_spark import pydaemon
+
+        for _ in batches:
+            pass
+        yield pd.DataFrame({
+            "memo": [zipimport._read_directory is pydaemon._read_directory],
+            "parses": [pydaemon.parses],
+        })
+
+    def run():
+        return spark.range(64, numPartitions=4).mapInPandas(
+            probe, "memo boolean, parses long"
+        ).collect()
+
+    run()  # warm: fork the workers
+    rows = run()
+    assert len(rows) == 4
+    assert all(r.memo for r in rows)
+    # parses counts every directory the worker read since it was forked
+    assert [r.parses for r in rows] == [0, 0, 0, 0]
 
 
 def test_warm_serving_pass_reuses_compiled_classes(spark):

@@ -25,8 +25,14 @@ heap per 1M keys per executor and switch to the RocksDB state store
 (``spark.sql.streaming.stateStore.providerClass=...RocksDBStateStoreProvider``)
 once per-executor state exceeds a few GB — RocksDB spills to local SSD
 and bounds heap at the block-cache size. The OPERATOR cost is linear
-(one python-group call per key per batch); it's the store residency that
-sets the knee.
+(one python-group call per key per batch) on top of a fixed cost per
+Python task; it's the store residency that sets the knee. Part of that
+fixed cost was PySpark's per-task ``importlib.invalidate_caches()``
+re-parsing pyspark.zip's directory (115-120 ms of one core per task on
+a 4-core box). ``get_spark`` sessions start their workers from the
+engine daemon (``gmall_flink_yb_spark/pydaemon.py``), which parses an
+unchanged archive once, so what is left per task is the worker round
+trip and the Arrow batches.
 
 Usage: python tools/bench_state.py [--keys 100000,1000000,10000000]
        [--ops isnew,bounce] [--out /tmp/spark_graft_state]
